@@ -1,7 +1,8 @@
 package graft.weather
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Facade over the weather pipeline — the engine-native equivalent of the
   * reference's 11 FastAPI endpoints (SURVEY §2.12, main.py): runEtl ≙
@@ -18,20 +19,32 @@ class WeatherEngine(spark: SparkSession, tablesRoot: String) {
 
   /** Run one ETL batch over already-flattened records.
     * `clock` pins batch identity for determinism (tests inject a fixed one;
-    * production passes current_timestamp()).
+    * production passes current_timestamp()). It is evaluated exactly once,
+    * on the driver over a one-row local relation (no job runs), and that
+    * one instant stamps every sink: the CSV directory name, the raw,
+    * snapshot and batch-log rows, and the stats document — so a batch that
+    * crosses a second boundary still carries one batch id.
+    *
+    * Returns the batch's stats document as a one-row local relation: it is
+    * computed once, appended to the stats table, and reading the returned
+    * frame runs no further job.
     */
   def runEtl(records: DataFrame, clock: org.apache.spark.sql.Column): DataFrame = {
-    val stamped = WeatherTransform.withBatchMetadata(records, clock).cache()
+    val one = spark.createDataFrame(java.util.List.of(Row()), StructType(Nil))
+    val now = one.select(clock.cast("timestamp")).head().get(0)
+    require(now != null, "clock evaluated to null")
+    val at = lit(now)
+    // batch id derives from the injected clock, not the data — an empty
+    // batch still gets a well-formed (zero-count) stats document
+    val batchId = WeatherTransform.withBatchMetadata(one, at).head().getAs[String]("batch_id")
+    val stamped = WeatherTransform.withBatchMetadata(records, at).cache()
     try {
-      // batch id derives from the injected clock, not the data — an empty
-      // batch still gets a well-formed (zero-count) stats document
-      val batchId = spark.range(1)
-        .select(date_format(clock, "yyyyMMdd_HHmmss")).head().getString(0)
       sinks.saveCsv(records, batchId)                       // S3
       sinks.appendRaw(stamped)                              // S4
       sinks.overwriteCurrent(stamped)                       // S5
       sinks.appendBatch(stamped)                            // S6
-      val stats = WeatherStats.fullStatsDoc(stamped, lit(batchId), clock)
+      val doc = WeatherStats.fullStatsDoc(stamped, lit(batchId), at)
+      val stats = spark.createDataFrame(java.util.Arrays.asList(doc.collect(): _*), doc.schema)
       sinks.appendStats(stats)                              // S7
       stats
     } finally stamped.unpersist()
@@ -61,11 +74,12 @@ class WeatherEngine(spark: SparkSession, tablesRoot: String) {
     predicate.map(df.filter).getOrElse(df)
   }
 
-  def listTables(): Seq[String] = sinks.listTables()
+  def listTables(): Seq[String] = sinks.listTables(spark)
 
   // ---- ML endpoints (SURVEY §3.2/§3.3: /train, /predict/temp,
   // /predict/weather, /monitor/eval, /registry/promote) ----
   import graft.ml.WeatherModels
+  import org.apache.spark.ml.PipelineModel
 
   /** /train (main.py:115-121 → training.py:147): scan the raw log,
     * featurize with the fallback ladder, CV + final-fit both models, save
@@ -75,15 +89,23 @@ class WeatherEngine(spark: SparkSession, tablesRoot: String) {
     val raw = sinks.scan(spark, WeatherConfig.rawTable)
     val featured = WeatherModels.featuresWithFallback(raw).cache()
     try {
-      val (regModel, folds) =
-        WeatherModels.crossValidateRegressor(featured, numTrees, nSplits)
+      // the two chains only read `featured`, so they fit side by side;
+      // the saves stay serial, as concurrent appends to the registry
+      // table would share its `_temporary` directory
+      var reg: (PipelineModel, Seq[Map[String, Double]]) = null
+      var clf: (PipelineModel, Map[String, Double]) = null
+      graft.operators.Par.run(
+        () => reg = WeatherModels.crossValidateRegressor(featured, numTrees, nSplits),
+        () => {
+          val m = WeatherModels.classifierPipeline(
+            WeatherModels.featureCols(featured), numTrees).fit(featured)
+          clf = (m, WeatherModels.classificationMetrics(m.transform(featured)))
+        })
+      val (regModel, folds) = reg
       val cvRmse = folds.map(_("rmse")).sum / folds.size
       val v = registry.save(WeatherConfig.tempModelName, regModel, Map("rmse" -> cvRmse))
       registry.logFolds(WeatherConfig.tempModelName, v, folds) // training.py:99-142
-      val feats = WeatherModels.featureCols(featured)
-      val clfModel = WeatherModels.classifierPipeline(feats, numTrees).fit(featured)
-      val clfMetrics = WeatherModels.classificationMetrics(clfModel.transform(featured))
-      registry.save(WeatherConfig.conditionModelName, clfModel, clfMetrics)
+      registry.save(WeatherConfig.conditionModelName, clf._1, clf._2)
       folds
     } finally featured.unpersist()
   }

@@ -40,6 +40,15 @@ class EngineLifecycleSpec extends AnyFunSuite {
     // predictions persisted with pred_type metadata (S11)
     val preds = engine.query("predictions")
     assert(preds.select("pred_type").distinct().count() == 2)
+    // one table, both kinds: each row fills its own kind's column only
+    assert(preds.columns.toSet.contains("pred_temperature") &&
+      preds.columns.toSet.contains("pred_condition"))
+    assert(preds.filter(col("pred_type") === "regression" &&
+      (col("pred_temperature").isNull || col("pred_condition").isNotNull)).count() == 0)
+    assert(preds.filter(col("pred_type") === "classification" &&
+      (col("pred_condition").isNull || col("pred_temperature").isNotNull)).count() == 0)
+    assert(preds.filter(col("pred_type") === "regression").count() == 100)
+    assert(preds.filter(col("pred_type") === "classification").count() == 100)
 
     // /monitor/eval: in-range metrics on recent data
     val m = engine.evaluate(limit = 200)

@@ -101,6 +101,39 @@ class MlSpec extends AnyFunSuite {
     assert(loaded.get.transform(featured).columns.contains("pred_temperature"))
   }
 
+  test("a registry rooted at a file: URI sees its own metadata") {
+    val root = "file:" + java.nio.file.Files.createTempDirectory("graft-uri").toString
+    val reg = new ModelRegistry(spark, root)
+    val feats = WeatherModels.featureCols(featured)
+    val model = WeatherModels.regressorPipeline(feats, numTrees = 2).fit(featured)
+    assert(reg.save("temp_rf", model, Map("rmse" -> 3.0)) == 1)
+    assert(reg.save("temp_rf", model, Map("rmse" -> 2.0)) == 2)
+    assert(reg.load("temp_rf").isDefined)
+    assert(new ModelRegistry(spark, root).load("temp_rf").isDefined) // from disk
+    reg.logFolds("temp_rf", 2, Seq(Map("rmse" -> 2.0)))
+    assert(reg.foldHistory("temp_rf", 2).count() == 1)
+  }
+
+  test("a promotion outranks a save row another process wrote with a larger clock") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-seq").toString
+    val reg = new ModelRegistry(spark, root)
+    val feats = WeatherModels.featureCols(featured)
+    val m1 = WeatherModels.regressorPipeline(feats, numTrees = 2).fit(featured)
+    val m2 = WeatherModels.regressorPipeline(feats, numTrees = 3).fit(featured)
+    assert(reg.save("temp_rf", m1, Map("rmse" -> 2.0)) == 1)
+    // v1's save row as an earlier JVM would have stamped it: its nanoTime
+    // origin may sit far above this JVM's
+    Seq(("temp_rf", 1, "Staging", 2.0, Double.NaN, Long.MaxValue / 2))
+      .toDF("name", "version", "stage", "rmse", "f1", "saved_at")
+      .write.mode("append").parquet(s"$root/_registry")
+    assert(reg.save("temp_rf", m2, Map("rmse" -> 3.0)) == 2)
+    reg.promote("temp_rf", 1)
+    // Production (v1) beats the newer Staging v2, in this and a fresh registry
+    assert(reg.load("temp_rf").map(_.uid).contains(m1.uid))
+    assert(new ModelRegistry(spark, root).load("temp_rf").map(_.uid).contains(m1.uid))
+  }
+
   test("M1+M2: cross-validated regressor produces per-fold metrics") {
     val (_, folds) = WeatherModels.crossValidateRegressor(
       featured, numTrees = 5, nSplits = 3)

@@ -69,6 +69,8 @@ class StreamingSpec extends AnyFunSuite {
         == Set("Paris", "Tokyo"))
       assert(raw.columns.contains("batch_id"))
       assert(sinks.scan(spark, "quarantine").count() == 1) // Bad kept, not dropped
+      // the declared schema reads the all-null evidence row as nulls
+      assert(sinks.scan(spark, "quarantine").filter(col("city").isNull).count() == 1)
       ticks.addData(2L); q.processAllAvailable()
       assert(sinks.scan(spark, "raw_weather_data").count() == 4) // log appends
       // snapshot holds only the newest tick
