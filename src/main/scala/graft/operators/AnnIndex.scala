@@ -50,64 +50,19 @@ object AnnIndex {
   // the index geometry, pinned at init in a `_geometry` sidecar (the
   // CounterLog discipline) so ticks and probes read one tiny file instead
   // of running a distinct-count JOB over the codebook to rediscover m
-  private def geomPath(base: String) =
-    new org.apache.hadoop.fs.Path(base, "_geometry")
-
-  /** Atomic (the CounterLog.writeGeometry discipline): bytes land in a
-    * tmp sidecar and RENAME into place, so a crash mid-write can never
-    * leave a torn `_geometry` that poisons every later read. Re-writes
-    * of an UNCHANGED geometry return without touching the live file
-    * (no delete-then-rename window); a failed rename is tolerated only
-    * when the live file already carries the requested geometry, and
-    * throws otherwise instead of silently leaving the index
-    * geometry-less (judge/advisor r19).
-    */
-  private def writeGeometry(spark: SparkSession, base: String,
-      kv: Seq[(String, Int)]): Unit = {
-    val p = geomPath(base)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    def live: Map[String, Int] =
-      try readGeometry(spark, base) catch { case _: Throwable => Map.empty }
-    if (live == kv.toMap) return // unchanged: no swap, no window
-    val tmp = new org.apache.hadoop.fs.Path(base,
-      s"._geometry.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(kv.map { case (k, v) => s"$k=$v" }.mkString(" ")
-      .getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(p)) fs.delete(p, false) // content CHANGE only (rare)
-    if (!fs.rename(tmp, p)) {
-      val winner = live
-      fs.delete(tmp, false)
-      if (winner != kv.toMap)
-        throw new java.io.IOException(
-          s"geometry swap failed for $p (live=$winner, wanted=${kv.toMap})")
-    }
-  }
-
-  private def readGeometry(spark: SparkSession, base: String): Map[String, Int] = {
-    val p = geomPath(base)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in).mkString
-        finally in.close()
-      s.trim.split("\\s+").map(_.split("=", 2))
-        .collect { case Array(k, v) => k -> v.toInt }.toMap
-    }
-  }
+  private def geometry(spark: SparkSession, base: String): Map[String, Int] =
+    graft.streaming.CounterLog.readGeometry(spark, base).getOrElse(Map.empty)
 
   /** m from the `_geometry` sidecar; falls back to counting the
     * broadcast-sized codebook's distinct sub_ids for stores built before
     * the sidecar existed.
     */
   private def readM(spark: SparkSession, base: String, cb: DataFrame): Int =
-    readGeometry(spark, base).getOrElse("m",
+    geometry(spark, base).getOrElse("m",
       cb.select("sub_id").distinct().count().toInt)
 
   private def isResidual(spark: SparkSession, base: String): Boolean =
-    readGeometry(spark, base).getOrElse("residual", 0) == 1
+    geometry(spark, base).getOrElse("residual", 0) == 1
 
   /** v − centroid, element-wise in double — the IVFADC residual. */
   private def residualOf(vec: Column, cv: Column): Column =
@@ -179,7 +134,7 @@ object AnnIndex {
       PqOps.pqTrain(trainInput, idCol, vecCol, m, kCodewords, pqIters)
         .coalesce(1).write.mode("overwrite").parquet(codebookDir(base))
     }
-    writeGeometry(spark, base,
+    graft.streaming.CounterLog.writeGeometry(spark, base,
       Seq("m" -> m, "kCells" -> kCells, "kCodewords" -> kCodewords,
         "residual" -> (if (residual) 1 else 0)))
     // postings accrue batch dirs from here on — a stale dir from a prior

@@ -1,18 +1,20 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** ONE definition of the crash-safe directory-swap discipline every
-  * compacted store must follow (judge r18 #1 — the delete+rename swap in
-  * AnnIndex/IngestPipeline/DeltaManifest had no roll-forward, so a crash
-  * between the delete and the rename stranded the complete store in
-  * `.next` while a post-crash writer recreated the dir with only its own
-  * batch and the NEXT compaction destroyed the stranded copy — silent
-  * data loss).
+  * maintained store follows — the only code that renames a store dir or
+  * its `.next`/`.old` siblings. Users: [[AnnIndex]] postings,
+  * [[IngestPipeline]] signatures, [[DeltaManifest]] logs, and the
+  * streaming stores [[graft.streaming.ClusterStream]],
+  * [[graft.streaming.PostingsStream]], [[graft.streaming.ParagraphStream]]
+  * and the counter logs ([[graft.streaming.SketchStream]],
+  * [[graft.streaming.QuantileStream]], [[graft.streaming.DriftStream]],
+  * [[graft.streaming.NgramStream]], [[graft.streaming.UnigramStream]],
+  * [[graft.streaming.GramStream]]).
   *
-  * The [[graft.streaming.PostingsStream]] rename-aside order, hoisted
-  * here so the hardened stores and the postings log share one
-  * implementation instead of three copies:
+  * The rename-aside order:
   *
   *   write complete replacement at `dir.next`
   *   → rename(dir → dir.old)   (the live store is renamed ASIDE, never
@@ -31,6 +33,13 @@ import org.apache.spark.sql.SparkSession
   *     live `dir` is left for the next [[replace]] to delete and
   *     rewrite (readers never look at `.next`).
   *
+  * A rename or delete that fails (throws, or returns false) before the
+  * promotion leaves one of those states, and the failure propagates. The
+  * one tolerated failure is a lost promote race: a concurrent reader's
+  * [[repair]] may promote `dir.next` first, after which this side's
+  * rename finds no source — that is success when `dir` exists and
+  * `dir.next` is gone.
+  *
   * CONTRACT: every read AND write path of a store compacted through
   * [[replace]] must call [[repair]] before touching the directory. The
   * repair-first rule is what closes the fragment-authoritative window:
@@ -41,19 +50,32 @@ import org.apache.spark.sql.SparkSession
 object SwapStore {
 
   private def fsOf(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   def repair(spark: SparkSession, dir: String): Unit =
     repair(fsOf(spark, dir), dir)
 
-  def repair(fs: org.apache.hadoop.fs.FileSystem, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val next = new org.apache.hadoop.fs.Path(dir + ".next")
-    val old = new org.apache.hadoop.fs.Path(dir + ".old")
-    if (!fs.exists(p) && fs.exists(next))
-      require(fs.rename(next, p), s"swap repair failed: $next -> $p")
+  def repair(fs: FileSystem, dir: String): Unit = {
+    val p = new Path(dir)
+    val old = new Path(dir + ".old")
+    if (!fs.exists(p) && fs.exists(new Path(dir + ".next")))
+      promote(fs, dir, "swap repair")
     if (fs.exists(p) && fs.exists(old)) fs.delete(old, true)
+  }
+
+  /** rename(dir.next → dir), tolerating only a lost promote race. A
+    * missing source surfaces as `false` on HDFS and as a
+    * FileNotFoundException on the local filesystem; both are checked
+    * against the same postcondition.
+    */
+  private def promote(fs: FileSystem, dir: String, what: String): Unit = {
+    val p = new Path(dir)
+    val next = new Path(dir + ".next")
+    val moved =
+      try fs.rename(next, p)
+      catch { case _: java.io.FileNotFoundException if !fs.exists(next) => false }
+    require(moved || (fs.exists(p) && !fs.exists(next)),
+      s"$what failed: $next -> $p")
   }
 
   /** Replace `dir` crash-safely: `write` materializes the COMPLETE
@@ -65,18 +87,25 @@ object SwapStore {
   def replace(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
     val fs = fsOf(spark, dir)
     repair(fs, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val next = new org.apache.hadoop.fs.Path(dir + ".next")
-    val old = new org.apache.hadoop.fs.Path(dir + ".old")
-    if (fs.exists(next)) fs.delete(next, true)
+    val p = new Path(dir)
+    val next = new Path(dir + ".next")
+    val old = new Path(dir + ".old")
+    // a stale `.next` would leak its partitions into this replacement,
+    // and a stale `.old` would make the rename below nest `dir` inside it
+    drop(fs, next)
     write(next.toString)
-    if (fs.exists(old)) fs.delete(old, true)
+    drop(fs, old)
     if (fs.exists(p))
       require(fs.rename(p, old), s"compaction swap failed: $p -> $old")
-    require(fs.rename(next, p), s"compaction swap failed: $next -> $p")
+    promote(fs, dir, "compaction swap")
+    // the store is live; a `.old` this fails to delete is a stray that
+    // the next repair drops
     fs.delete(old, true)
     ()
   }
+
+  private def drop(fs: FileSystem, q: Path): Unit =
+    if (fs.exists(q)) require(fs.delete(q, true), s"swap cleanup failed: $q")
 
   /** Remove a store AND its swap-state siblings (`.next` / `.old`) — the
     * reset an explicit rebuild needs: deleting only `dir` would let a
@@ -85,9 +114,6 @@ object SwapStore {
     */
   def reset(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
-    Seq(dir, dir + ".next", dir + ".old").foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    Seq(dir, dir + ".next", dir + ".old").foreach(d => drop(fs, new Path(d)))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.DedupOps
+import graft.operators.{DedupOps, SwapStore}
 
 /** Streaming CLUSTER MAINTENANCE — the incremental twin of the batch
   * connected-components dedup ([[DedupOps.clusterLabels]], x25): keep a
@@ -41,19 +41,16 @@ object ClusterStream {
     * The store swap is CRASH-SAFE, not a bare overwrite (which deletes
     * the old store before the new write commits — a mid-write failure
     * would erase every cluster learned from earlier batches): the new
-    * labeling lands in a sibling `.next` directory, then the old store
-    * is removed and `.next` renamed into place. A crash between those
-    * two steps leaves `.next` complete on disk, and the next invocation
-    * (or reader) ROLLS IT FORWARD before doing anything else — at every
-    * instant at least one complete labeling exists. (Rename is atomic on
-    * HDFS-like stores; on object stores it is copy+delete, still
-    * recoverable because roll-forward re-runs until the store exists.)
+    * labeling is committed through [[graft.operators.SwapStore.replace]],
+    * so at every instant one complete labeling exists, and the next
+    * invocation (or reader) repairs a swap a crash interrupted before
+    * doing anything else.
     */
   def applyBatch(batch: DataFrame, labelsDir: String, maxIter: Int = 30): Unit = {
     val spark = batch.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(labelsDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    rollForward(fs, labelsDir)
+    val store = new org.apache.hadoop.fs.Path(labelsDir)
+    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
+    SwapStore.repair(fs, labelsDir)
     val newEdges = batch.select(col("doc_a"), col("doc_b"))
     if (newEdges.isEmpty) {
       // a pair-less batch must still INITIALIZE a missing store: the
@@ -63,19 +60,13 @@ object ClusterStream {
       // without this, the first tick of a corpus with no near-dups
       // crashed the whole ingest (found by the compactIfNeeded spec).
       // An empty batch over an EXISTING store stays a no-op.
-      val store = new org.apache.hadoop.fs.Path(labelsDir)
-      if (!fs.exists(store)) {
-        val next = new org.apache.hadoop.fs.Path(labelsDir + ".next")
-        if (fs.exists(next)) fs.delete(next, true)
+      if (!fs.exists(store)) SwapStore.replace(spark, labelsDir) { next =>
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
             org.apache.spark.sql.types.StructType.fromDDL(
               "doc_id BIGINT, cluster_id BIGINT"))
-          .write.mode("overwrite").parquet(next.toString)
-        fs.rename(next, store)
+          .write.mode("overwrite").parquet(next)
       }
     } else {
-      val store = new org.apache.hadoop.fs.Path(labelsDir)
-      val next = new org.apache.hadoop.fs.Path(labelsDir + ".next")
       val edges =
         if (!fs.exists(store)) newEdges
         else newEdges.unionByName(spark.read.parquet(labelsDir)
@@ -83,17 +74,15 @@ object ClusterStream {
       // fixed stage dir: the default would mint one UUID dir per batch and
       // only clean at JVM exit — unbounded growth on a continuous stream.
       // The labeling is written ONCE: clusterLabels' own stage handoff is
-      // RENAMED into `.next` instead of being re-written through a second
-      // full parquet pass (write + scan + write → write + two renames);
-      // the crash discipline is unchanged — `.next` only ever holds a
-      // COMPLETE labeling, and rollForward promotes it.
-      DedupOps.clusterLabels(edges, maxIter,
-        stageDir = Some(labelsDir + ".stage"))
-      if (fs.exists(next)) fs.delete(next, true)
-      fs.rename(new org.apache.hadoop.fs.Path(labelsDir + ".stage/labels"),
-        next)
-      if (fs.exists(store)) fs.delete(store, true)
-      fs.rename(next, store)
+      // RENAMED into the replacement instead of being re-written through
+      // a second full parquet pass.
+      SwapStore.replace(spark, labelsDir) { next =>
+        DedupOps.clusterLabels(edges, maxIter,
+          stageDir = Some(labelsDir + ".stage"))
+        val staged = new org.apache.hadoop.fs.Path(labelsDir + ".stage/labels")
+        require(fs.rename(staged, new org.apache.hadoop.fs.Path(next)),
+          s"cluster stage handoff failed: $staged -> $next")
+      }
     }
   }
 
@@ -103,8 +92,8 @@ object ClusterStream {
     * surviving member (ids only grow, so the new minimum is as stable
     * under later growth as the old one was), and drop clusters reduced
     * to a single member (one doc is not a near-dup of anything — a
-    * rebuild would leave it unlabeled). Same crash-safe `.next` swap as
-    * [[applyBatch]].
+    * rebuild would leave it unlabeled). Committed through
+    * [[graft.operators.SwapStore.replace]], like [[applyBatch]].
     *
     * The rebuild-equality boundary, documented rather than faked (the
     * HLL discipline): the store is the CONTRACTED pair graph — every
@@ -123,10 +112,9 @@ object ClusterStream {
     */
   def deleteBatch(docIds: DataFrame, labelsDir: String): Unit = {
     val spark = docIds.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(labelsDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    rollForward(fs, labelsDir)
     val store = new org.apache.hadoop.fs.Path(labelsDir)
+    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
+    SwapStore.repair(fs, labelsDir)
     if (!fs.exists(store) || docIds.isEmpty) return
     val del = docIds.select("doc_id").distinct()
     val byCluster = org.apache.spark.sql.expressions.Window
@@ -137,30 +125,18 @@ object ClusterStream {
       .withColumn("_n", count(lit(1)).over(byCluster))
       .filter(col("_n") > 1)
       .select(col("doc_id"), col("_new").as("cluster_id"))
-    val next = new org.apache.hadoop.fs.Path(labelsDir + ".next")
-    if (fs.exists(next)) fs.delete(next, true)
-    relabeled.write.mode("overwrite").parquet(next.toString)
-    fs.delete(store, true)
-    fs.rename(next, store)
-    ()
-  }
-
-  /** Complete a swap a previous run crashed in the middle of: if the
-    * store is missing but a complete `.next` exists, promote it.
-    */
-  private def rollForward(fs: org.apache.hadoop.fs.FileSystem,
-      labelsDir: String): Unit = {
-    val store = new org.apache.hadoop.fs.Path(labelsDir)
-    val next = new org.apache.hadoop.fs.Path(labelsDir + ".next")
-    if (!fs.exists(store) && fs.exists(next)) fs.rename(next, store)
+    SwapStore.replace(spark, labelsDir) { next =>
+      relabeled.write.mode("overwrite").parquet(next)
+    }
   }
 
   /** Read the current labeling, resolving mid-swap states a bare
-    * `spark.read.parquet(labelsDir)` trips over: between applyBatch's
-    * delete and rename an external reader sees NO store — this helper
-    * rolls a completed `.next` forward (idempotent and race-safe: a
-    * concurrent writer's rename makes ours return false, after which the
-    * store exists) and retries briefly until the store resolves.
+    * `spark.read.parquet(labelsDir)` trips over: between the swap's two
+    * renames an external reader sees NO store — this helper runs
+    * [[graft.operators.SwapStore.repair]], which promotes a completed
+    * replacement (race-safe: whichever of reader and writer promotes
+    * first wins, and the other side sees the store in place), and
+    * retries briefly until the store resolves.
     *
     * Residual caveat, documented rather than hidden: the returned frame
     * lists files at resolve time but reads them lazily, so a swap landing
@@ -177,13 +153,13 @@ object ClusterStream {
     val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
     var attempt = 0
     while (!fs.exists(store) && attempt < maxAttempts) {
-      rollForward(fs, labelsDir)
+      SwapStore.repair(fs, labelsDir)
       if (!fs.exists(store)) Thread.sleep(100L)
       attempt += 1
     }
     require(fs.exists(store),
       s"no labeling at $labelsDir after $maxAttempts attempts " +
-        "(neither store nor completed .next)")
+        "(neither store nor completed replacement)")
     spark.read.parquet(labelsDir)
   }
 

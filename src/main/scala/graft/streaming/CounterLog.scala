@@ -1,27 +1,17 @@
 package graft.streaming
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Shared plumbing for batch-keyed COUNTER LOGS ([[SketchStream]],
-  * [[QuantileStream]]): the crash-safe `.next` roll-forward for compact
-  * swaps, the "any data yet?" probe that ignores the hidden geometry
-  * file, and the `_geometry` key-value file that pins a log's sketch
-  * shape on first write.
+  * [[QuantileStream]]): the "any data yet?" probe that ignores the
+  * hidden geometry file, and the `_geometry` key-value file that pins a
+  * store's shape on first write ([[graft.operators.AnnIndex]] pins its
+  * index geometry with it too). Compaction swaps go through
+  * [[graft.operators.SwapStore]].
   */
 private[graft] object CounterLog {
-
-  /** Complete a compact swap a previous run crashed in the middle of: if
-    * the store is missing but a complete `.next` exists, promote it —
-    * without this a crash between compact's delete and rename would
-    * strand the whole log in `.next` while readers reported a
-    * healthy-looking EMPTY store (the ClusterStream lesson).
-    */
-  def rollForward(spark: SparkSession, storeDir: String): Unit = {
-    val store = new org.apache.hadoop.fs.Path(storeDir)
-    val next = new org.apache.hadoop.fs.Path(storeDir + ".next")
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(store) && fs.exists(next)) { fs.rename(next, store); () }
-  }
 
   /** Whether any `batch_id=` partition has committed — a store holding
     * only the hidden `_geometry` file (a crash between the geometry and
@@ -71,7 +61,7 @@ private[graft] object CounterLog {
     val p = geomPath(storeDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     def live: Option[Map[String, Int]] =
-      try readGeometry(spark, storeDir) catch { case _: Throwable => None }
+      try readGeometry(spark, storeDir) catch { case NonFatal(_) => None }
     if (live.contains(kv.toMap)) return // unchanged: no swap, no window
     val tmp = new org.apache.hadoop.fs.Path(storeDir,
       s"._geometry.${java.util.UUID.randomUUID().toString.take(8)}.tmp")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.PipelineOps
+import graft.operators.{PipelineOps, SwapStore}
 
 /** Streaming DISTRIBUTION-DRIFT monitoring — the incremental twin of the
   * batch snapshot drift ([[PipelineOps.distributionDrift]], x65): keep a
@@ -30,8 +30,8 @@ import graft.operators.PipelineOps
   * (language, source, hashed token bucket — the dims drift is measured
   * over); each batch partition holds ≤ #keys rows regardless of batch
   * size (map-side partial aggregation), the log grows one tiny partition
-  * per micro-batch, and [[compact]] folds closed ranges offline under the
-  * crash-safe `.next` swap.
+  * per micro-batch, and [[compact]] folds closed ranges offline through
+  * the [[graft.operators.SwapStore]] swap.
   */
 object DriftStream {
 
@@ -42,7 +42,7 @@ object DriftStream {
   def applyBatch(batch: DataFrame, keyCol: String, storeDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     if (!batch.isEmpty) {
       batch.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
@@ -63,7 +63,7 @@ object DriftStream {
   def deleteBatch(batch: DataFrame, keyCol: String, storeDir: String,
       batchId: Long): Unit = {
     val spark = batch.sparkSession
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     if (!batch.isEmpty) {
       batch.groupBy(col(keyCol).as("k")).agg((-count(lit(1))).as("cnt"))
         .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
@@ -78,7 +78,7 @@ object DriftStream {
     * observations is a monitoring bug, not a 0.
     */
   def readCounts(spark: SparkSession, storeDir: String): DataFrame = {
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     require(CounterLog.hasData(spark, storeDir),
       s"drift log $storeDir has no committed batches — nothing to read")
     spark.read.parquet(storeDir).groupBy("k")
@@ -118,24 +118,16 @@ object DriftStream {
     * partition was merged away).
     */
   def compact(spark: SparkSession, storeDir: String): Unit = {
-    CounterLog.rollForward(spark, storeDir)
-    val store = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
+    SwapStore.repair(spark, storeDir)
     if (CounterLog.hasData(spark, storeDir)) {
       val all = spark.read.parquet(storeDir)
       val maxId = all.agg(max(col("batch_id").cast("long"))).head().getLong(0)
-      val next = new org.apache.hadoop.fs.Path(storeDir + ".next")
-      // a stranded .next beside a live store = a crash between a prior
-      // compact's .next commit and its store delete; scope-delete it or
-      // its stale merge would survive the rename (the SketchStream fix)
-      if (fs.exists(next)) fs.delete(next, true)
-      all.groupBy("k").agg(sum("cnt").as("cnt"))
-        // fully-cancelled keys ([[deleteBatch]]) fold away physically
-        .filter(col("cnt") =!= 0L)
-        .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-      fs.delete(store, true)
-      fs.rename(next, store)
-      ()
+      SwapStore.replace(spark, storeDir) { next =>
+        all.groupBy("k").agg(sum("cnt").as("cnt"))
+          // fully-cancelled keys ([[deleteBatch]]) fold away physically
+          .filter(col("cnt") =!= 0L)
+          .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
+      }
     }
   }
 

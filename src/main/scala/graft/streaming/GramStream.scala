@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.PcaOps
+import graft.operators.{PcaOps, SwapStore}
 
 /** Streaming SECOND-MOMENT maintenance — the incremental twin of the
   * batch PCA inputs ([[PcaOps.gramUpper]] + [[PcaOps.dimSums]], x82):
@@ -38,8 +38,8 @@ object GramStream {
   def applyBatch(batch: DataFrame, vecCol: String, storeDir: String,
       batchId: Long, scale: Int = 10000): Unit = {
     val spark = batch.sparkSession
-    CounterLog.rollForward(spark, s"$storeDir/gram")
-    CounterLog.rollForward(spark, s"$storeDir/sums")
+    SwapStore.repair(spark, s"$storeDir/gram")
+    SwapStore.repair(spark, s"$storeDir/sums")
     if (batch.isEmpty) return
     PcaOps.gramUpper(batch, vecCol, scale)
       .write.mode("overwrite").parquet(s"$storeDir/gram/batch_id=$batchId")
@@ -65,8 +65,8 @@ object GramStream {
   def deleteBatch(batch: DataFrame, vecCol: String, storeDir: String,
       batchId: Long, scale: Int = 10000): Unit = {
     val spark = batch.sparkSession
-    CounterLog.rollForward(spark, s"$storeDir/gram")
-    CounterLog.rollForward(spark, s"$storeDir/sums")
+    SwapStore.repair(spark, s"$storeDir/gram")
+    SwapStore.repair(spark, s"$storeDir/sums")
     if (batch.isEmpty) return
     PcaOps.gramUpper(batch, vecCol, scale)
       .withColumn("s", -col("s"))
@@ -81,7 +81,7 @@ object GramStream {
     * exact). Fails loudly on an empty log.
     */
   def readGram(spark: SparkSession, storeDir: String): DataFrame = {
-    CounterLog.rollForward(spark, s"$storeDir/gram")
+    SwapStore.repair(spark, s"$storeDir/gram")
     require(CounterLog.hasData(spark, s"$storeDir/gram"),
       s"gram log $storeDir has no committed batches — nothing to read")
     spark.read.parquet(s"$storeDir/gram").groupBy("i", "j")
@@ -90,7 +90,7 @@ object GramStream {
 
   /** The merged per-dimension sums (and row count) over the log. */
   def readSums(spark: SparkSession, storeDir: String): DataFrame = {
-    CounterLog.rollForward(spark, s"$storeDir/sums")
+    SwapStore.repair(spark, s"$storeDir/sums")
     require(CounterLog.hasData(spark, s"$storeDir/sums"),
       s"sums log $storeDir has no committed batches — nothing to read")
     spark.read.parquet(s"$storeDir/sums").groupBy("pos")

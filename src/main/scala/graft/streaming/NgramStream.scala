@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.LmOps
+import graft.operators.{LmOps, SwapStore}
 
 /** Streaming maintenance of the [[LmOps]] n-gram count tables — the
   * resident form of "train the reference LM once, keep it current":
@@ -35,7 +35,7 @@ object NgramStream {
   def applyBatch(docs: DataFrame, textCol: String, storeDir: String,
       batchId: Long, maxOrder: Int = 3): Unit = {
     if (docs.isEmpty) return
-    CounterLog.rollForward(docs.sparkSession, storeDir)
+    SwapStore.repair(docs.sparkSession, storeDir)
     LmOps.ngramCountsTo(docs, textCol, maxOrder)
       .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
   }
@@ -58,7 +58,7 @@ object NgramStream {
   def deleteBatch(docs: DataFrame, textCol: String, storeDir: String,
       batchId: Long, maxOrder: Int = 3): Unit = {
     if (docs.isEmpty) return
-    CounterLog.rollForward(docs.sparkSession, storeDir)
+    SwapStore.repair(docs.sparkSession, storeDir)
     LmOps.ngramCountsTo(docs, textCol, maxOrder)
       .withColumn("cnt", -col("cnt"))
       .write.mode("overwrite").parquet(s"$storeDir/batch_id=$batchId")
@@ -71,7 +71,7 @@ object NgramStream {
     * survivor-only build.
     */
   def readCounts(spark: SparkSession, storeDir: String): Option[DataFrame] = {
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     val p = new org.apache.hadoop.fs.Path(storeDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(p) && fs.listStatus(p)
@@ -90,9 +90,7 @@ object NgramStream {
     */
   def compact(spark: SparkSession, storeDir: String,
       below: Long = Long.MaxValue): Unit = {
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     if (!CounterLog.hasData(spark, storeDir)) return
     val all = spark.read.parquet(storeDir)
       .filter(col("batch_id").cast("long") < below)
@@ -103,11 +101,9 @@ object NgramStream {
       // fully-cancelled grams ([[deleteBatch]]) fold away physically, so
       // the compacted log is row-for-row a survivor-only build
       .filter(col("cnt") =!= 0L)
-    val next = new org.apache.hadoop.fs.Path(storeDir + ".next")
-    if (fs.exists(next)) fs.delete(next, true)
-    folded.write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-    fs.delete(p, true)
-    require(fs.rename(next, p), s"compaction swap failed: $next -> $p")
+    SwapStore.replace(spark, storeDir) { next =>
+      folded.write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
+    }
   }
 
   /** Run count maintenance continuously over a streaming document

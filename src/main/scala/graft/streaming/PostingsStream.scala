@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.RetrievalOps
+import graft.operators.{RetrievalOps, SwapStore}
 
 /** Streaming maintenance of the BM25 postings state — the resident form
   * of "index the corpus once, keep it current per ingest batch": each
@@ -93,13 +93,9 @@ object PostingsStream {
   }
 
   /** Finish interrupted compaction swaps on every sub-log dir. */
-  private def repairStore(spark: SparkSession, storeDir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    Seq("tf", "dl", "pos", "del").foreach { sub =>
-      val dir = s"$storeDir/$sub"
-      repair(new org.apache.hadoop.fs.Path(dir).getFileSystem(conf), dir)
-    }
-  }
+  private def repairStore(spark: SparkSession, storeDir: String): Unit =
+    Seq("tf", "dl", "pos", "del").foreach(sub =>
+      SwapStore.repair(spark, s"$storeDir/$sub"))
 
   /** The committed tombstone set — distinct deleted doc_ids, or None
     * when no delete batch has committed (readers skip the anti-join
@@ -122,20 +118,10 @@ object PostingsStream {
   private def hasBatches(spark: SparkSession, dir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    repair(fs, dir)
+    SwapStore.repair(fs, dir)
     fs.exists(p) && fs.listStatus(p)
       .exists(_.getPath.getName.startsWith("batch_id="))
   }
-
-  /** Finish a [[foldLog]] swap interrupted by a crash (advisor r16) —
-    * the rename-aside discipline, hoisted to
-    * [[graft.operators.SwapStore]] in r19 so the hardened stores
-    * (AnnIndex/IngestPipeline/DeltaManifest) and this log share ONE
-    * implementation; see its scaladoc for the invariant.
-    */
-  private def repair(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Unit =
-    graft.operators.SwapStore.repair(fs, dir)
 
   /** The merged postings — `(doc_id, tok, tf)` summed over every
     * committed batch, or None before the first commit. Sum-merge equals
@@ -224,11 +210,7 @@ object PostingsStream {
       if (keys.isEmpty) all.drop("batch_id")
       else all.groupBy(keys.map(col): _*)
         .agg(sum(valueCol).cast("long").as(valueCol))
-    // crash-safe rename-aside swap (advisor r16; the shared
-    // [[graft.operators.SwapStore]] discipline since r19): the live dir
-    // is never deleted before its replacement is in place, and [[repair]]
-    // finishes an interrupted swap on the next read.
-    graft.operators.SwapStore.replace(spark, dir) { next =>
+    SwapStore.replace(spark, dir) { next =>
       folded.write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
     }
   }

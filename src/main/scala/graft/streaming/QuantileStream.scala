@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.SketchOps
+import graft.operators.{SketchOps, SwapStore}
 
 /** Streaming QUANTILE-SKETCH maintenance — the incremental twin of the
   * batch bucket-table build ([[SketchOps.quantileSketch]], the x47
@@ -40,7 +40,7 @@ object QuantileStream {
   def applyBatch(batch: DataFrame, groupCols: Seq[String], scoreCol: String,
       storeDir: String, batchId: Long, bucketBits: Int = 12): Unit = {
     val spark = batch.sparkSession
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     bucketBitsOf(spark, storeDir).foreach { b0 =>
       require(b0 == bucketBits,
         s"quantile log $storeDir was built at bucketBits=$b0; refusing " +
@@ -72,7 +72,7 @@ object QuantileStream {
   def deleteBatch(batch: DataFrame, groupCols: Seq[String], scoreCol: String,
       storeDir: String, batchId: Long, bucketBits: Int = 12): Unit = {
     val spark = batch.sparkSession
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     bucketBitsOf(spark, storeDir).foreach { b0 =>
       require(b0 == bucketBits,
         s"quantile log $storeDir was built at bucketBits=$b0; refusing " +
@@ -102,7 +102,7 @@ object QuantileStream {
     * not gate against silence.
     */
   def readSketch(spark: SparkSession, storeDir: String): DataFrame = {
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     require(CounterLog.hasData(spark, storeDir),
       s"quantile log $storeDir holds no batches yet — " +
       "a gate cannot take its threshold from an empty distribution")
@@ -121,26 +121,22 @@ object QuantileStream {
     * no folded batch id can replay (the [[SketchStream.compact]] rule).
     */
   def compact(spark: SparkSession, storeDir: String): Unit = {
-    CounterLog.rollForward(spark, storeDir)
-    val store = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
+    SwapStore.repair(spark, storeDir)
     if (CounterLog.hasData(spark, storeDir)) {
       val geom = bucketBitsOf(spark, storeDir)
       val all = spark.read.parquet(storeDir)
       val groupCols = all.columns.toSeq
         .filterNot(Set("qb", "cnt", "batch_id").contains)
       val maxId = all.agg(max(col("batch_id").cast("long"))).head().getLong(0)
-      val next = new org.apache.hadoop.fs.Path(storeDir + ".next")
-      if (fs.exists(next)) fs.delete(next, true)
-      SketchOps.quantileMerge(
-          all.select((groupCols :+ "qb" :+ "cnt").map(col): _*), groupCols)
-        // fully-cancelled buckets ([[deleteBatch]]) fold away physically
-        .filter(col("cnt") =!= 0L)
-        .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-      geom.foreach(b => CounterLog.writeGeometry(spark, next.toString,
-        Seq("bucketBits" -> b)))
-      fs.delete(store, true)
-      fs.rename(next, store)
+      SwapStore.replace(spark, storeDir) { next =>
+        SketchOps.quantileMerge(
+            all.select((groupCols :+ "qb" :+ "cnt").map(col): _*), groupCols)
+          // fully-cancelled buckets ([[deleteBatch]]) fold away physically
+          .filter(col("cnt") =!= 0L)
+          .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
+        geom.foreach(b => CounterLog.writeGeometry(spark, next,
+          Seq("bucketBits" -> b)))
+      }
     }
   }
 

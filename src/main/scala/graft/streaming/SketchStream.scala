@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.SketchOps
+import graft.operators.{SketchOps, SwapStore}
 
 /** Streaming SKETCH MAINTENANCE — the incremental twin of the batch
   * count-min build ([[SketchOps.cmsSketch]], x39): keep a durable
@@ -37,9 +37,10 @@ import graft.operators.SketchOps
 object SketchStream {
 
   /** Sketch one micro-batch into its own batch_id partition (overwrite —
-    * replay-idempotent). Empty batches write nothing. Rolls forward a
-    * compaction a previous run crashed in the middle of, so new batches
-    * never interleave with a stranded `.next`.
+    * replay-idempotent). Empty batches write nothing. Repairs a
+    * compaction swap a previous run crashed in the middle of
+    * ([[graft.operators.SwapStore.repair]]), so a new batch never lands
+    * in a fragment beside the complete log.
     *
     * The sketch GEOMETRY (depth × width) is persisted alongside the log
     * (`_geometry` — underscore-hidden from parquet discovery) on first
@@ -54,7 +55,7 @@ object SketchStream {
   def applyBatch(batch: DataFrame, valueCol: String, storeDir: String,
       batchId: Long, depth: Int = 4, width: Int = 1024): Unit = {
     val spark = batch.sparkSession
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     geometry(spark, storeDir).foreach { case (d0, w0) =>
       require(d0 == depth && w0 == width,
         s"sketch log $storeDir was built at depth=$d0/width=$w0; " +
@@ -98,7 +99,7 @@ object SketchStream {
   def deleteBatch(batch: DataFrame, valueCol: String, storeDir: String,
       batchId: Long, depth: Int = 4, width: Int = 1024): Unit = {
     val spark = batch.sparkSession
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     geometry(spark, storeDir).foreach { case (d0, w0) =>
       require(d0 == depth && w0 == width,
         s"sketch log $storeDir was built at depth=$d0/width=$w0; " +
@@ -127,7 +128,7 @@ object SketchStream {
     * empty counter table if nothing has been written yet.
     */
   def readSketch(spark: SparkSession, storeDir: String): DataFrame = {
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     if (!CounterLog.hasData(spark, storeDir))
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         org.apache.spark.sql.types.StructType.fromDDL(
@@ -148,9 +149,7 @@ object SketchStream {
     */
   def compact(spark: SparkSession, storeDir: String,
       below: Long = Long.MaxValue): Unit = {
-    CounterLog.rollForward(spark, storeDir)
-    val store = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
+    SwapStore.repair(spark, storeDir)
     if (CounterLog.hasData(spark, storeDir)) {
       val geom = geometry(spark, storeDir)
       // bounded fold (see IngestPipeline.compactAll): ids >= below are
@@ -160,30 +159,23 @@ object SketchStream {
         .filter(col("batch_id").cast("long") < below)
       if (all.isEmpty) return
       val maxId = all.agg(max(col("batch_id").cast("long"))).head().getLong(0)
-      val next = new org.apache.hadoop.fs.Path(storeDir + ".next")
-      // a stranded .next BESIDE a live store means a previous compact
-      // crashed between its .next commit and the store delete (rollForward
-      // only promotes when the store is GONE). The overwrite below scopes
-      // to this compaction's own batch_id subdir, so without this delete
-      // the stale full-merge partition would survive the rename and its
-      // counters would double on top of the new merge (advisor r8).
-      if (fs.exists(next)) fs.delete(next, true)
-      // the .next write is a complete materialization of the merge, so
-      // the source partitions are only deleted after it commits — a
-      // crash in between leaves .next complete (the ClusterStream swap)
-      SketchOps.cmsMerge(all.select("r", "b", "cnt"))
-        // fully-cancelled buckets ([[deleteBatch]]) fold away here, so
-        // the compacted log is counter-for-counter a survivor-only build
-        .filter(col("cnt") =!= 0L)
-        .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-      // the geometry rides the swap: it lives INSIDE the store dir, so
-      // the delete below would orphan the compacted counters from their
-      // shape and the next applyBatch would silently re-pin its own
-      geom.foreach { case (d, w) =>
-        CounterLog.writeGeometry(spark, next.toString,
-          Seq("depth" -> d, "width" -> w)) }
-      fs.delete(store, true)
-      fs.rename(next, store)
+      // SwapStore.replace drops a stale replacement first: the overwrite
+      // below scopes to this compaction's own batch_id subdir, so a stale
+      // full-merge partition would otherwise ride the swap and double its
+      // counters on top of the new merge (advisor r8)
+      SwapStore.replace(spark, storeDir) { next =>
+        SketchOps.cmsMerge(all.select("r", "b", "cnt"))
+          // fully-cancelled buckets ([[deleteBatch]]) fold away here, so
+          // the compacted log is counter-for-counter a survivor-only build
+          .filter(col("cnt") =!= 0L)
+          .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
+        // the geometry rides the swap: it lives INSIDE the store dir, so
+        // a replacement without it would orphan the compacted counters
+        // from their shape and the next applyBatch would re-pin its own
+        geom.foreach { case (d, w) =>
+          CounterLog.writeGeometry(spark, next,
+            Seq("depth" -> d, "width" -> w)) }
+      }
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.UnigramLmOps
+import graft.operators.{SwapStore, UnigramLmOps}
 
 /** Streaming maintenance of the [[UnigramLmOps]] piece-count table
   * under a FROZEN trained piece inventory — the resident form of
@@ -35,6 +35,7 @@ object UnigramStream {
   def applyBatch(docs: DataFrame, textCol: String, pieces: DataFrame,
       storeDir: String, batchId: Long): Unit = {
     if (docs.isEmpty) return
+    SwapStore.repair(docs.sparkSession, storeDir)
     val vocab = docs
       .select(explode(graft.operators.TextOps.tokensRegex(col(textCol)))
         .as("word"))
@@ -48,7 +49,7 @@ object UnigramStream {
     * committed batch, or None before the first commit.
     */
   def readCounts(spark: SparkSession, storeDir: String): Option[DataFrame] = {
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     if (!CounterLog.hasData(spark, storeDir)) None
     else Some(spark.read.parquet(storeDir)
       .groupBy("piece")
@@ -61,21 +62,16 @@ object UnigramStream {
     */
   def compact(spark: SparkSession, storeDir: String,
       below: Long = Long.MaxValue): Unit = {
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    CounterLog.rollForward(spark, storeDir)
+    SwapStore.repair(spark, storeDir)
     if (!CounterLog.hasData(spark, storeDir)) return
     val all = spark.read.parquet(storeDir)
       .filter(col("batch_id").cast("long") < below)
     if (all.isEmpty) return
     val maxId = all.agg(max(col("batch_id").cast("long"))).head().getLong(0)
-    val folded = all.groupBy("piece")
-      .agg(sum("cnt").cast("long").as("cnt"))
-    val next = new org.apache.hadoop.fs.Path(storeDir + ".next")
-    if (fs.exists(next)) fs.delete(next, true)
-    folded.write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-    fs.delete(p, true)
-    require(fs.rename(next, p), s"compaction swap failed: $next -> $p")
+    SwapStore.replace(spark, storeDir) { next =>
+      all.groupBy("piece").agg(sum("cnt").cast("long").as("cnt"))
+        .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
+    }
   }
 
   /** Run count maintenance continuously over a streaming document

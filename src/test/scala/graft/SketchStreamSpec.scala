@@ -97,7 +97,7 @@ class SketchStreamSpec extends AnyFunSuite {
 
   test("a stranded .next beside a live store never double-counts a compact") {
     // the OTHER crash window: a previous compact committed its .next but
-    // died before deleting the store. rollForward no-ops (store exists),
+    // died before deleting the store. SwapStore.repair no-ops (store exists),
     // and compact's overwrite scopes to its own batch_id subdir — without
     // an explicit delete the stale full-merge partition would ride the
     // rename into the store and add on top of the new merge (advisor r8)
