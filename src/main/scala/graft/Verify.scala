@@ -65,7 +65,7 @@ object Verify {
     // the queries write to, as a plain local path DuckDB can open — the
     // artifact handoff (x46 weights, x14b centroids) no longer rides a
     // fixed /tmp path two concurrent drivers could collide on (judge r9)
-    val sfName = new java.io.File(sfDir).getName
+    val sfName = graft.operators.StageIO.datasetName(sfDir)
     val artRoot = graft.operators.StageIO.artifactRootLocal(spark)
     val json = SparkEntry.oracleSql.filter(e => keep(e._1))
       .map { case (k, v) => s"${q(k)}: ${q(v.replace("__GRAFT_SF__", sfName)

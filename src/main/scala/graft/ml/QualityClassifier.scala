@@ -148,13 +148,10 @@ object QualityClassifier {
   def trainWeak(docs: DataFrame, textCol: String, nCharsCol: String,
       loBps: Long, hiBps: Long, maxIter: Int = 100,
       maxTrainRows: Long = 100000L, idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    val stage = graft.operators.StageIO.resolve(spark, None, "quality-feat")
-    featurize(docs, textCol, nCharsCol)
-      .drop(textCol)
-      .write.mode("overwrite").parquet(stage)
-    trainWeakFeaturized(spark.read.parquet(stage), loBps, hiBps, maxIter,
-      maxTrainRows, idCol)
+    trainWeakFeaturized(graft.operators.StageIO.stage(
+        featurize(docs, textCol, nCharsCol).drop(textCol), None,
+        "quality-feat"),
+      loBps, hiBps, maxIter, maxTrainRows, idCol)
   }
 
   /** Score a [[featurize]]d frame with a persisted coefficient table:

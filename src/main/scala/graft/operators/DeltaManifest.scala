@@ -370,7 +370,6 @@ object DeltaManifest {
   private[operators] def stageGated(arrivals: DataFrame,
       evalSources: Seq[String], minQualityBps: Long, stateDir: String,
       batchId: Long): DataFrame = {
-    val stage = stagePath(stateDir, batchId)
     // Measured and rejected (r12): staging the per-doc shingle array
     // here to spare downstream recomputes — the array is ~3× the text
     // bytes, and every stage consumer paid the fatter scan (tick wall
@@ -379,10 +378,10 @@ object DeltaManifest {
     // still REUSE a `sh` column when one is present (the shingled()/
     // trainShingleCol seams), so a future caller with a cheap array
     // source keeps the fast path.
-    PipelineOps.gateAndDedup(arrivals, evalSources, minQualityBps)
-      .withColumn("text_hash", md5(col("text")))
-      .write.mode("overwrite").parquet(stage)
-    arrivals.sparkSession.read.parquet(stage)
+    StageIO.stage(
+      PipelineOps.gateAndDedup(arrivals, evalSources, minQualityBps)
+        .withColumn("text_hash", md5(col("text"))),
+      Some(stagePath(stateDir, batchId)), "gated")
   }
 
   def applyBatch(arrivals: DataFrame, evalDocs: DataFrame,

@@ -80,17 +80,14 @@ object GraphOps {
     require(dampBps >= 0 && dampBps <= 10000,
       s"dampBps must be in [0, 10000], got $dampBps")
     val s = edges.sparkSession
-    val estage = StageIO.resolve(s, stageDir, "pagerank-edges")
     val outW = edges.groupBy("src").agg(sum(col("w")).cast("long").as("out_w"))
-    edges.join(outW, "src").write.mode("overwrite").parquet(estage)
-    val e = s.read.parquet(estage)
-    val nstage = StageIO.resolve(s, stageDir.map(_ + "-nodes"), "pagerank-nodes")
-    e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
-      .distinct()
-      .join(outW.withColumnRenamed("src", "node"), Seq("node"), "left")
-      .select(col("node"), coalesce(col("out_w"), lit(0L)).as("out_w"))
-      .write.mode("overwrite").parquet(nstage)
-    val nodes = s.read.parquet(nstage)
+    val e = StageIO.stage(edges.join(outW, "src"), stageDir, "pagerank-edges")
+    val nodes = StageIO.stage(
+      e.select(col("src").as("node")).union(e.select(col("dst").as("node")))
+        .distinct()
+        .join(outW.withColumnRenamed("src", "node"), Seq("node"), "left")
+        .select(col("node"), coalesce(col("out_w"), lit(0L)).as("out_w")),
+      stageDir.map(_ + "-nodes"), "pagerank-nodes")
     val nV = nodes.count()
     require(nV > 0, "empty graph")
     val teleport =
@@ -121,9 +118,7 @@ object GraphOps {
             idiv(lit(dampBps).cast(d38) * coalesce(col("cs"), lit(0L)),
               lit(10000L)))
             .as("r"))
-      val rStage = StageIO.resolve(s, None, s"pagerank-r$i")
-      next.write.mode("overwrite").parquet(rStage)
-      r = s.read.parquet(rStage)
+      r = StageIO.stage(next, None, s"pagerank-r$i")
       iterates += r
     }
     (nodes, iterates.result())

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Telemetry.phase
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -189,20 +190,6 @@ object IngestPipeline {
     *     from the store updated in step 3, its boilerplate cap from the
     *     log updated in step 4
     */
-  /** Wall-clock per tick phase to stderr when SPARK_GRAFT_PHASE_LOG is
-    * set — operational telemetry for sizing a resident ingest process
-    * (which phase pays for a fatter batch) and for attributing the
-    * bench's composite timings to phases.
-    */
-  private def phased[T](name: String)(body: => T): T =
-    if (sys.env.contains("SPARK_GRAFT_PHASE_LOG")) {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(
-        f"[ingest] phase=$name%s sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      r
-    } else body
-
   def tick(arrivals: DataFrame, evalDocs: DataFrame,
       evalSources: Seq[String], stateDir: String, batchId: Long,
       minQualityBps: Long, contamThreshold: Double,
@@ -218,7 +205,7 @@ object IngestPipeline {
     // docs the manifest will consider): the signature write, the
     // shingle rows, and the manifest step below all read the staged
     // parquet — the gate's tokenize + score pass never re-runs
-    val gated = phased("stage_gated") {
+    val gated = phase("ingest", "stage_gated") {
       DeltaManifest.stageGated(arrivals, evalSources,
         minQualityBps, stateDir, batchId)
     }
@@ -253,11 +240,11 @@ object IngestPipeline {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
-      val sigF = Future { phased("write_signatures") {
+      val sigF = Future { phase("ingest", "write_signatures") {
         DeltaManifest.writePartitionedAdaptive(bands,
           s"${sigDir(stateDir)}/batch=$batchId", col("band_key"))
       } }
-      val sketchF = Future { phased("shingle_sketch") {
+      val sketchF = Future { phase("ingest", "shingle_sketch") {
         val (gd, gw) = graft.streaming.SketchStream
           .geometry(spark, sketchDir(stateDir)).getOrElse((4, 1024))
         graft.streaming.SketchStream.applyBatch(shingleRows(gated),
@@ -267,7 +254,7 @@ object IngestPipeline {
       // prefixes). The prefix collect is bounded (≤ 16^pfxLen strings);
       // log rows outside those buckets cannot band-match the batch, so
       // the prune is exact while bytes read scale with the batch.
-      val pairs = phased("pair_probe") {
+      val pairs = phase("ingest", "pair_probe") {
         val pfxs = bands.select("pfx").distinct().collect()
           .map(_.getString(0)).toSeq
         val history = readSigLog(spark, stateDir, below = batchId)
@@ -289,7 +276,7 @@ object IngestPipeline {
       }
 
       // pairs BEFORE the manifest — the contract this operator exists for
-      phased("cluster_store") {
+      phase("ingest", "cluster_store") {
         graft.streaming.ClusterStream.applyBatch(pairs, labelsDir(stateDir))
       }
       // both state writes must be committed before the manifest step
@@ -301,7 +288,7 @@ object IngestPipeline {
       ()
     }
 
-    phased("delta_manifest") {
+    phase("ingest", "delta_manifest") {
       DeltaManifest.applyBatch(arrivals, evalDocs, evalSources, stateDir,
         batchId, minQualityBps, contamThreshold, rates, defaultRate,
         capacity, shards, labelsDir = Some(labelsDir(stateDir)),

@@ -74,14 +74,13 @@ object PackingOps {
     // branch are two consumers, and two lazy instances of the subtree
     // would re-aggregate both corpora (the distributionDrift /
     // ratesFromShares lesson). The staged frame is ≤ buckets rows.
-    val stage = StageIO.resolve(spark, None, "imp-votes")
-    targetCounts.select(col("k").as("_b"), col("cnt").as("tc"))
-      .join(rawCounts.select(col("k").as("_b"), col("cnt").as("rc")),
-        Seq("_b"), "full_outer")
-      .select(col("_b"), coalesce(col("tc"), lit(0L)).as("tc"),
-        coalesce(col("rc"), lit(0L)).as("rc"))
-      .write.mode("overwrite").parquet(s"$stage/counts")
-    val joined = spark.read.parquet(s"$stage/counts")
+    val joined = StageIO.stage(
+      targetCounts.select(col("k").as("_b"), col("cnt").as("tc"))
+        .join(rawCounts.select(col("k").as("_b"), col("cnt").as("rc")),
+          Seq("_b"), "full_outer")
+        .select(col("_b"), coalesce(col("tc"), lit(0L)).as("tc"),
+          coalesce(col("rc"), lit(0L)).as("rc")),
+      Some(StageIO.resolve(spark, None, "imp-votes") + "/counts"), "counts")
     val totals = joined.agg(sum("tc").as("nt"), sum("rc").as("nr"))
     val votes = joined.crossJoin(broadcast(totals))
       .select(col("_b"),
@@ -394,10 +393,7 @@ object PackingOps {
     */
   private def capByScoreHist(df: DataFrame, classCol: String, scoreCol: String,
       idCol: String, kExpr: Column, stageDir: Option[String]): DataFrame = {
-    val spark = df.sparkSession
-    val stage = StageIO.resolve(spark, stageDir, "score-gate")
-    df.write.mode("overwrite").parquet(stage)
-    val staged = spark.read.parquet(stage)
+    val staged = StageIO.stage(df, stageDir, "score-gate")
     val hist = staged.groupBy(col(classCol), col(scoreCol))
       .agg(count(lit(1)).as("_cnt"))
     val byScore = Window.partitionBy(classCol).orderBy(col(scoreCol).desc)
@@ -450,10 +446,7 @@ object PackingOps {
       costCol: String, idCol: String, budget: Long,
       stageDir: Option[String] = None): DataFrame = {
     require(budget >= 0, "a negative budget keeps nothing")
-    val spark = df.sparkSession
-    val stage = StageIO.resolve(spark, stageDir, "budget-fill")
-    df.write.mode("overwrite").parquet(stage)
-    val staged = spark.read.parquet(stage)
+    val staged = StageIO.stage(df, stageDir, "budget-fill")
     val checkedCost = when(col(costCol) < 0, raise_error(concat(
       lit(s"fillTokenBudget: negative cost in '$costCol' breaks the " +
         "monotone-mass prefix rule: "), col(costCol).cast("string"))))
@@ -557,10 +550,7 @@ object PackingOps {
       scoreCol: String, idCol: String, kExpr: Column, bucketBits: Int,
       stageDir: Option[String],
       external: Option[DataFrame] = None): DataFrame = {
-    val spark = df.sparkSession
-    val stage = StageIO.resolve(spark, stageDir, "score-gate-sketch")
-    df.write.mode("overwrite").parquet(stage)
-    val staged = spark.read.parquet(stage)
+    val staged = StageIO.stage(df, stageDir, "score-gate-sketch")
     // threshold source: the input itself (rebuilt — the batch form) or a
     // persisted external sketch (the state-driven form; merged here so a
     // raw log union cannot double-count a (class, qb) key)
@@ -696,12 +686,7 @@ object PackingOps {
   def calibrateByClass(df: DataFrame, classCol: String, scoreCol: String,
       stage: Boolean = false, stageDir: Option[String] = None)
       : DataFrame = {
-    val in = if (!stage) df else {
-      val spark = df.sparkSession
-      val path = StageIO.resolve(spark, stageDir, "calibrate")
-      df.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
-    }
+    val in = if (!stage) df else StageIO.stage(df, stageDir, "calibrate")
     val counts = in.groupBy(col(classCol), col(scoreCol))
       .agg(count(lit(1)).as("_c"))
     // asc_nulls_first pinned explicitly: Spark's asc default puts NULLs
@@ -846,7 +831,6 @@ object PackingOps {
   def propagateClusterBest(scored: DataFrame, idCol: String,
       scoreCol: String, labels: DataFrame): DataFrame = {
     requireIntegralId(scored, idCol, "propagateClusterBest")
-    val spark = scored.sparkSession
     val lab = labels.select(col("doc_id").as(idCol),
       col("cluster_id").as("_lab_cluster"))
     // STAGE the scored-with-cluster frame once: three lazy branches
@@ -855,13 +839,10 @@ object PackingOps {
     // otherwise pay the scoring scan per branch — the x30/x31 staging
     // discipline capByScoreHist and importanceVotesFrom follow
     // (advisor r11).
-    val stage = StageIO.resolve(spark, None, "cluster-best")
-    scored.join(lab, Seq(idCol), "left")
+    val withCluster = StageIO.stage(scored.join(lab, Seq(idCol), "left")
       .withColumn("cluster_id",
         coalesce(col("_lab_cluster"), col(idCol).cast("long")))
-      .drop("_lab_cluster")
-      .write.mode("overwrite").parquet(stage)
-    val withCluster = spark.read.parquet(stage)
+      .drop("_lab_cluster"), None, "cluster-best")
     val best = withCluster.groupBy("cluster_id")
       .agg(max(col(scoreCol)).as("best_score"),
         count(lit(1)).as("n_members"))

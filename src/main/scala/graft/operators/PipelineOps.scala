@@ -115,10 +115,8 @@ object PipelineOps {
 
     // materialize the shared gate→dedup prefix ONCE (see object scaladoc)
     val stageBase = StageIO.resolve(spark, stageDir, "manifest-stage")
-    val stagePath = s"$stageBase/gated_deduped"
-    gateAndDedup(docs, evalSources, minQualityBps)
-      .write.mode("overwrite").parquet(stagePath)
-    val ded0 = spark.read.parquet(stagePath)
+    val ded0 = StageIO.stage(gateAndDedup(docs, evalSources, minQualityBps),
+      Some(s"$stageBase/gated_deduped"), "gated_deduped")
 
     // fuzzy near-dedup over the exact-deduped stage: pair generation and
     // the downstream consumers all read the cheap columnar stage, never
@@ -146,9 +144,8 @@ object PipelineOps {
         // recomputes the shingle-index join or rescans the eval split;
         // the rate branch then prunes the stage to (lang, n_tok) and the
         // gate-time token counts mean it never re-tokenizes
-        val leakedPath = s"$stageBase/leaked"
-        leaked.write.mode("overwrite").parquet(leakedPath)
-        val clean = ded.join(spark.read.parquet(leakedPath),
+        val clean = ded.join(
+          StageIO.stage(leaked, Some(s"$stageBase/leaked"), "leaked"),
           Seq("doc_id"), "left_anti")
         val mixRates = PackingOps.mixtureRatesCounted(clean, "lang",
           "n_tok", target, defaultMixtureBps)
@@ -184,14 +181,12 @@ object PipelineOps {
     val spark = prior.sparkSession
     def counts(df: DataFrame, k: String, cnt: String) =
       df.groupBy(col(keyCol).as(k)).agg(count(lit(1)).as(cnt))
-    val stage = StageIO.resolve(spark, stageDir, "drift")
-    counts(prior, "_k1", "c1")
+    driftOverCountPairs(StageIO.stage(counts(prior, "_k1", "c1")
       .join(counts(current, "_k2", "c2"), col("_k1") <=> col("_k2"),
         "full_outer")
       .select(coalesce(col("c1"), lit(0L)).as("c1"),
-        coalesce(col("c2"), lit(0L)).as("c2"))
-      .write.mode("overwrite").parquet(s"$stage/counts")
-    driftOverCountPairs(spark.read.parquet(s"$stage/counts"))
+        coalesce(col("c2"), lit(0L)).as("c2")),
+      Some(StageIO.resolve(spark, stageDir, "drift") + "/counts"), "counts"))
   }
 
   /** The TV core of [[distributionDrift]], over an ALREADY-JOINED

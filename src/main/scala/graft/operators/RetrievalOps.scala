@@ -85,13 +85,24 @@ object RetrievalOps {
     */
   private[graft] def stageQueryTerms(docs: DataFrame, queryIds: DataFrame,
       ngram: Int): DataFrame = {
-    val s = docs.sparkSession
-    val qstage = StageIO.resolve(s, None, "bm25-qterms")
-    docs.join(queryIds, col("doc_id") === col("q_id"))
+    StageIO.stage(docs.join(queryIds, col("doc_id") === col("q_id"))
       .select(col("q_id"),
-        explode(array_distinct(terms(col("text"), ngram))).as("tok"))
-      .write.mode("overwrite").parquet(qstage)
-    s.read.parquet(qstage)
+        explode(array_distinct(terms(col("text"), ngram))).as("tok")),
+      None, "bm25-qterms")
+  }
+
+  /** One-pass postings for the scoring entry points without shared
+    * state: `(tf, dl, nDocs, totToks)` with tf staged to scratch and dl
+    * derived from it.
+    */
+  private def onePassState(docs: DataFrame, ngram: Int)
+      : (DataFrame, DataFrame, Long, Long) = {
+    val nDocs = docs.count()
+    val tf = StageIO.stage(termCounts(docs, ngram), None, "bm25-tf")
+    val totToks = tf.agg(coalesce(sum(col("tf")), lit(0L)).cast("long"))
+      .collect()(0).getLong(0)
+    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).cast("long").as("dl"))
+    (tf, dl, nDocs, totToks)
   }
 
   /** The scoring tail shared by the one-pass and from-state forms:
@@ -142,41 +153,33 @@ object RetrievalOps {
     * one corpus tokenize feeds the whole retrieval family (x126 / x129 /
     * x130 / x132b) within a run, exactly as a production pipeline builds
     * its postings once and fans lexical / hybrid / PRF / quality-gate
-    * passes off them. The first caller in a JVM always (re)builds in
-    * overwrite mode — a stale artifact from an earlier run can never
-    * leak into this one; later callers read the parquet pair directly
-    * (dl read back, not re-derived, so the scoring plan sheds the
-    * per-row dl re-aggregation too). From-state scoring is pinned equal
-    * to the one-pass form by PostingsStreamSpec and the x124b oracle
-    * row, so every consumer's hash is unchanged by the reuse.
+    * passes off them. Each half is staged through [[StageIO.once]]:
+    * the first caller in a JVM (re)builds it in overwrite mode, later
+    * callers read the parquet directly (dl read back, not re-derived, so
+    * the scoring plan sheds the per-row dl re-aggregation too).
+    * From-state scoring is pinned equal to the one-pass form by
+    * PostingsStreamSpec and the x124b oracle row, so every consumer's
+    * hash is unchanged by the reuse.
     *
-    * CONTRACT (advisor r17 / judge r17 #5): the memo key is the `tag`
-    * string, so the tag must identify the corpus CONTENT — build it
-    * with [[corpusTag]] (prefix + a hash of the canonical dataset path)
-    * rather than a basename, which collides across parents — and the
-    * corpus behind a tag must be IMMUTABLE for the JVM's lifetime: a
-    * second call after the underlying data changed reuses the old
-    * tf/dl silently. A mutating corpus (streaming ingest) belongs in
-    * [[graft.streaming.PostingsStream]]'s maintained log, not here; if
-    * a caller must re-stage a changed corpus in-JVM, it owns folding a
-    * version stamp into the tag.
+    * CONTRACT (advisor r17 / judge r17 #5): the stage path is keyed by
+    * the `tag` string, so the tag must identify the corpus CONTENT —
+    * build it with [[corpusTag]] (prefix + a hash of the canonical
+    * dataset path) rather than a basename, which collides across
+    * parents — and the corpus behind a tag must be IMMUTABLE for the
+    * JVM's lifetime ([[StageIO.once]]'s contract). A mutating corpus
+    * (streaming ingest) belongs in [[graft.streaming.PostingsStream]]'s
+    * maintained log, not here.
     */
   def stagedCorpusState(docs: DataFrame, tag: String, ngram: Int = 2)
       : (DataFrame, DataFrame) = {
     val s = docs.sparkSession
     val base = s"${StageIO.artifactRoot(s)}/bm25_state/$tag-n$ngram"
-    built.synchronized {
-      if (!built.contains(base)) {
-        termCounts(docs, ngram).write.mode("overwrite").parquet(s"$base/tf")
-        docLengths(docs, ngram).write.mode("overwrite").parquet(s"$base/dl")
-        built += base
-      }
-    }
-    (s.read.parquet(s"$base/tf"), s.read.parquet(s"$base/dl"))
+    def stagedOnce(path: String, state: => DataFrame): DataFrame =
+      s.read.parquet(StageIO.once(path)(
+        state.write.mode("overwrite").parquet(path)))
+    (stagedOnce(s"$base/tf", termCounts(docs, ngram)),
+      stagedOnce(s"$base/dl", docLengths(docs, ngram)))
   }
-
-  /** Corpus states already staged in this JVM ([[stagedCorpusState]]). */
-  private val built = scala.collection.mutable.Set.empty[String]
 
   /** The [[stagedCorpusState]] tag for a corpus read from `path`:
     * `prefix` + the first 16 hex chars of md5 over the CANONICAL
@@ -200,14 +203,7 @@ object RetrievalOps {
     */
   def bm25PairScores(docs: DataFrame, queryIds: DataFrame,
       ngram: Int = 2): DataFrame = {
-    val s = docs.sparkSession
-    val nDocs = docs.count()
-    val stage = StageIO.resolve(s, None, "bm25-tf")
-    termCounts(docs, ngram).write.mode("overwrite").parquet(stage)
-    val tf = s.read.parquet(stage)
-    val totToks = tf.agg(coalesce(sum(col("tf")), lit(0L)).cast("long"))
-      .collect()(0).getLong(0)
-    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).cast("long").as("dl"))
+    val (tf, dl, nDocs, totToks) = onePassState(docs, ngram)
     scoreCore(tf, dl, stageQueryTerms(docs, queryIds, ngram), nDocs, totToks)
   }
 
@@ -220,14 +216,7 @@ object RetrievalOps {
     */
   def bm25PairScoresForTerms(docs: DataFrame, qterms: DataFrame,
       ngram: Int = 2): DataFrame = {
-    val s = docs.sparkSession
-    val nDocs = docs.count()
-    val stage = StageIO.resolve(s, None, "bm25-tf")
-    termCounts(docs, ngram).write.mode("overwrite").parquet(stage)
-    val tf = s.read.parquet(stage)
-    val totToks = tf.agg(coalesce(sum(col("tf")), lit(0L)).cast("long"))
-      .collect()(0).getLong(0)
-    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).cast("long").as("dl"))
+    val (tf, dl, nDocs, totToks) = onePassState(docs, ngram)
     scoreCore(tf, dl, qterms, nDocs, totToks)
   }
 
@@ -485,14 +474,7 @@ object RetrievalOps {
     */
   def bm25MrrBestRanks(docs: DataFrame, truth: DataFrame,
       ngram: Int = 2): DataFrame = {
-    val s = docs.sparkSession
-    val nDocs = docs.count()
-    val stage = StageIO.resolve(s, None, "bm25-tf")
-    termCounts(docs, ngram).write.mode("overwrite").parquet(stage)
-    val tf = s.read.parquet(stage)
-    val totToks = tf.agg(coalesce(sum(col("tf")), lit(0L)).cast("long"))
-      .collect()(0).getLong(0)
-    val dl = tf.groupBy("doc_id").agg(sum(col("tf")).cast("long").as("dl"))
+    val (tf, dl, nDocs, totToks) = onePassState(docs, ngram)
     bestRanksCore(tf, dl, docs, truth, nDocs, totToks, ngram)
   }
 

@@ -528,12 +528,11 @@ object SimilarityOps {
     require(k >= 1 && shortlist >= k, "need shortlist >= k >= 1")
     val spark = emb.sparkSession
     val stage = StageIO.resolve(spark, stageDir, "mmr")
-    topKBatch(emb, idCol, vecCol, queries, qidCol, qvecCol, shortlist,
-        excludeSelf)
-      .select(col(qidCol), col(idCol), col("cos").as("qsim"))
-      .write.mode("overwrite").parquet(s"$stage/cands")
-    val c = spark.read.parquet(s"$stage/cands")
-    c.alias("a")
+    val c = StageIO.stage(topKBatch(emb, idCol, vecCol, queries, qidCol,
+        qvecCol, shortlist, excludeSelf)
+      .select(col(qidCol), col(idCol), col("cos").as("qsim")),
+      Some(s"$stage/cands"), "cands")
+    val p = StageIO.stage(c.alias("a")
       .join(c.alias("b"), col(s"a.$qidCol") === col(s"b.$qidCol") &&
         col(s"a.$idCol") =!= col(s"b.$idCol"))
       .select(col(s"a.$qidCol").as(qidCol), col(s"a.$idCol").as("ca"),
@@ -541,9 +540,8 @@ object SimilarityOps {
       .join(emb.select(col(idCol).as("ca"), col(vecCol).as("_va")), Seq("ca"))
       .join(emb.select(col(idCol).as("cb"), col(vecCol).as("_vb")), Seq("cb"))
       .select(col(qidCol), col("ca"), col("cb"),
-        round(cosineFast(col("_va"), col("_vb")), 4).as("psim"))
-      .write.mode("overwrite").parquet(s"$stage/pair")
-    val p = spark.read.parquet(s"$stage/pair")
+        round(cosineFast(col("_va"), col("_vb")), 4).as("psim")),
+      Some(s"$stage/pair"), "pair")
 
     def pickTop(scored: DataFrame, step: Int): DataFrame = {
       val w = Window.partitionBy(qidCol)
@@ -576,9 +574,8 @@ object SimilarityOps {
       // truncation means it can never be unpersisted while the
       // returned frame lives; the suite-wide cache gate (EntrySpec)
       // rightly forbids that (judge r14 #1).
-      selected.unionByName(pickTop(scored, i))
-        .write.mode("overwrite").parquet(s"$stage/sel-$i")
-      selected = spark.read.parquet(s"$stage/sel-$i")
+      selected = StageIO.stage(selected.unionByName(pickTop(scored, i)),
+        Some(s"$stage/sel-$i"), s"sel-$i")
     }
     selected.select(col(qidCol), col("step"), col(idCol))
   }

@@ -1,9 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentHashMap
 
-/** Stage-handoff path resolution for operators that materialize an
-  * intermediate to parquet (lineage flattening / recompute elimination).
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The one stage-handoff discipline: operators and query rows materialize
+  * an intermediate to parquet and read it back ([[stage]]) instead of
+  * persisting an RDD (lineage flattening / recompute elimination, and the
+  * suite-wide no-persisted-RDD gate), and fixtures shared across rows are
+  * staged once per JVM ([[once]]).
   *
   * The default MUST be cluster-visible storage: a `java.nio` temp dir is
   * driver-local, so on a real cluster executors would write `file:` paths
@@ -15,6 +20,55 @@ import org.apache.spark.sql.SparkSession
   * audit artifact.
   */
 private[graft] object StageIO {
+
+  /** Write `df` as parquet (overwrite mode) to `stageDir`, or to a
+    * [[resolve]]d scratch path named by `tag` when there is none, and
+    * return the frame that re-reads it.
+    */
+  def stage(df: DataFrame, stageDir: Option[String], tag: String): DataFrame = {
+    val path = resolve(df.sparkSession, stageDir, tag)
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.parquet(path)
+  }
+
+  /** Per-JVM stage-once memo: the first caller for `path` runs `write`;
+    * later callers skip it, until a different `writer` (what produced
+    * the content — e.g. the dataset behind a basename-keyed artifact)
+    * claims the path. Returns `path`. The first call in a JVM always
+    * writes, so a stale artifact from an earlier run never leaks into
+    * this one. A `write` that throws is not memoized. Callers for one
+    * path serialize on that path's lock only, so different paths build
+    * concurrently.
+    *
+    * CONTRACT: the content behind (`path`, `writer`) must be immutable
+    * for the JVM's lifetime — a second call after the underlying data
+    * changed reuses the old stage silently. A mutating source belongs in
+    * a maintained store (`graft.streaming`), or folds a version stamp
+    * into `path` or `writer`.
+    */
+  def once(path: String, writer: String = "")(write: => Unit): String =
+    lockFor(path).synchronized {
+      if (writers.get(path) != writer) rewrite(path, writer)(write)
+      path
+    }
+
+  /** Run `write` for `path` unconditionally and record `writer` as its
+    * author for [[once]] — for a writer that must always rebuild (a row
+    * that measures the build) at a path [[once]] callers share.
+    */
+  def rewrite(path: String, writer: String)(write: => Unit): String =
+    lockFor(path).synchronized {
+      writers.remove(path)
+      write
+      writers.put(path, writer)
+      path
+    }
+
+  /** path → the writer whose content the path holds ([[once]]). */
+  private val writers = new ConcurrentHashMap[String, String]()
+  private val locks = new ConcurrentHashMap[String, AnyRef]()
+  private def lockFor(path: String): AnyRef =
+    locks.computeIfAbsent(path, _ => new AnyRef)
 
   /** Session-scoped scratch root: every default (caller gave no `stageDir`)
     * stage lives under one directory so [[cleanScratch]] can reclaim them
@@ -48,6 +102,17 @@ private[graft] object StageIO {
   def artifactRoot(spark: SparkSession): String =
     spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
       "/_graft_artifacts"
+
+  /** The name a dataset directory goes by in artifact paths and in the
+    * oracle's `__GRAFT_SF__` placeholder: its basename.
+    */
+  def datasetName(dataDir: String): String = new java.io.File(dataDir).getName
+
+  /** `<artifactRoot>/<tag>/<dataset name>` — the artifact dir the oracle
+    * reads back as `__GRAFT_ART__/<tag>/__GRAFT_SF__`.
+    */
+  def artifactDir(spark: SparkSession, tag: String, dataDir: String): String =
+    s"${artifactRoot(spark)}/$tag/${datasetName(dataDir)}"
 
   /** [[artifactRoot]] as a plain local-filesystem path (no `file:` scheme)
     * — the form a non-Hadoop reader (the DuckDB oracle) consumes. Verify

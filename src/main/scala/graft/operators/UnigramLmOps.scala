@@ -52,14 +52,11 @@ object UnigramLmOps {
     * corpus.
     */
   def stagedVocab(docs: DataFrame, textCol: String,
-      stageDir: Option[String] = None): DataFrame = {
-    val spark = docs.sparkSession
-    val stage = StageIO.resolve(spark, stageDir, "unigram-vocab")
-    docs.select(explode(TextOps.tokensRegex(col(textCol))).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("wcount"))
-      .write.mode("overwrite").parquet(stage)
-    spark.read.parquet(stage)
-  }
+      stageDir: Option[String] = None): DataFrame =
+    StageIO.stage(
+      docs.select(explode(TextOps.tokensRegex(col(textCol))).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("wcount")),
+      stageDir, "unigram-vocab")
 
   /** Seed piece inventory over a (word, wcount) frame: every substring
     * occurrence of length 1..maxPieceLen weighted by word count; ALL

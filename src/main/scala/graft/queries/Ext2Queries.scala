@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.DedupOps
+import graft.operators.{DedupOps, StageIO}
 import org.apache.spark.sql.functions._
 
 /** Round-12 extension inventory — the curation surface past ExtQueries
@@ -83,27 +83,10 @@ object Ext2Queries {
       tag: String, k: Int): org.apache.spark.sql.DataFrame = {
     import graft.operators.{PcaOps, StageIO}
     val emb = Tables.embeddings(s, d)
-    val dir = s"${StageIO.artifactRoot(s)}/$tag/" +
-      new java.io.File(d).getName
-    PcaOps.principalComponents(
+    StageIO.stage(PcaOps.principalComponents(
         PcaOps.gramUpper(emb, "embedding"),
-        PcaOps.dimSums(emb, "embedding"), dim = 64, k = k)
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir)
-  }
-
-  /** Train the 16-merge BPE table to this query's own artifact tag —
-    * the ExtQueries.bpeTrainTo discipline (each consumer trains its OWN
-    * table so queries stay order-independent under Verify).
-    */
-  private def bpeMergesTo(s: org.apache.spark.sql.SparkSession, d: String,
-      tag: String): org.apache.spark.sql.DataFrame = {
-    val dir = s"${graft.operators.StageIO.artifactRoot(s)}/$tag/" +
-      new java.io.File(d).getName
-    graft.operators.BpeOps.train(Tables.documents(s, d), "text",
-        numMerges = 16)
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir)
+        PcaOps.dimSums(emb, "embedding"), dim = 64, k = k).coalesce(1),
+      Some(StageIO.artifactDir(s, tag, d)), tag)
   }
 
   /** Shared x93/x93b output shape: census + exact-rational average +
@@ -156,9 +139,7 @@ object Ext2Queries {
       val n = raw.agg(max("doc_id")).head.getLong(0) + 1
       // staged once — the paragraph plant is a per-row string rebuild
       // the 3 wave filters would re-run per wave
-      val plantStage = graft.operators.StageIO.resolve(s, None, "x80b-plant")
-      plantParas(raw, 4).write.mode("overwrite").parquet(plantStage)
-      val docs = s.read.parquet(plantStage)
+      val docs = StageIO.stage(plantParas(raw, 4), None, "x80b-plant")
       (0L to 2L).foreach { w =>
         ParagraphStream.applyBatch(
           docs.filter(col("doc_id") >= w * n / 3 &&
@@ -187,9 +168,7 @@ object Ext2Queries {
       val clean = graft.operators.StageIO.resolve(s, None, "x141-clean")
       val raw = Tables.documents(s, d)
       val n = raw.agg(max("doc_id")).head.getLong(0) + 1
-      val plantStage = graft.operators.StageIO.resolve(s, None, "x141-plant")
-      plantParas(raw, 4).write.mode("overwrite").parquet(plantStage)
-      val docs = s.read.parquet(plantStage)
+      val docs = StageIO.stage(plantParas(raw, 4), None, "x141-plant")
       (0L to 1L).foreach { w =>
         ParagraphStream.applyBatch(
           docs.filter(col("doc_id") >= w * n / 3 &&
@@ -294,11 +273,10 @@ object Ext2Queries {
           emb.filter(pmod(col("vec_id"), lit(3)) === w),
           "embedding", store, w)
       }
-      val dir = s"${StageIO.artifactRoot(s)}/pca_comps_state/" +
-        new java.io.File(d).getName
-      GramStream.componentsFrom(s, store, dim = 64, k = 8)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
-      PcaOps.project(emb, "vec_id", "embedding", s.read.parquet(dir))
+      PcaOps.project(emb, "vec_id", "embedding", StageIO.stage(
+          GramStream.componentsFrom(s, store, dim = 64, k = 8).coalesce(1),
+          Some(StageIO.artifactDir(s, "pca_comps_state", d)),
+          "pca_comps_state"))
         .orderBy("vec_id", "comp")
     }),
 
@@ -327,12 +305,11 @@ object Ext2Queries {
       GramStream.deleteBatch(
         emb.filter(pmod(col("vec_id"), lit(7)) === 3),
         "embedding", store, 3L)
-      val dir = s"${StageIO.artifactRoot(s)}/pca_comps_del/" +
-        new java.io.File(d).getName
-      GramStream.componentsFrom(s, store, dim = 64, k = 8)
-        .coalesce(1).write.mode("overwrite").parquet(dir)
       PcaOps.project(emb.filter(pmod(col("vec_id"), lit(7)) =!= 3),
-          "vec_id", "embedding", s.read.parquet(dir))
+          "vec_id", "embedding", StageIO.stage(
+            GramStream.componentsFrom(s, store, dim = 64, k = 8).coalesce(1),
+            Some(StageIO.artifactDir(s, "pca_comps_del", d)),
+            "pca_comps_del"))
         .orderBy("vec_id", "comp")
     }),
 
@@ -447,7 +424,7 @@ object Ext2Queries {
       import graft.queries.Det.round4Rat
       val docs = Tables.documents(s, d)
       val counted = BpeOps.tokenCountsPerDoc(docs, "doc_id", "text",
-        bpeMergesTo(s, d, "bpe_merges_fert"))
+        ExtQueries.bpeTrainTo(s, d, "bpe_merges_fert"))
       docs.select(col("doc_id"), col("lang"),
           size(TextOps.tokensRegex(col("text"))).cast("long")
             .as("n_words"),
@@ -873,11 +850,9 @@ object Ext2Queries {
       // (judge r13 #2 — the one cache leak in the suite); StageIO scratch
       // is reclaimed between queries and gives the same
       // compute-once-for-three-consumers shape
-      val stagePath = graft.operators.StageIO.resolve(s, None, "pref-pairs")
-      Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), round4Rat(qn, qd).as("q"))
-        .write.mode("overwrite").parquet(stagePath)
-      val scored = s.read.parquet(stagePath)
+      val scored = StageIO.stage(Tables.documents(s, d)
+        .select(col("doc_id"), col("source"), round4Rat(qn, qd).as("q")),
+        None, "pref-pairs")
       val ext = scored.groupBy("source")
         .agg(max(col("q")).as("qmax"), min(col("q")).as("qmin"))
       val chosen = scored.join(ext, Seq("source"))
@@ -971,13 +946,11 @@ object Ext2Queries {
       // staged, not persist()ed (the x101 discipline; suite-wide cache
       // gate): one tokenize pass shared by all three probes via a
       // scratch parquet round-trip instead of a pinned RDD
-      val trainStage = StageIO.resolve(s, None, "x104-train")
-      docs
+      val train = StageIO.stage(docs
         .filter(!coalesce(col("source").isin(evalSrcs: _*), lit(false)))
         .withColumn("sh", graft.functions.HashExprs
-          .distinctShingles(TextOps.tokens(col("text"))))
-        .write.mode("overwrite").parquet(trainStage)
-      val train = s.read.parquet(trainStage)
+          .distinctShingles(TextOps.tokens(col("text")))),
+        None, "x104-train")
       val bmap = Seq("src18" -> "bench_a", "src19" -> "bench_b",
         "src17" -> "bench_c")
       bmap.map { case (src, b) =>
@@ -1004,11 +977,10 @@ object Ext2Queries {
       // staged, not persist()ed (x101 discipline): labels feed the
       // histogram AND the singleton count — one near-dup pass, no
       // pinned RDD for the suite-wide cache gate to trip on
-      val labStage = StageIO.resolve(s, None, "x105-labels")
-      DedupOps.clusterLabels(DedupOps.jaccardNearDups(
-          Tables.documents(s, d), "text", "doc_id", 0.5))
-        .write.mode("overwrite").parquet(labStage)
-      val labels = s.read.parquet(labStage)
+      val labels = StageIO.stage(
+        DedupOps.clusterLabels(DedupOps.jaccardNearDups(
+          Tables.documents(s, d), "text", "doc_id", 0.5)),
+        None, "x105-labels")
       val hist = labels.groupBy("cluster_id")
         .agg(count(lit(1)).as("cluster_size"))
         .groupBy("cluster_size")
@@ -1084,18 +1056,15 @@ object Ext2Queries {
       val docs = Tables.documents(s, d)
       val evalSrcs = Seq("src17", "src18", "src19")
       // staged, not persist()ed (x101 discipline / suite-wide cache gate)
-      val trainStage = StageIO.resolve(s, None, "x104b-train")
-      docs
+      val train = StageIO.stage(docs
         .filter(!coalesce(col("source").isin(evalSrcs: _*), lit(false)))
         .withColumn("sh", graft.functions.HashExprs
-          .distinctShingles(TextOps.tokens(col("text"))))
-        .write.mode("overwrite").parquet(trainStage)
-      val train = s.read.parquet(trainStage)
-      val sfName = new java.io.File(d).getName
+          .distinctShingles(TextOps.tokens(col("text")))),
+        None, "x104b-train")
       val bmap = Seq("src18" -> "bench_a", "src19" -> "bench_b",
         "src17" -> "bench_c")
       bmap.map { case (src, b) =>
-        val dir = s"${StageIO.artifactRoot(s)}/eval_index_$src/$sfName"
+        val dir = StageIO.artifactDir(s, s"eval_index_$src", d)
         val p = new org.apache.hadoop.fs.Path(dir)
         val fs = p.getFileSystem(s.sessionState.newHadoopConf())
         if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")))
@@ -1133,11 +1102,9 @@ object Ext2Queries {
       // frame feeds both the type census and the token census; a
       // scratch parquet round-trip shares the explode without a pinned
       // RDD (and compresses far below the in-memory row format)
-      val wordStage = graft.operators.StageIO.resolve(s, None, "x108-words")
-      docs.select(wave.as("wave"),
-          explode(split(col("text"), " ")).as("w"))
-        .write.mode("overwrite").parquet(wordStage)
-      val words = s.read.parquet(wordStage)
+      val words = StageIO.stage(docs.select(wave.as("wave"),
+          explode(split(col("text"), " ")).as("w")),
+        None, "x108-words")
       val types = words.groupBy("w").agg(min("wave").as("wave"))
         .groupBy("wave").agg(count(lit(1)).as("n_new_types"))
       val toks = words.groupBy("wave").agg(count(lit(1)).as("n_tokens"))

@@ -107,8 +107,7 @@ object Ext3Queries {
       val emb = Tables.embeddings(s, d)
       val eval = emb.filter(pmod(col("vec_id"), lit(25)) === 0)
       val train = emb.filter(pmod(col("vec_id"), lit(25)) =!= 0)
-      val sfName = new java.io.File(d).getName
-      val dir = s"${StageIO.artifactRoot(s)}/eval_probe_index/$sfName"
+      val dir = StageIO.artifactDir(s, "eval_probe_index", d)
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(s.sessionState.newHadoopConf())
       if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")))
@@ -592,8 +591,7 @@ object Ext3Queries {
     * root, apply from the read-back table.
     */
   def x122Build(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val dir = s"${graft.operators.StageIO.artifactRoot(s)}" +
-      s"/unigram_pieces/${new java.io.File(d).getName}"
+    val dir = graft.operators.StageIO.artifactDir(s, "unigram_pieces", d)
     graft.operators.UnigramLmOps.train(Tables.documents(s, d), "text")
       .coalesce(1).write.mode("overwrite").parquet(dir)
     dir

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.{DedupOps, MultimodalOps, SimilarityOps, TextOps}
+import graft.operators.{DedupOps, MultimodalOps, SimilarityOps, StageIO,
+  TextOps}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
@@ -50,86 +51,64 @@ object ExtQueries {
     * under Verify; the redundancy is a fixture cost, not an operator
     * cost).
     */
-  private def bpeTrainTo(s: org.apache.spark.sql.SparkSession, d: String,
-      tag: String): org.apache.spark.sql.DataFrame = {
-    val dir = s"${graft.operators.StageIO.artifactRoot(s)}" +
-      s"/$tag/${new java.io.File(d).getName}"
-    graft.operators.BpeOps.train(Tables.documents(s, d), "text",
-        numMerges = 16)
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir)
-  }
+  private[queries] def bpeTrainTo(s: org.apache.spark.sql.SparkSession,
+      d: String, tag: String): org.apache.spark.sql.DataFrame =
+    StageIO.stage(graft.operators.BpeOps.train(Tables.documents(s, d),
+        "text", numMerges = 16).coalesce(1),
+      Some(StageIO.artifactDir(s, tag, d)), tag)
 
-  /** [[x54Build]] memoized per (dataset, JVM) — for consumers that need
-    * the ANN artifacts but do NOT claim to measure the build
-    * (x126b/x126c's semantic arm): the first caller in a JVM builds
-    * (overwrite — no stale-artifact leakage, the stagedCorpusState
-    * discipline), later callers reuse the deterministic artifacts. The
+  /** [[x54Build]] memoized per (dataset, JVM) through [[StageIO.once]] —
+    * for consumers that need the ANN artifacts but do NOT claim to
+    * measure the build (x126b/x126c's semantic arm): the first caller
+    * builds, later callers reuse the deterministic artifacts. The
     * x54-family rows keep calling [[x54Build]] directly so their
     * adjudicated composite semantics (train + build + probe in-row) are
-    * untouched; a direct build after the memo is a same-content
-    * overwrite, so interleaving is safe in any order. CONTRACT (the
-    * stagedCorpusState note, advisor r17): the memo key is the full
-    * dataset path but the ARTIFACT path is keyed by basename (the
-    * oracle's `__GRAFT_SF__` templating contract), so one JVM must not
-    * interleave two same-basename datasets from different parents — the
-    * second build overwrites the first's artifacts while the first's
-    * memo entry keeps pointing at them.
+    * untouched. The artifact dir is keyed by dataset BASENAME (the
+    * oracle's `__GRAFT_SF__` templating contract), so the memo's writer
+    * is the full dataset path and a direct build records itself too: a
+    * shared call rebuilds whenever another same-basename dataset wrote
+    * the dir last, in any interleaving.
     */
   def x54BuildShared(s: org.apache.spark.sql.SparkSession, d: String)
-      : String = annBuilt.synchronized {
-    if (annBuilt.contains(d))
-      s"${graft.operators.StageIO.artifactRoot(s)}" +
-        s"/ann_index/${new java.io.File(d).getName}"
-    else { val base = x54Build(s, d); annBuilt += d; base }
-  }
-  private val annBuilt = scala.collection.mutable.Set.empty[String]
+      : String =
+    StageIO.once(StageIO.artifactDir(s, "ann_index", d), d)(x54Build(s, d))
 
   /** x70c's synthesized BMP raster fixture, staged once per
-    * (dataset, JVM) under the artifact root — the
-    * [[graft.operators.RetrievalOps.stagedCorpusState]] discipline
+    * (dataset, JVM) under the artifact root through [[StageIO.once]]
     * (judge r19 #4): fixture synthesis (text → BMP bytes, the row's
     * expensive projection) is shared; the DECODE path the row measures
-    * still runs per row against the staged real bytes. First caller in
-    * a JVM always (re)builds in overwrite mode, so no artifact leaks
-    * across runs; the memo key is the canonical dataset path (the
-    * corpusTag collision rule).
+    * still runs per row against the staged real bytes. The path is keyed
+    * by the canonical dataset path (the corpusTag collision rule).
     */
   private[queries] def x70cStagedAssets(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
-    val tag = graft.operators.RetrievalOps.corpusTag("docs", d)
-    val base = s"${graft.operators.StageIO.artifactRoot(s)}" +
-      s"/raster_assets/$tag"
-    rasterBuilt.synchronized {
-      if (!rasterBuilt.contains(base)) {
-        MultimodalOps.toRasterAssets(Tables.documents(s, d),
-            "doc_id", "text")
-          .write.mode("overwrite").parquet(base)
-        rasterBuilt += base
-      }
-    }
-    s.read.parquet(base)
+    val base = s"${StageIO.artifactRoot(s)}/raster_assets/" +
+      graft.operators.RetrievalOps.corpusTag("docs", d)
+    s.read.parquet(StageIO.once(base)(
+      MultimodalOps.toRasterAssets(Tables.documents(s, d), "doc_id", "text")
+        .write.mode("overwrite").parquet(base)))
   }
-  private val rasterBuilt = scala.collection.mutable.Set.empty[String]
 
   def x54Build(s: org.apache.spark.sql.SparkSession, d: String,
       residual: Boolean = false): String = {
     import graft.operators.AnnIndex
     val emb = Tables.embeddings(s, d)
     val tag = if (residual) "ann_index_res" else "ann_index"
-    val base = s"${graft.operators.StageIO.artifactRoot(s)}" +
-      s"/$tag/${new java.io.File(d).getName}"
-    AnnIndex.init(s, emb.filter(col("vec_id") % 3 === 0),
-      "vec_id", "embedding", base, kCells = 8, m = 16, kCodewords = 64,
-      residual = residual)
-    // ticks 1 and 2 encode against the frozen quantizers into disjoint
-    // batch dirs — independent appends, overlapped (guide §2.6)
-    graft.operators.Par.run(
-      () => AnnIndex.appendBatch(s, emb.filter(col("vec_id") % 3 === 1),
-        "vec_id", "embedding", base, batchId = 1L),
-      () => AnnIndex.appendBatch(s, emb.filter(col("vec_id") % 3 === 2),
-        "vec_id", "embedding", base, batchId = 2L))
-    base
+    val base = StageIO.artifactDir(s, tag, d)
+    // recorded as d's build, so x54BuildShared never serves it for another
+    // same-basename dataset
+    StageIO.rewrite(base, d) {
+      AnnIndex.init(s, emb.filter(col("vec_id") % 3 === 0),
+        "vec_id", "embedding", base, kCells = 8, m = 16, kCodewords = 64,
+        residual = residual)
+      // ticks 1 and 2 encode against the frozen quantizers into disjoint
+      // batch dirs — independent appends, overlapped (guide §2.6)
+      graft.operators.Par.run(
+        () => AnnIndex.appendBatch(s, emb.filter(col("vec_id") % 3 === 1),
+          "vec_id", "embedding", base, batchId = 1L),
+        () => AnnIndex.appendBatch(s, emb.filter(col("vec_id") % 3 === 2),
+          "vec_id", "embedding", base, batchId = 2L))
+    }
   }
 
   /** x54c's build half (public for the bench's marginal split, like
@@ -142,8 +121,7 @@ object ExtQueries {
     import graft.operators.{AnnIndex, StageIO}
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val emb = Tables.embeddings(s, d)
-    val base = s"${StageIO.artifactRoot(s)}" +
-      s"/ann_index_stream/${new java.io.File(d).getName}"
+    val base = StageIO.artifactDir(s, "ann_index_stream", d)
     AnnIndex.init(s, emb.filter(col("vec_id") % 3 === 0),
       "vec_id", "embedding", base, kCells = 8, m = 16, kCodewords = 64)
     def wave(k: Int): Seq[(Long, Seq[Float])] =
@@ -188,8 +166,7 @@ object ExtQueries {
   def x56Build(s: org.apache.spark.sql.SparkSession, d: String): String = {
     import graft.operators.AnnIndex
     val emb = Tables.embeddings(s, d)
-    val base = s"${graft.operators.StageIO.artifactRoot(s)}" +
-      s"/ann_index_attr/${new java.io.File(d).getName}"
+    val base = StageIO.artifactDir(s, "ann_index_attr", d)
     AnnIndex.init(s, emb.filter(col("vec_id") % 3 === 0),
       "vec_id", "embedding", base, kCells = 8, m = 16, kCodewords = 64,
       attrs = Seq("label"))
@@ -613,27 +590,21 @@ object ExtQueries {
       // ONE feature stage (the tokenize+bigram pass) shared by training
       // and scoring — the expensive kernel runs once, everything after
       // reads columns (the x31 staging discipline)
-      val stage = graft.operators.StageIO.resolve(s, None, "x46-features")
-      QualityClassifier.featurize(
+      val feat = StageIO.stage(QualityClassifier.featurize(
           Tables.documents(s, d).select("doc_id", "lang", "text", "n_chars"),
           "text", "n_chars")
-        .drop("text")
-        .write.mode("overwrite").parquet(stage)
-      val feat = s.read.parquet(stage)
+        .drop("text"), None, "x46-features")
       // artifact (not scratch) root: the DuckDB oracle reads this table
       // back AFTER Verify's per-query cleanScratch; warehouse-derived so
       // concurrent drivers (distinct working dirs) cannot collide on a
       // shared fixed path (judge + advisor r9)
-      val wDir = s"${graft.operators.StageIO.artifactRoot(s)}" +
-        s"/quality_model/${new java.io.File(d).getName}"
       // the gate is ORDINAL in the margin (rank by bucketed score), so
       // coarse LBFGS convergence gates identically to a tight fit —
       // every iteration is a job, and 30 buys the boundary
-      QualityClassifier.trainWeakFeaturized(feat, loBps = 5500L,
-          hiBps = 8000L, maxIter = 30)
-        .coalesce(1).write.mode("overwrite").parquet(wDir)
-      val scored = QualityClassifier.scoreFeaturized(feat,
-          s.read.parquet(wDir))
+      val weights = StageIO.stage(QualityClassifier.trainWeakFeaturized(
+          feat, loBps = 5500L, hiBps = 8000L, maxIter = 30).coalesce(1),
+        Some(StageIO.artifactDir(s, "quality_model", d)), "quality_model")
+      val scored = QualityClassifier.scoreFeaturized(feat, weights)
         .select(col("doc_id"), col("lang"), col("score_q"), col("margin"))
       graft.operators.PackingOps.topPctByScore(scored, "lang", "score_q",
           "doc_id", keepNum = 3, keepDen = 10)
@@ -943,11 +914,10 @@ object ExtQueries {
     // SimilarityOps.trainCentroids scaladoc).
     "x14b_sim_ivf_trained" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val centDir = s"${graft.operators.StageIO.artifactRoot(s)}" +
-        s"/ivf_centroids/${new java.io.File(d).getName}"
-      SimilarityOps.trainCentroids(emb, "embedding", k = 4, seed = 42L)
-        .coalesce(1).write.mode("overwrite").parquet(centDir)
-      val cents = s.read.parquet(centDir)
+      val cents = StageIO.stage(
+        SimilarityOps.trainCentroids(emb, "embedding", k = 4, seed = 42L)
+          .coalesce(1),
+        Some(StageIO.artifactDir(s, "ivf_centroids", d)), "ivf_centroids")
       val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
       val qCell = SimilarityOps.assignCentroids(
           emb.filter(col("vec_id") === 0), "vec_id", "embedding", cents)
@@ -1010,11 +980,10 @@ object ExtQueries {
       import graft.operators.PqOps
       val emb = Tables.embeddings(s, d)
       val m = 16; val kcw = 64
-      val cbDir = s"${graft.operators.StageIO.artifactRoot(s)}" +
-        s"/pq_codebook/${new java.io.File(d).getName}"
-      PqOps.pqTrain(emb, "vec_id", "embedding", m, kcw, iters = 2)
-        .coalesce(1).write.mode("overwrite").parquet(cbDir)
-      val cb = s.read.parquet(cbDir)
+      val cb = StageIO.stage(
+        PqOps.pqTrain(emb, "vec_id", "embedding", m, kcw, iters = 2)
+          .coalesce(1),
+        Some(StageIO.artifactDir(s, "pq_codebook", d)), "pq_codebook")
       // scan-local packed encode (PqOpsSpec proves it bit-equal to the
       // join-form pqEncode the oracle mirrors), unpacked for the ADC join
       // — the row exercises the STORED packed shape end to end
@@ -1135,11 +1104,9 @@ object ExtQueries {
       import graft.queries.Det.round4RatBig
       val docs = Tables.documents(s, d)
       val nDocs = docs.count() // 1-action corpus size (metadata-cheap)
-      val stage = graft.operators.StageIO.resolve(s, None, "x31-tok")
-      docs.select(col("doc_id"),
-          explode(array_distinct(TextOps.tokens(col("text")))).as("tok"))
-        .write.mode("overwrite").parquet(stage)
-      val tok = s.read.parquet(stage)
+      val tok = StageIO.stage(docs.select(col("doc_id"),
+          explode(array_distinct(TextOps.tokens(col("text")))).as("tok")),
+        None, "x31-tok")
       val dfCounts = tok.groupBy("tok").agg(count(lit(1)).as("df"))
       tok.join(dfCounts, "tok")
         .groupBy("doc_id")
@@ -1165,10 +1132,8 @@ object ExtQueries {
       val nt = size(TextOps.tokens(col("text"))).cast("long")
       val (qNum, qDen) = TextOps.qualityRat(col("text"), col("n_chars"))
       val docs = Tables.documents(s, d)
-      val stage = graft.operators.StageIO.resolve(s, None, "x30-scored")
-      docs.select(col("doc_id"), col("lang"), round4Rat(qNum, qDen).as("quality"))
-        .write.mode("overwrite").parquet(stage)
-      val scored = s.read.parquet(stage)
+      val scored = StageIO.stage(docs.select(col("doc_id"), col("lang"),
+        round4Rat(qNum, qDen).as("quality")), None, "x30-scored")
       val pairs = DedupOps.jaccardNearDups(docs, "text", "doc_id", 0.5)
       DedupOps.survivorsByScore(scored, pairs, "doc_id", "quality")
         .orderBy("doc_id")
@@ -1287,14 +1252,12 @@ object ExtQueries {
     "x42_bigram_surprise" -> ((s, d) => {
       import graft.queries.Det.round4Rat
       val toks = TextOps.tokens(col("text"))
-      val stage = graft.operators.StageIO.resolve(s, None, "x42-bg")
-      Tables.documents(s, d).filter(size(toks) >= 2)
+      val bg = StageIO.stage(Tables.documents(s, d).filter(size(toks) >= 2)
         .select(col("doc_id"), explode(TextOps.bigrams(toks)).as("bg"))
         .select(col("doc_id"),
           TextOps.md5Key60(col("bg")).as("hb"),
-          TextOps.md5Key60(substring_index(col("bg"), " ", 1)).as("h1"))
-        .write.mode("overwrite").parquet(stage)
-      val bg = s.read.parquet(stage)
+          TextOps.md5Key60(substring_index(col("bg"), " ", 1)).as("h1")),
+        None, "x42-bg")
       val bits = (c: org.apache.spark.sql.Column) => length(bin(c)).cast("long")
       val bCounts = bg.groupBy("hb").agg(count(lit(1)).as("bc"))
       val uCounts = bg.groupBy("h1").agg(count(lit(1)).as("uc"))
@@ -1346,13 +1309,13 @@ object ExtQueries {
       val docs = Tables.documents(s, d)
       val nBits = java.lang.Long.toBinaryString(docs.count()).length.toLong
       val bits = (c: org.apache.spark.sql.Column) => length(bin(c)).cast("long")
-      val stage = graft.operators.StageIO.resolve(s, None, "x43-tf")
-      docs.select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-        .select(col("doc_id"), col("tok"),
-          TextOps.md5Key60(col("tok")).as("hk"), col("tf"))
-        .write.mode("overwrite").parquet(stage)
-      val tf = s.read.parquet(stage)
+      val tf = StageIO.stage(
+        docs.select(col("doc_id"),
+            explode(TextOps.tokens(col("text"))).as("tok"))
+          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
+          .select(col("doc_id"), col("tok"),
+            TextOps.md5Key60(col("tok")).as("hk"), col("tf")),
+        None, "x43-tf")
       val dfT = tf.groupBy("hk").agg(count(lit(1)).as("df"))
       val scored = tf.join(dfT, "hk")
         .withColumn("score",
@@ -1661,10 +1624,9 @@ object ExtQueries {
       val docs = Tables.documents(s, d)
       // staged once — the x78b argument: 3 wave filters over a lazy
       // pair frame re-run the near-dup join 3x
-      val pairStage = graft.operators.StageIO.resolve(s, None, "x58b-pairs")
-      DedupOps.jaccardNearDups(docs, "text", "doc_id", 0.5)
-        .write.mode("overwrite").parquet(pairStage)
-      val pairs = s.read.parquet(pairStage)
+      val pairs = StageIO.stage(
+        DedupOps.jaccardNearDups(docs, "text", "doc_id", 0.5),
+        None, "x58b-pairs")
       val store = s"${graft.operators.StageIO.resolve(s, None, "x58b-cc")}/labels"
       (0 until 3).foreach { k =>
         graft.streaming.ClusterStream.applyBatch(
@@ -2045,17 +2007,15 @@ object ExtQueries {
     "x74b_sq_from_bounds" -> ((s, d) => {
       import graft.queries.Det.round4Rat
       val emb = Tables.embeddings(s, d)
-      val dir = s"${graft.operators.StageIO.artifactRoot(s)}" +
-        s"/sq_bounds/${new java.io.File(d).getName}"
-      SimilarityOps.scalarBounds(
-          emb.filter(col("vec_id") % 3 === 0), "embedding")
-        .coalesce(1).write.mode("overwrite").parquet(dir)
+      val bounds = StageIO.stage(SimilarityOps.scalarBounds(
+          emb.filter(col("vec_id") % 3 === 0), "embedding").coalesce(1),
+        Some(StageIO.artifactDir(s, "sq_bounds", d)), "sq_bounds")
       val queries = emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
       val truth = SimilarityOps.topKBatch(emb, "vec_id", "embedding",
         queries, "qid", "qv", 5, excludeSelf = true)
       val sq = SimilarityOps.scalarQuantizeWith(emb, "vec_id",
-        "embedding", "sv", 8, s.read.parquet(dir))
+        "embedding", "sv", 8, bounds)
       val approx = SimilarityOps.topKBatch(sq, "vec_id", "sv",
         queries, "qid", "qv", 5, excludeSelf = true)
       SimilarityOps.recallAtK(truth, approx, "qid", "vec_id")
@@ -2179,10 +2139,9 @@ object ExtQueries {
       // staged once: each wave filters the PAIR frame, and an unstaged
       // lazy frame re-runs the whole inverted-index near-dup join per
       // wave (3x the query's dominant kernel for identical rows)
-      val pairStage = graft.operators.StageIO.resolve(s, None, "x78b-pairs")
-      DedupOps.jaccardNearDups(docs, "text", "doc_id", 0.5)
-        .write.mode("overwrite").parquet(pairStage)
-      val pairs = s.read.parquet(pairStage)
+      val pairs = StageIO.stage(
+        DedupOps.jaccardNearDups(docs, "text", "doc_id", 0.5),
+        None, "x78b-pairs")
       val store = s"${graft.operators.StageIO.resolve(s, None, "x78b-cc")}/labels"
       (0 until 3).foreach { k =>
         graft.streaming.ClusterStream.applyBatch(

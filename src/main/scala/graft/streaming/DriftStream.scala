@@ -103,12 +103,13 @@ object DriftStream {
     // two consumers, and two lazy instances of this subtree would
     // re-aggregate the reference corpus and re-merge the log twice (the
     // distributionDrift discipline — it stages for the same reason)
-    val stage = graft.operators.StageIO.resolve(spark, None, "drift-live")
-    ref.join(cur, col("_k1") <=> col("_k2"), "full_outer")
-      .select(coalesce(col("c1"), lit(0L)).as("c1"),
-        coalesce(col("c2"), lit(0L)).as("c2"))
-      .write.mode("overwrite").parquet(s"$stage/counts")
-    PipelineOps.driftOverCountPairs(spark.read.parquet(s"$stage/counts"))
+    import graft.operators.StageIO
+    PipelineOps.driftOverCountPairs(StageIO.stage(
+      ref.join(cur, col("_k1") <=> col("_k2"), "full_outer")
+        .select(coalesce(col("c1"), lit(0L)).as("c1"),
+          coalesce(col("c2"), lit(0L)).as("c2")),
+      Some(StageIO.resolve(spark, None, "drift-live") + "/counts"),
+      "counts"))
   }
 
   /** Fold the whole log into a single batch partition keyed by the max
