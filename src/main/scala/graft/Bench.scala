@@ -283,8 +283,10 @@ object Bench {
   /** One timed query: cold/steady wall, and per-run deltas of every
     * channel — GC ms, used heap after steady, disk read/write/cancelled
     * MB, JVM allocation MB, whole-box busy + iowait CPU sec, own CPU
-    * sec — plus the system dirty KB and 1-min loadavg at query start
-    * and the wall-clock start.
+    * sec, shuffle MB, Janino compiles (generated-class cache misses:
+    * a steady run that compiles is paying codegen again) — plus the
+    * system dirty KB and 1-min loadavg at query start and the wall-clock
+    * start.
     */
   private case class Timing(name: String, cold: Double, steady: Double,
     gcCold: Long, gcSteady: Long, heapMb: Double,
@@ -297,6 +299,7 @@ object Bench {
     selfCpuCold: Double, selfCpuSteady: Double,
     shufRdCold: Double, shufRdSteady: Double,
     shufWrCold: Double, shufWrSteady: Double,
+    compilesCold: Long, compilesSteady: Long,
     dirtyStartKb: Long, loadavgStart: Double, wallStart: Long,
     // any run of this timing threw — its walls are failure-path noops
     // (a query that dies in 10 ms would otherwise WIN the best-of
@@ -432,6 +435,7 @@ object Bench {
           val (bc0, bw0) = procStatCpu()
           val sc0 = procSelfCpu()
           val sr0 = shufReadBytes.get(); val sw0 = shufWriteBytes.get()
+          val cg0 = Telemetry.codegenCompiles()
           val t0 = System.nanoTime()
           try run() catch {
             case e: Throwable =>
@@ -441,6 +445,7 @@ object Bench {
               System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           }
           val wall = (System.nanoTime() - t0) / 1e9
+          val compiles = Telemetry.codegenCompiles() - cg0
           val (bc1, bw1) = procStatCpu()
           // listener events drain asynchronously; give trailing stage
           // completions a beat so the shuffle deltas land in THIS run
@@ -455,7 +460,8 @@ object Bench {
             math.max(0L, bw1 - bw0) / 100.0,
             math.max(0L, procSelfCpu() - sc0) / 100.0,
             math.max(0L, shufReadBytes.get() - sr0) / 1e6,
-            math.max(0L, shufWriteBytes.get() - sw0) / 1e6)
+            math.max(0L, shufWriteBytes.get() - sw0) / 1e6,
+            compiles)
         }
         // single-run passes time steady only; cold channels read NaN/-1
         // and are skipped by the best-of assembly
@@ -472,6 +478,7 @@ object Bench {
           cd.map(_._9).getOrElse(Double.NaN), st._9,
           cd.map(_._10).getOrElse(Double.NaN), st._10,
           cd.map(_._11).getOrElse(Double.NaN), st._11,
+          cd.map(_._12).getOrElse(-1L), st._12,
           dirty0, load0, wallStart, failed = anyRunFailed,
           planSig = lastPlanSig.getOrElse(""))
       }
@@ -634,7 +641,8 @@ object Bench {
             ioCold = c.ioCold, ioWrCold = c.ioWrCold, ioCwCold = c.ioCwCold,
             allocCold = c.allocCold, boxCpuCold = c.boxCpuCold,
             boxIowaitCold = c.boxIowaitCold, selfCpuCold = c.selfCpuCold,
-            shufRdCold = c.shufRdCold, shufWrCold = c.shufWrCold)
+            shufRdCold = c.shufRdCold, shufWrCold = c.shufWrCold,
+            compilesCold = c.compilesCold)
           // no cold-measuring pass saw this query (can't happen in the
           // standard protocol; guards SPARK_GRAFT_ONLY edge uses)
           case None => w.copy(cold = w.steady, gcCold = w.gcSteady,
@@ -642,7 +650,7 @@ object Bench {
             ioCwCold = w.ioCwSteady, allocCold = w.allocSteady,
             boxCpuCold = w.boxCpuSteady, boxIowaitCold = w.boxIowaitSteady,
             selfCpuCold = w.selfCpuSteady, shufRdCold = w.shufRdSteady,
-            shufWrCold = w.shufWrSteady)
+            shufWrCold = w.shufWrSteady, compilesCold = w.compilesSteady)
         }
       }
 
@@ -719,7 +727,7 @@ object Bench {
       val skippedJson = budgetSkipped.sorted
         .map("\"" + _ + "\"").mkString("[", ",", "]")
       val json =
-        s"""{"metric":"total","value":$totalSteady,"unit":"sec","partial":$partial,"best_of":$numPasses,"passes_run":${passes.size},"elapsed_sec":$elapsedSec,"budget_sec":$budgetSec,"budget_skipped":$skippedJson,"queries":${fmt(_.steady.toString)},"queries_cold":${fmt(_.cold.toString)},"total_cold":$totalCold,"gc_ms":${fmt(_.gcSteady.toString)},"gc_ms_cold":${fmt(_.gcCold.toString)},"heap_mb":${fmt(_.heapMb.toString)},"io_read_mb":${fmt(_.ioSteady.toString)},"io_read_mb_cold":${fmt(_.ioCold.toString)},"io_write_mb":${fmt(_.ioWrSteady.toString)},"io_write_mb_cold":${fmt(_.ioWrCold.toString)},"io_cancelled_write_mb":${fmt(_.ioCwSteady.toString)},"alloc_mb":${fmt(_.allocSteady.toString)},"alloc_mb_cold":${fmt(_.allocCold.toString)},"box_cpu_sec":${fmt(_.boxCpuSteady.toString)},"box_cpu_sec_cold":${fmt(_.boxCpuCold.toString)},"box_iowait_sec":${fmt(_.boxIowaitSteady.toString)},"self_cpu_sec":${fmt(_.selfCpuSteady.toString)},"self_cpu_sec_cold":${fmt(_.selfCpuCold.toString)},"shuffle_read_mb":${fmt(_.shufRdSteady.toString)},"shuffle_read_mb_cold":${fmt(_.shufRdCold.toString)},"shuffle_write_mb":${fmt(_.shufWrSteady.toString)},"shuffle_write_mb_cold":${fmt(_.shufWrCold.toString)},"loadavg_start":${fmt(_.loadavgStart.toString)},"dirty_kb_start":${fmt(_.dirtyStartKb.toString)},"plan_nodes":${fmt(r => "\"" + r.planSig + "\"")},"build_sec":$buildsJson,"idle_gate":$gatesJson,"runs":$runsJson,"wall_start_ms":${fmt(_.wallStart.toString)},"sentinel":$sentinelJson,"failed":$failedJson,"flags":$flagsJson,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":$totalSteady,"unit":"sec","partial":$partial,"best_of":$numPasses,"passes_run":${passes.size},"elapsed_sec":$elapsedSec,"budget_sec":$budgetSec,"budget_skipped":$skippedJson,"queries":${fmt(_.steady.toString)},"queries_cold":${fmt(_.cold.toString)},"total_cold":$totalCold,"gc_ms":${fmt(_.gcSteady.toString)},"gc_ms_cold":${fmt(_.gcCold.toString)},"heap_mb":${fmt(_.heapMb.toString)},"io_read_mb":${fmt(_.ioSteady.toString)},"io_read_mb_cold":${fmt(_.ioCold.toString)},"io_write_mb":${fmt(_.ioWrSteady.toString)},"io_write_mb_cold":${fmt(_.ioWrCold.toString)},"io_cancelled_write_mb":${fmt(_.ioCwSteady.toString)},"alloc_mb":${fmt(_.allocSteady.toString)},"alloc_mb_cold":${fmt(_.allocCold.toString)},"box_cpu_sec":${fmt(_.boxCpuSteady.toString)},"box_cpu_sec_cold":${fmt(_.boxCpuCold.toString)},"box_iowait_sec":${fmt(_.boxIowaitSteady.toString)},"self_cpu_sec":${fmt(_.selfCpuSteady.toString)},"self_cpu_sec_cold":${fmt(_.selfCpuCold.toString)},"shuffle_read_mb":${fmt(_.shufRdSteady.toString)},"shuffle_read_mb_cold":${fmt(_.shufRdCold.toString)},"shuffle_write_mb":${fmt(_.shufWrSteady.toString)},"shuffle_write_mb_cold":${fmt(_.shufWrCold.toString)},"codegen_compiles":${fmt(_.compilesSteady.toString)},"codegen_compiles_cold":${fmt(_.compilesCold.toString)},"loadavg_start":${fmt(_.loadavgStart.toString)},"dirty_kb_start":${fmt(_.dirtyStartKb.toString)},"plan_nodes":${fmt(r => "\"" + r.planSig + "\"")},"build_sec":$buildsJson,"idle_gate":$gatesJson,"runs":$runsJson,"wall_start_ms":${fmt(_.wallStart.toString)},"sentinel":$sentinelJson,"failed":$failedJson,"flags":$flagsJson,"sf":"$sfDir"}"""
       Seq(stamped, fixed).foreach { out =>
         // write-then-atomic-move: a kill mid-write must not leave a
         // truncated artifact under the name the driver reads

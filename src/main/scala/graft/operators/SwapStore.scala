@@ -16,22 +16,30 @@ import org.apache.spark.sql.SparkSession
   *
   * The rename-aside order:
   *
-  *   write complete replacement at `dir.next`
+  *   write complete replacement at `dir.writing`
+  *   → rename(dir.writing → dir.next)
   *   → rename(dir → dir.old)   (the live store is renamed ASIDE, never
   *                              deleted before its replacement is live)
   *   → rename(dir.next → dir)
   *   → delete(dir.old)
   *
-  * At every instant the complete store exists under exactly one of
-  * `dir` / `dir.next`, so [[repair]] can always finish an interrupted
-  * swap:
+  * `dir.next` only ever appears complete: a store's FIRST write has no
+  * live `dir` beside it, so a partial `.next` would be promoted by the
+  * next [[repair]] (after a crash mid-write) or a concurrent reader's as
+  * if it were a finished swap.
+  *
+  * Once a replacement has reached `dir.next`, the complete store exists
+  * under exactly one of `dir` / `dir.next` at every instant, so
+  * [[repair]] can always finish an interrupted swap:
   *   - `dir` missing + `dir.next` present ⇒ the crash hit between the
   *     renames and the REPLACEMENT is the complete copy — promote it;
   *   - `dir` present ⇒ authoritative (a replacement is only renamed in
   *     after `dir` moved aside); a stray `dir.old` from a crash before
-  *     the final delete is dropped, and a partial `dir.next` beside a
-  *     live `dir` is left for the next [[replace]] to delete and
-  *     rewrite (readers never look at `.next`).
+  *     the final delete is dropped, and a stray `dir.next` beside a live
+  *     `dir` is left for the next [[replace]] to delete (readers never
+  *     look at `.next`);
+  *   - a partial `dir.writing` from a crash mid-write is never promoted;
+  *     the next [[replace]] (or [[reset]]) deletes it.
   *
   * A rename or delete that fails (throws, or returns false) before the
   * promotion leaves one of those states, and the failure propagates. The
@@ -79,21 +87,26 @@ object SwapStore {
   }
 
   /** Replace `dir` crash-safely: `write` materializes the COMPLETE
-    * replacement at the `.next` path it receives, then the rename-aside
-    * swap promotes it. Runs [[repair]] first so a crashed prior swap is
-    * finished before this one starts (its stranded `.next` would
-    * otherwise be deleted as stale scratch).
+    * replacement at the scratch path it receives, which becomes `.next`
+    * once `write` returns; then the rename-aside swap promotes it. Runs
+    * [[repair]] first so a crashed prior swap is finished before this one
+    * starts (its stranded `.next` would otherwise be deleted as stale
+    * scratch).
     */
   def replace(spark: SparkSession, dir: String)(write: String => Unit): Unit = {
     val fs = fsOf(spark, dir)
     repair(fs, dir)
     val p = new Path(dir)
+    val writing = new Path(dir + ".writing")
     val next = new Path(dir + ".next")
     val old = new Path(dir + ".old")
-    // a stale `.next` would leak its partitions into this replacement,
-    // and a stale `.old` would make the rename below nest `dir` inside it
+    // a stale `.writing` would leak its partitions into this replacement,
+    // a stale `.next` would make the rename below nest the replacement
+    // inside it, and a stale `.old` would do the same to `dir`
+    drop(fs, writing)
     drop(fs, next)
-    write(next.toString)
+    write(writing.toString)
+    require(fs.rename(writing, next), s"swap stage failed: $writing -> $next")
     drop(fs, old)
     if (fs.exists(p))
       require(fs.rename(p, old), s"compaction swap failed: $p -> $old")
@@ -107,13 +120,15 @@ object SwapStore {
   private def drop(fs: FileSystem, q: Path): Unit =
     if (fs.exists(q)) require(fs.delete(q, true), s"swap cleanup failed: $q")
 
-  /** Remove a store AND its swap-state siblings (`.next` / `.old`) — the
+  /** Remove a store AND its swap-state siblings (`.writing` / `.next` /
+    * `.old`) — the
     * reset an explicit rebuild needs: deleting only `dir` would let a
     * later [[repair]] promote a stranded pre-reset `.next`, resurrecting
     * the data the rebuild meant to discard.
     */
   def reset(spark: SparkSession, dir: String): Unit = {
     val fs = fsOf(spark, dir)
-    Seq(dir, dir + ".next", dir + ".old").foreach(d => drop(fs, new Path(d)))
+    Seq(dir, dir + ".writing", dir + ".next", dir + ".old")
+      .foreach(d => drop(fs, new Path(d)))
   }
 }

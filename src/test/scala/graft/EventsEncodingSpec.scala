@@ -30,8 +30,9 @@ class EventsEncodingSpec extends AnyFunSuite {
   private def writeDir(): String =
     Files.createTempDirectory("graft-events-enc").toString
 
-  private def normalizedTs(dir: String): Map[Long, Long] = {
-    val df = Tables.events(spark, dir)
+  private def normalizedTs(dir: String,
+      session: org.apache.spark.sql.SparkSession = spark): Map[Long, Long] = {
+    val df = Tables.events(session, dir)
     assert(df.schema("ts").dataType == TimestampType,
       s"Tables.events must yield TimestampType, got ${df.schema("ts").dataType}")
     // the exact call that broke in round 10 must analyze and run
@@ -57,12 +58,14 @@ class EventsEncodingSpec extends AnyFunSuite {
       .select(col("event_id"),
         timestamp_micros(col("us")).cast(TimestampNTZType).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    // this JVM's test session leaves inferTimestampNTZType at default, so
-    // the raw read must surface NTZ — i.e. this test exercises the
-    // defensive cast branch, not the GraftSession config.
-    assert(Tables.load(spark, dir, "events").schema("ts").dataType == TimestampNTZType)
+    // a child session with Spark's default NTZ inference, which
+    // GraftSession turns off: the raw read must surface NTZ — i.e. this
+    // test exercises the defensive cast branch, not the GraftSession config.
+    val ntz = spark.newSession()
+    ntz.conf.set("spark.sql.parquet.inferTimestampNTZType", "true")
+    assert(Tables.load(ntz, dir, "events").schema("ts").dataType == TimestampNTZType)
     // session TZ is UTC: NTZ→TIMESTAMP cast is value-preserving
-    assert(normalizedTs(dir) == rowsUs.toMap)
+    assert(normalizedTs(dir, ntz) == rowsUs.toMap)
   }
 
   test("tz-aware µs (TIMESTAMP) encoding passes through unchanged") {

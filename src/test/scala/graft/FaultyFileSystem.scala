@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The local filesystem under the `faulty://` scheme, with one injectable
   * fault: the Nth `rename` or `delete` that touches a watched store dir
-  * (`dir`, `dir.next` or `dir.old`, as source or destination) throws, or
+  * (`dir`, `dir.next` or `dir.old`, as source or destination — or, with
+  * the `*Under` forms, any path under `dir` or a sibling) throws, or
   * returns `false` without doing anything. Every other call, and every
   * call outside an [[FaultyFileSystem.inject]] / [[FaultyFileSystem.record]]
   * block, goes straight to the local filesystem.
@@ -45,8 +46,8 @@ object FaultyFileSystem {
   /** The call runs normally (used with a `before` action). */
   case object Proceeds extends Fault
 
-  private final case class Plan(watched: Set[String], at: Int, fault: Fault,
-      before: () => Unit) {
+  private final case class Plan(watched: String => Boolean, at: Int,
+      fault: Fault, before: () => Unit) {
     val log = scala.collection.mutable.ArrayBuffer.empty[String]
   }
 
@@ -58,11 +59,19 @@ object FaultyFileSystem {
 
   private def key(p: Path): String = p.toUri.getPath.stripSuffix("/")
 
-  private def watchedOf(dirs: Seq[String]): Set[String] =
+  private def watchedOf(dirs: Seq[String]): String => Boolean =
     dirs.flatMap { d =>
       val k = key(new Path(d))
       Seq(k, s"$k.next", s"$k.old")
     }.toSet
+
+  /** Every path whose name starts with `dir`'s: the store, its swap
+    * siblings and everything written inside them.
+    */
+  private def under(dir: String): String => Boolean = {
+    val k = key(new Path(dir))
+    _.startsWith(k)
+  }
 
   private def intercept(call: String, paths: Seq[Path])(
       run: => Boolean): Boolean = {
@@ -94,6 +103,10 @@ object FaultyFileSystem {
   def record(dirs: Seq[String])(body: => Unit): Seq[String] =
     armed(Plan(watchedOf(dirs), 0, Proceeds, () => ()))(body)._2
 
+  /** [[record]], watching every call under `dir` and its siblings. */
+  def recordUnder(dir: String)(body: => Unit): Seq[String] =
+    armed(Plan(under(dir), 0, Proceeds, () => ()))(body)._2
+
   /** Run `body` with `fault` on its `n`th (1-based) watched call, after
     * running `before`. The plan disarms as it fires, so `before` may
     * touch the watched dirs itself.
@@ -101,4 +114,10 @@ object FaultyFileSystem {
   def inject[T](dirs: Seq[String], n: Int, fault: Fault,
       before: () => Unit = () => ())(body: => T): T =
     armed(Plan(watchedOf(dirs), n, fault, before))(body)._1
+
+  /** [[inject]], counting every call under `dir` and its siblings —
+    * the ones a store's writer makes inside its replacement too.
+    */
+  def injectUnder[T](dir: String, n: Int, fault: Fault)(body: => T): T =
+    armed(Plan(under(dir), n, fault, () => ()))(body)._1
 }

@@ -4,10 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared session for the whole forked test JVM (sbt Test/fork := true).
   * Suites must NOT stop it.
+  *
+  * Built from [[GraftSession.builder]], so tests run with the engine's own
+  * config. What differs is only what a test JVM needs: 8 cores whatever
+  * `SPARK_GRAFT_CPUS` says, and a pid-unique warehouse.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    sys.props.put("SPARK_GRAFT_CPUS_OVERRIDE", "8")
     // JVM-private warehouse: StageIO scratch/artifact roots derive from
     // warehouse.dir, so sharing the repo-default `spark-warehouse` with a
     // concurrently running Verify/Bench process lets that process's
@@ -23,16 +26,8 @@ object SparkTestSession {
       import scala.reflect.io.Directory
       new Directory(new java.io.File(wh)).deleteRecursively()
     }
-    SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    GraftSession.builder("graft-test", "8")
       .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
   }
   val sf0001 = "/root/testdata/sf0.001"

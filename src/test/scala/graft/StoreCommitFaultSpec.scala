@@ -202,36 +202,55 @@ class StoreCommitFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
       b => ParagraphStream.compact(spark, s"$b/h"),
       b => rows(s"$b/h") :+ exists(s"$b/h/_del")))
 
+  /** Seeds `s` once, records the calls its no-fault run makes — the swap
+    * calls, or with `under` every call under its (single) store dir,
+    * including those its writer makes inside the replacement — and
+    * checks repair + replay after each call × fault.
+    */
+  private def checkFaults(s: Store, under: Boolean = false): Unit = {
+    val template = freshDir()
+    s.seed(uri(template))
+    val clean = uri(copyOf(template))
+    val calls =
+      if (under) FaultyFileSystem.recordUnder(s.dirs(clean).head)(s.op(clean))
+      else FaultyFileSystem.record(s.dirs(clean))(s.op(clean))
+    val expected = s.read(clean)
+    val shown = calls.map(
+      _.replace(clean.stripPrefix(s"${FaultyFileSystem.scheme}://"), ""))
+    assert(calls.nonEmpty, s"${s.name} made no swap call")
+    info(s"fault points: ${shown.mkString("; ")}")
+    val failures = for {
+      (call, i) <- shown.zipWithIndex
+      fault <- Seq(Throws, ReturnsFalse)
+      b = uri(copyOf(template))
+      problem <- Try {
+        val returned = Try(
+          if (under) FaultyFileSystem.injectUnder(s.dirs(b).head, i + 1, fault)(s.op(b))
+          else FaultyFileSystem.inject(s.dirs(b), i + 1, fault)(s.op(b))).isSuccess
+        s.dirs(b).foreach(SwapStore.repair(spark, _))
+        if (returned && s.read(b) != expected)
+          Some("returned normally but the repaired store differs")
+        else {
+          s.op(b)
+          if (s.read(b) != expected) Some("repair + replay differs") else None
+        }
+      }.fold(e => Some("repair + replay threw " +
+        e.toString.linesIterator.next().take(160)), identity)
+    } yield s"$fault at call ${i + 1} ($call): $problem"
+    assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+  }
+
   stores.foreach { s =>
     test(s"${s.name}: repair + replay after any swap fault equals the no-fault store") {
-      val template = freshDir()
-      s.seed(uri(template))
-      val clean = uri(copyOf(template))
-      val calls = FaultyFileSystem.record(s.dirs(clean))(s.op(clean))
-      val expected = s.read(clean)
-      val shown = calls.map(
-        _.replace(clean.stripPrefix(s"${FaultyFileSystem.scheme}://"), ""))
-      assert(calls.nonEmpty, s"${s.name} made no swap call")
-      info(s"fault points: ${shown.mkString("; ")}")
-      val failures = for {
-        (call, i) <- shown.zipWithIndex
-        fault <- Seq(Throws, ReturnsFalse)
-        b = uri(copyOf(template))
-        problem <- Try {
-          val returned = Try(FaultyFileSystem.inject(s.dirs(b), i + 1, fault)(
-            s.op(b))).isSuccess
-          s.dirs(b).foreach(SwapStore.repair(spark, _))
-          if (returned && s.read(b) != expected)
-            Some("returned normally but the repaired store differs")
-          else {
-            s.op(b)
-            if (s.read(b) != expected) Some("repair + replay differs") else None
-          }
-        }.fold(e => Some("repair + replay threw " +
-          e.toString.linesIterator.next().take(160)), identity)
-      } yield s"$fault at swap call ${i + 1} ($call): $problem"
-      assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
+      checkFaults(s)
     }
+  }
+
+  // the first write has no live store beside it: a crash inside the
+  // writer must leave nothing that repair would promote
+  test("ClusterStream.applyBatch (init an absent store): repair + replay " +
+      "after a fault inside the first write equals the no-fault store") {
+    checkFaults(stores.head, under = true)
   }
 
   test("ClusterStream: a promote lost to a concurrent reader's repair is " +
