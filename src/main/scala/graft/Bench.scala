@@ -39,149 +39,6 @@ object Bench {
       ()
     }
   }
-  /** Cumulative GC time (ms) across all collector beans. Per-query deltas
-    * of this are the memory-side telemetry the r10 verdict asked for: the
-    * sentinel series proved CPU contention innocent for the remaining
-    * in-suite inflation (x24b/x29/x32), so the discriminating signal is
-    * whether those queries' wall time is GC time.
-    */
-  private def gcMs(): Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-      .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
-  private def heapMb(): Double =
-    java.lang.management.ManagementFactory.getMemoryMXBean
-      .getHeapMemoryUsage.getUsed / 1e6
-
-  /** Cumulative bytes ALLOCATED by all live JVM threads
-    * (`com.sun.management.ThreadMXBean.getThreadAllocatedBytes`) — the
-    * allocation-rate channel the r12 verdict asked for: the driver
-    * artifact's inflated family carried 5–20× used-heap and a 24 s GC
-    * spike with every environment channel flat, i.e. the shape of an
-    * allocation-heavy query under a loaded collector. Per-run deltas of
-    * this separate "the query allocated more" (a plan/kernel regression
-    * — alloc delta moves with wall time) from "the same allocations
-    * collected slower" (ambient pressure — alloc flat, wall inflated).
-    * Known epsilon: a thread that dies between samples takes its
-    * counter with it (Spark's executor pool is long-lived, so the
-    * undercount is edge-case, not systematic). -1 where the JDK doesn't
-    * expose the sun extension; deltas then read 0.
-    */
-  private val threadMx = java.lang.management.ManagementFactory.getThreadMXBean
-  private def allocatedBytes(): Long = threadMx match {
-    case tm: com.sun.management.ThreadMXBean =>
-      try {
-        if (!tm.isThreadAllocatedMemoryEnabled)
-          tm.setThreadAllocatedMemoryEnabled(true)
-        tm.getThreadAllocatedBytes(tm.getAllThreadIds).filter(_ > 0L).sum
-      } catch { case _: Throwable => -1L }
-    case _ => -1L
-  }
-
-  /** Whole-box CPU jiffies from `/proc/stat`'s aggregate `cpu` line:
-    * (busy = user+nice+system+irq+softirq+steal, iowait). THE machine-
-    * wide contention channel (judge r12 #1): the 0.15 s sentinel is too
-    * small to feel a co-tenant that a 30 s shuffle query starves under,
-    * but the box's busy-jiffy delta across that query's run is exactly
-    * the co-tenant's footprint plus our own — and our own share is
-    * recorded separately from `/proc/self/stat`, so
-    * `box_cpu − self_cpu ≈ everyone else`. Jiffies are USER_HZ = 100/s
-    * on Linux; reported as seconds. (-1, -1) where /proc is missing.
-    */
-  private def procStatCpu(): (Long, Long) =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try src.getLines().collectFirst {
-        case l if l.startsWith("cpu ") =>
-          val f = l.trim.split("\\s+").drop(1).map(_.toLong)
-          // user nice system idle iowait irq softirq steal
-          val busy = f(0) + f(1) + f(2) +
-            (if (f.length > 5) f(5) else 0L) +
-            (if (f.length > 6) f(6) else 0L) +
-            (if (f.length > 7) f(7) else 0L)
-          (busy, if (f.length > 4) f(4) else 0L)
-      }.getOrElse((-1L, -1L))
-      finally src.close()
-    } catch { case _: Throwable => (-1L, -1L) }
-
-  /** This process's own CPU jiffies (utime+stime from `/proc/self/stat`,
-    * fields 14–15 — parsed after the last ')' because comm may contain
-    * spaces). -1 where /proc is missing.
-    */
-  private def procSelfCpu(): Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/self/stat")
-      try {
-        val line = src.getLines().next()
-        val rest = line.substring(line.lastIndexOf(')') + 2).split(" ")
-        // rest(0) is field 3 (state); utime = field 14 → rest(11)
-        rest(11).toLong + rest(12).toLong
-      } finally src.close()
-    } catch { case _: Throwable => -1L }
-
-  /** 1-minute load average at query start — the cheapest "was the box
-    * busy" reading; recorded per query so inflation windows can be
-    * matched against ambient load by timestamp.
-    */
-  private def loadAvg1(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.getLines().next().split(" ")(0).toDouble
-      finally src.close()
-    } catch { case _: Throwable => -1.0 }
-
-  /** Cumulative storage-layer bytes read by this process
-    * (`/proc/self/io` `read_bytes` — actual block-device IO, so a
-    * page-cache hit costs 0). Per-query deltas complete the telemetry
-    * triad: sentinel = CPU contention, gc_ms/heap_mb = JVM memory,
-    * io_read_mb = disk — a query whose wall time inflates with flat
-    * sentinels, flat GC, and a jump in read bytes is paying cold page
-    * cache, the one r10 suspect the artifact couldn't see. Returns -1
-    * where /proc is unavailable; deltas then read 0 and the field is
-    * ignorable.
-    */
-  private def procSelfIo(field: String): Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/self/io")
-      try src.getLines().collectFirst {
-        case l if l.startsWith(field + ":") => l.split(":\\s*")(1).trim.toLong
-      }.getOrElse(-1L)
-      finally src.close()
-    } catch { case _: Throwable => -1L }
-
-  private def ioReadBytes(): Long = procSelfIo("read_bytes")
-
-  /** Cumulative storage-layer bytes WRITTEN by this process (and bytes
-    * whose writeback was cancelled — truncated scratch that never hit
-    * disk). The r11 verdict's one open anomaly sat exactly on the
-    * queries that write parquet stages/state while every read-side
-    * channel was flat: write_bytes is the channel those queries stress,
-    * and it lives on the same /proc/self/io lines read_bytes already
-    * comes from. With it, "inflated wall + inflated writes" names disk
-    * writeback by data; "inflated wall + flat writes" clears it.
-    */
-  private def ioWriteBytes(): Long = procSelfIo("write_bytes")
-  private def ioCancelledWriteBytes(): Long =
-    procSelfIo("cancelled_write_bytes")
-
-  /** System-wide dirty page-cache KB (`/proc/meminfo` `Dirty:`) — the
-    * writeback backlog OTHER processes (or a just-finished Verify run)
-    * left behind. Sampled at each query's start so a stage-writer whose
-    * wall time inflates under a high ambient Dirty baseline is
-    * attributable to environment writeback, not its own plan. -1 where
-    * /proc/meminfo is unavailable.
-    */
-  private def dirtyKb(): Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/meminfo")
-      try src.getLines().collectFirst {
-        case l if l.startsWith("Dirty:") =>
-          l.split("\\s+")(1).toLong
-      }.getOrElse(-1L)
-      finally src.close()
-    } catch { case _: Throwable => -1L }
-
   /** Pre-run idle gate (judge r11 #2): the r11 final bench started 4 s
     * after a 14-minute Verify run finished, and the prime suspect for
     * its stage-writer inflation was page-cache writeback from Verify's
@@ -189,22 +46,22 @@ object Bench {
     * `sync` (flush this JVM's own page-cache footprint — by the time
     * Bench runs, Verify's writes are another process's history, but the
     * warmup above wrote scratch too), then poll until system Dirty
-    * drops under `thresholdKb` or `timeoutSec` elapses. Returns
+    * drops under [[GateDirtyKb]] or [[GateTimeoutSec]] elapses. Returns
     * (dirty KB before, dirty KB after, seconds waited, sync exit code)
     * for the artifact — the gate must be VISIBLE in the JSON, not just
     * run.
     */
-  private def idleGate(thresholdKb: Long, timeoutSec: Int): (Long, Long, Double, Int) = {
-    val before = dirtyKb()
+  private def idleGate(): (Long, Long, Double, Int) = {
+    val before = Telemetry.dirtyKb()
     val syncRc =
       try new ProcessBuilder("sync").start().waitFor()
       catch { case _: Throwable => -1 }
     val t0 = System.nanoTime()
-    var now = dirtyKb()
+    var now = Telemetry.dirtyKb()
     // a -1 (no /proc) must not spin the full timeout
-    while (now > thresholdKb && (System.nanoTime() - t0) / 1e9 < timeoutSec) {
+    while (now > GateDirtyKb && (System.nanoTime() - t0) / 1e9 < GateTimeoutSec) {
       Thread.sleep(500)
-      now = dirtyKb()
+      now = Telemetry.dirtyKb()
     }
     (before, now, (System.nanoTime() - t0) / 1e9, syncRc)
   }
@@ -259,54 +116,20 @@ object Bench {
         exception: Exception): Unit = ()
   }
 
-  /** Cumulative shuffle read/write bytes across all completed stages —
-    * the SHUFFLE channel (judge r13 #5): the one cost that compounds
-    * super-linearly when a plan stops fitting, and the number a 100 TB
-    * scale argument needs measured, not inferred from disk IO (local
-    * shuffle reads can be page-cache hits that /proc/self/io never
-    * sees). Fed by a SparkListener registered once in main; per-run
-    * deltas ride the Timing row like every other channel.
-    */
-  private val shufReadBytes = new java.util.concurrent.atomic.AtomicLong
-  private val shufWriteBytes = new java.util.concurrent.atomic.AtomicLong
-  private class ShuffleTap extends org.apache.spark.scheduler.SparkListener {
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shufReadBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shufWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-  }
-
-  /** One timed query: cold/steady wall, and per-run deltas of every
-    * channel — GC ms, used heap after steady, disk read/write/cancelled
-    * MB, JVM allocation MB, whole-box busy + iowait CPU sec, own CPU
-    * sec, shuffle MB, Janino compiles (generated-class cache misses:
-    * a steady run that compiles is paying codegen again) — plus the
-    * system dirty KB and 1-min loadavg at query start and the wall-clock
+  /** One timed query: the cold run's and the steady run's channels (no
+    * cold on a steady-only pass), used heap after the steady run, the
+    * system dirty KB and 1-min loadavg at query start, and the wall-clock
     * start.
     */
-  private case class Timing(name: String, cold: Double, steady: Double,
-    gcCold: Long, gcSteady: Long, heapMb: Double,
-    ioCold: Double, ioSteady: Double,
-    ioWrCold: Double, ioWrSteady: Double,
-    ioCwCold: Double, ioCwSteady: Double,
-    allocCold: Double, allocSteady: Double,
-    boxCpuCold: Double, boxCpuSteady: Double,
-    boxIowaitCold: Double, boxIowaitSteady: Double,
-    selfCpuCold: Double, selfCpuSteady: Double,
-    shufRdCold: Double, shufRdSteady: Double,
-    shufWrCold: Double, shufWrSteady: Double,
-    compilesCold: Long, compilesSteady: Long,
+  private case class Timing(name: String, cold: Option[Telemetry.Channels],
+    steady: Telemetry.Channels, heapMb: Double,
     dirtyStartKb: Long, loadavgStart: Double, wallStart: Long,
     // any run of this timing threw — its walls are failure-path noops
     // (a query that dies in 10 ms would otherwise WIN the best-of
     // minimum and publish a fantasy number; found by the r16 kill test)
-    failed: Boolean = false,
+    failed: Boolean,
     // executed-plan fingerprint of the steady run's final action
-    planSig: String = "")
+    planSig: String)
 
   /** One full timed pass over the suite: results, sentinel series, and
     * untimed fixture-build seconds for the `*_only` marginal rows.
@@ -316,10 +139,69 @@ object Bench {
     gate: (Long, Long, Double, Int),
     builds: Map[String, Double])
 
+  /** The marginal-cost splits (judge r10 #5 / r11 #8 / r12 #5&#8), as
+    * (row, the composite row that gates it, fixture build). Composite
+    * entries re-run fixture builds (quantizer training, index builds,
+    * ingest seeds, BPE training) inside their timing; these rows build
+    * ONCE untimed — with the build's own wall seconds recorded as
+    * `build_sec`, so composite growth can never masquerade as
+    * marginal-cost regression — and time only the part that scales
+    * (tick / probe / apply), which the build returns.
+    */
+  private val marginals: Seq[(String, String, (SparkSession, String) => () => Unit)] = {
+    import graft.queries.{ExtQueries => E, Ext3Queries => E3}
+    def timed(df: => org.apache.spark.sql.DataFrame): () => Unit = () => materialize(df)
+    Seq(
+      // x49: seed once, time the TICK alone — valid because a tick replay
+      // is idempotent by construction (overwrite-keyed partitions, CC edge
+      // union). The tick is the number that scales at 100 TB.
+      ("x49_tick_only", "x49_ingest_tick", (s, d) => {
+        val state = E.x49Seed(s, d); timed(E.x49Tick(s, d, state)) }),
+      // x54/x56: build the IVF-PQ index once, time the PROBE — the number
+      // that scales with query traffic.
+      ("x54_probe_only", "x54_ann_index_probe", (s, d) => {
+        val base = E.x54Build(s, d); timed(E.x54Probe(s, d, base)) }),
+      ("x56_probe_only", "x56_ann_filtered", (s, d) => {
+        val base = E.x56Build(s, d); timed(E.x56Probe(s, d, base)) }),
+      // x54b: the residual probe pays an extra per-cell LUT (q − centroid)
+      // over x54's, which is exactly the marginal this row makes visible.
+      ("x54b_probe_only", "x54b_ann_index_residual", (s, d) => {
+        val base = E.x54Build(s, d, residual = true); timed(E.x54Probe(s, d, base)) }),
+      // x54c: the streaming index maintenance (init + two MemoryStream
+      // waves) is the build; the probe against the stream-maintained
+      // postings proves maintenance costs nothing at read time.
+      ("x54c_probe_only", "x54c_ann_index_stream", (s, d) => {
+        val base = E.x54cBuild(s, d); timed(E.x54Probe(s, d, base)) }),
+      // x57: train the BPE merge table once, time corpus tokenization from
+      // the read-back artifact — what a training run re-pays per corpus
+      // pass; the composite x57 rows keep gating the train path.
+      ("x57_apply_only", "x57d_bpe_apply", (s, d) => {
+        val merges = E.x57dBuild(s, d); timed(E.x57dApply(s, d, merges)) }),
+      // x122: the same split for the unigram tokenizer family.
+      ("x122_apply_only", "x122b_unigram_apply", (s, d) => {
+        val pieces = s.read.parquet(E3.x122Build(s, d))
+        timed(E3.x122Apply(s, d, pieces)) }))
+  }
+  /** Bench-synthesized rows: not `SparkEntry.queries` entries, and kept
+    * out of the totals (each re-times a subset of its composite row).
+    */
+  private val synthetic = marginals.map(_._1).toSet
+
+  /** The idle gate waits (bounded by [[GateTimeoutSec]]) until system
+    * Dirty drops under [[GateDirtyKb]]; a winning row is pollution-flagged
+    * when its loadavg_start exceeds [[FlagLoadavg]] (p90 of the r14 series
+    * — the 1-min loadavg is self-polluted by our own preceding queries, so
+    * only extremes mean anything); a partial artifact lands at most every
+    * [[PartialEverySec]] inside a pass.
+    */
+  private val GateDirtyKb = 65536L
+  private val GateTimeoutSec = 120
+  private val FlagLoadavg = 8.0
+  private val PartialEverySec = 120.0
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build("graft-bench")
-    spark.sparkContext.addSparkListener(new ShuffleTap)
     spark.listenerManager.register(new PlanTap)
     // warm the JVM/session once so the first timed query isn't paying
     // codegen + scheduler + parquet-reader startup
@@ -328,21 +210,10 @@ object Bench {
       .foreach(fn => try materialize(fn(spark, sfDir)) catch { case _: Throwable => })
     // fixed alphabetical order: per-round timings stay comparable and cache
     // effects hit the same queries each round
-    // optional comma-separated filter for timing individual queries locally;
-    // the driver never sets it, so the full suite runs per-round
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // a typo'd filter would otherwise emit a clean-looking total=0 line
-    // (x49_tick_only is a bench-synthesized timing, not a queries entry)
-    val synthetic = Set("x49_tick_only", "x54_probe_only", "x56_probe_only",
-      "x57_apply_only", "x54c_probe_only", "x54b_probe_only",
-      "x122_apply_only")
-    only.foreach(_.diff(SparkEntry.queries.keySet ++ synthetic).foreach(n =>
-      System.err.println(s"[bench] WARNING: SPARK_GRAFT_ONLY name '$n' matches no query")))
+    // optional row filter for timing individual queries locally; unset,
+    // the full suite runs
+    val only = SparkEntry.onlyRows("bench", SparkEntry.queries.keySet ++ synthetic)
     var failed = List.empty[String]
-    val gateThresholdKb =
-      sys.env.get("SPARK_GRAFT_GATE_DIRTY_KB").map(_.toLong).getOrElse(65536L)
-    val gateTimeoutSec =
-      sys.env.get("SPARK_GRAFT_GATE_TIMEOUT_SEC").map(_.toInt).getOrElse(120)
     // ---- BEST-OF-TWO protocol (judge r12 #1/#2): five rounds of
     // BENCH_NOTES show the driver box intermittently contended, and a
     // single gated run per round kept re-opening the same adjudication —
@@ -385,8 +256,8 @@ object Bench {
     // coldRuns=false (pass 2+, retry): each query is timed ONCE, steady
     // only — the cold number is already reported as min-over-passes of a
     // JIT/codegen artifact, so re-measuring it on pass 2 bought nothing
-    // and cost ~1/3 of total wall (judge r15 #4). Cold fields read NaN
-    // (doubles) / -1 (longs) on such rows; best-of assembly skips them.
+    // and cost ~1/3 of total wall (judge r15 #4). Such rows carry no cold
+    // channels; best-of assembly skips them.
     // onProgress fires after every timed query with the pass-so-far
     // snapshot, so main can persist a partial artifact under a wall-clock
     // budget (judge r15 #2: a driver SIGTERM must not erase the run).
@@ -409,9 +280,9 @@ object Bench {
       def timeSentinel(after: String): Unit =
         SparkEntry.queries.get("a1_count_star").foreach { fn =>
           val w = System.currentTimeMillis()
-          val t = System.nanoTime()
-          try { materialize(fn(spark, sfDir)); () } catch { case _: Throwable => }
-          sentinels ::= ((after, w, (System.nanoTime() - t) / 1e9))
+          val sec = try Telemetry.measure(materialize(fn(spark, sfDir)))._2.wallSec
+            catch { case f: Telemetry.RegionFailed => f.channels.wallSec }
+          sentinels ::= ((after, w, sec))
         }
       // Each query runs TWICE in this JVM per pass: run 1 ("cold") pays
       // Janino codegen + AQE planning + broadcast warmup on top of
@@ -420,178 +291,74 @@ object Bench {
       // one the perf gate should read. Emitting both per query settles
       // cold-vs-noise questions by data instead of prose (judge r5 ask;
       // BENCH_NOTES has the history).
-      def timeQuery(name: String, runs: Seq[() => Unit]): Timing = {
+      def timeQuery(name: String, run: () => Unit): Timing = {
         val wallStart = System.currentTimeMillis()
-        val dirty0 = dirtyKb()
-        val load0 = loadAvg1()
+        val dirty0 = Telemetry.dirtyKb()
+        val load0 = Telemetry.loadAvg1()
         var anyRunFailed = false
         lastPlanSig = None
-        val timed = runs.map { run =>
-          val g0 = gcMs()
-          val io0 = ioReadBytes()
-          val wr0 = ioWriteBytes()
-          val cw0 = ioCancelledWriteBytes()
-          val al0 = allocatedBytes()
-          val (bc0, bw0) = procStatCpu()
-          val sc0 = procSelfCpu()
-          val sr0 = shufReadBytes.get(); val sw0 = shufWriteBytes.get()
-          val cg0 = Telemetry.codegenCompiles()
-          val t0 = System.nanoTime()
-          try run() catch {
-            case e: Throwable =>
-              // a failing query must be visible, not a fast timing
-              anyRunFailed = true
-              if (!failed.contains(name)) failed ::= name
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        def once(): Telemetry.Channels =
+          try Telemetry.measure(run())._2
+          catch { case f: Telemetry.RegionFailed =>
+            // a failing query must be visible, not a fast timing
+            anyRunFailed = true
+            if (!failed.contains(name)) failed ::= name
+            System.err.println(s"[bench] $name FAILED: ${f.getMessage}")
+            f.channels
           }
-          val wall = (System.nanoTime() - t0) / 1e9
-          val compiles = Telemetry.codegenCompiles() - cg0
-          val (bc1, bw1) = procStatCpu()
-          // listener events drain asynchronously; give trailing stage
-          // completions a beat so the shuffle deltas land in THIS run
-          org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(
-            spark.sparkContext)
-          (wall, gcMs() - g0,
-            math.max(0L, ioReadBytes() - io0) / 1e6,
-            math.max(0L, ioWriteBytes() - wr0) / 1e6,
-            math.max(0L, ioCancelledWriteBytes() - cw0) / 1e6,
-            math.max(0L, allocatedBytes() - al0) / 1e6,
-            math.max(0L, bc1 - bc0) / 100.0,   // jiffies → sec (USER_HZ=100)
-            math.max(0L, bw1 - bw0) / 100.0,
-            math.max(0L, procSelfCpu() - sc0) / 100.0,
-            math.max(0L, shufReadBytes.get() - sr0) / 1e6,
-            math.max(0L, shufWriteBytes.get() - sw0) / 1e6,
-            compiles)
-        }
-        // single-run passes time steady only; cold channels read NaN/-1
-        // and are skipped by the best-of assembly
-        val st = timed.last
-        val cd = if (timed.size > 1) Some(timed.head) else None
-        Timing(name, cd.map(_._1).getOrElse(Double.NaN), st._1,
-          cd.map(_._2).getOrElse(-1L), st._2,
-          heapMb(), cd.map(_._3).getOrElse(Double.NaN), st._3,
-          cd.map(_._4).getOrElse(Double.NaN), st._4,
-          cd.map(_._5).getOrElse(Double.NaN), st._5,
-          cd.map(_._6).getOrElse(Double.NaN), st._6,
-          cd.map(_._7).getOrElse(Double.NaN), st._7,
-          cd.map(_._8).getOrElse(Double.NaN), st._8,
-          cd.map(_._9).getOrElse(Double.NaN), st._9,
-          cd.map(_._10).getOrElse(Double.NaN), st._10,
-          cd.map(_._11).getOrElse(Double.NaN), st._11,
-          cd.map(_._12).getOrElse(-1L), st._12,
-          dirty0, load0, wallStart, failed = anyRunFailed,
-          planSig = lastPlanSig.getOrElse(""))
+        val cold = if (coldRuns) Some(once()) else None
+        val steady = once()
+        Timing(name, cold, steady, Telemetry.heapMb(), dirty0, load0,
+          wallStart, anyRunFailed, lastPlanSig.getOrElse(""))
       }
       // ---- idle gate (judge r11 #2), once per pass: drain ambient
       // writeback BEFORE the timed region and record the drain in the
       // artifact. Inflation with after≈0 is the query's own; inflation
       // with after still high names the environment.
-      val gate = idleGate(gateThresholdKb, gateTimeoutSec)
+      val gate = idleGate()
       System.err.println(f"[bench] pass $passIdx idle gate: " +
         f"dirty ${gate._1} KB -> ${gate._2} KB in ${gate._3}%.1f s " +
         f"(sync rc=${gate._4})")
       var sinceSentinel = 0
       val results = scala.collection.mutable.ListBuffer.empty[Timing]
       val builds = scala.collection.mutable.Map.empty[String, Double]
+      // outside the timed region: drop any intermediates a query persisted
+      // so later timings are neither helped nor starved by earlier caches,
+      // and reclaim scratch parquet stages so the JVM's disk footprint
+      // stays flat (judge r7: stage buildup was the suspect for
+      // late-suite timing inflation). ORDERING CONSTRAINT (advisor r14):
+      // some query functions write scratch at CONSTRUCTION and the
+      // returned frame reads it lazily — cleaning is safe only here, after
+      // materialize() fully consumed the frame, never between building a
+      // frame and running it.
+      def afterRow(name: String, sentinelTick: Boolean): Unit = {
+        spark.catalog.clearCache()
+        graft.operators.StageIO.cleanScratch(spark)
+        if (sentinelTick) {
+          sinceSentinel += 1
+          if (sinceSentinel >= sentinelEvery) { sinceSentinel = 0; timeSentinel(name) }
+        }
+        onProgress(Pass(results.toVector, sentinels, gate, builds.toMap))
+      }
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => filter.forall(_.contains(n)) }
         .foreach { case (name, fn) => if (!ctxStopped) {
-          val run = () => { materialize(fn(spark, sfDir)); () }
-          results += timeQuery(name,
-            if (coldRuns) Seq(run, run) else Seq(run))
-          // outside the timed region: drop any intermediates a query persisted
-          // so later timings are neither helped nor starved by earlier caches,
-          // and reclaim scratch parquet stages so the JVM's disk footprint
-          // stays flat (judge r7: stage buildup was the suspect for
-          // late-suite timing inflation). ORDERING CONSTRAINT (advisor
-          // r14): some query functions write scratch at CONSTRUCTION and
-          // the returned frame reads it lazily — cleaning is safe only
-          // here, after materialize() fully consumed the frame, never
-          // between building a frame and running it.
-          spark.catalog.clearCache()
-          // diagnostic switch: keep scratch stages to reproduce the pre-cleanup
-          // buildup behavior in A/B runs (BENCH_NOTES)
-          if (!sys.env.contains("SPARK_GRAFT_KEEP_SCRATCH"))
-            graft.operators.StageIO.cleanScratch(spark)
-          sinceSentinel += 1
-          if (sinceSentinel >= sentinelEvery) { sinceSentinel = 0; timeSentinel(name) }
-          onProgress(Pass(results.toVector, sentinels, gate, builds.toMap))
+          results += timeQuery(name, () => materialize(fn(spark, sfDir)))
+          afterRow(name, sentinelTick = true)
         } }
-      // ---- marginal-cost splits (judge r10 #5 / r11 #8 / r12 #5&#8):
-      // composite entries above re-run fixture builds (quantizer
-      // training, index builds, ingest seeds, BPE training) inside their
-      // timing; these rows build ONCE untimed — with the build's own
-      // wall seconds recorded as `build_sec`, so composite growth can
-      // never masquerade as marginal-cost regression — and time only the
-      // part that scales (tick / probe / apply), twice.
-      def marginal(name: String, gatedBy: String)(mk: => () => Unit): Unit =
+      marginals.foreach { case (name, gatedBy, build) =>
         if (!ctxStopped && filter.forall(_.contains(name))
             && SparkEntry.queries.contains(gatedBy)) {
           try {
-            val b0 = System.nanoTime()
-            val run = mk
-            builds(name) = (System.nanoTime() - b0) / 1e9
-            results += timeQuery(name,
-              if (coldRuns) Seq(run, run) else Seq(run))
+            val (run, b) = Telemetry.measure(build(spark, sfDir))
+            builds(name) = b.wallSec
+            results += timeQuery(name, run)
           } catch { case e: Throwable =>
             failed ::= name
             System.err.println(s"[bench] $name fixture build FAILED: ${e.getMessage}")
           }
-          spark.catalog.clearCache()
-          if (!sys.env.contains("SPARK_GRAFT_KEEP_SCRATCH"))
-            graft.operators.StageIO.cleanScratch(spark)
-          onProgress(Pass(results.toVector, sentinels, gate, builds.toMap))
+          afterRow(name, sentinelTick = false)
         }
-      // x49: seed once untimed, time the TICK alone — valid because a
-      // tick replay is idempotent by construction (overwrite-keyed
-      // partitions, CC edge union). x49_tick_only is the number that
-      // scales at 100 TB.
-      marginal("x49_tick_only", "x49_ingest_tick") {
-        val state = graft.queries.ExtQueries.x49Seed(spark, sfDir)
-        () => { materialize(graft.queries.ExtQueries.x49Tick(spark, sfDir, state)); () }
-      }
-      // x54/x56: build the IVF-PQ index once untimed, time the PROBE —
-      // the number that scales with query traffic.
-      marginal("x54_probe_only", "x54_ann_index_probe") {
-        val base = graft.queries.ExtQueries.x54Build(spark, sfDir)
-        () => { materialize(graft.queries.ExtQueries.x54Probe(spark, sfDir, base)); () }
-      }
-      marginal("x56_probe_only", "x56_ann_filtered") {
-        val base = graft.queries.ExtQueries.x56Build(spark, sfDir)
-        () => { materialize(graft.queries.ExtQueries.x56Probe(spark, sfDir, base)); () }
-      }
-      // x54b: the residual-coding variant was the one index composite
-      // without a marginal split — its probe pays an extra per-cell LUT
-      // (q − centroid) over x54's, which is exactly the marginal this
-      // row makes visible.
-      marginal("x54b_probe_only", "x54b_ann_index_residual") {
-        val base = graft.queries.ExtQueries.x54Build(spark, sfDir,
-          residual = true)
-        () => { materialize(graft.queries.ExtQueries.x54Probe(spark, sfDir, base)); () }
-      }
-      // x54c: run the streaming index maintenance once untimed (init +
-      // two MemoryStream waves — the build), time the probe against the
-      // stream-maintained postings: proves streaming maintenance costs
-      // nothing at read time vs the batch-built x54_probe_only.
-      marginal("x54c_probe_only", "x54c_ann_index_stream") {
-        val base = graft.queries.ExtQueries.x54cBuild(spark, sfDir)
-        () => { materialize(graft.queries.ExtQueries.x54Probe(spark, sfDir, base)); () }
-      }
-      // x57: train the BPE merge table once untimed, time corpus
-      // tokenization from the read-back artifact (judge r12 #5) — the
-      // apply path is what a training run re-pays per corpus pass; the
-      // composite x57 rows keep gating the train path.
-      marginal("x57_apply_only", "x57d_bpe_apply") {
-        val merges = graft.queries.ExtQueries.x57dBuild(spark, sfDir)
-        () => { materialize(graft.queries.ExtQueries.x57dApply(spark, sfDir, merges)); () }
-      }
-      // x122: train the unigram piece table once untimed, time corpus
-      // segmentation from the read-back artifact — the per-corpus-pass
-      // cost of the second tokenizer family (same split as x57).
-      marginal("x122_apply_only", "x122b_unigram_apply") {
-        val pieces = spark.read.parquet(
-          graft.queries.Ext3Queries.x122Build(spark, sfDir))
-        () => { materialize(graft.queries.Ext3Queries.x122Apply(spark, sfDir, pieces)); () }
       }
       Pass(results.toVector, sentinels, gate, builds.toMap)
     }
@@ -605,21 +372,17 @@ object Bench {
     //   - |box_cpu − self_cpu| > max(3 s, 0.5 × wall): someone else (or
     //     sampling skew large enough to hide someone else) burned CPU
     //     comparable to the query itself during the timed region;
-    //   - loadavg_start above SPARK_GRAFT_FLAG_LOADAVG (default 8.0 —
-    //     p90 of the r14 series; the 1-min loadavg is self-polluted by
-    //     our own preceding queries, so only extremes are meaningful).
+    //   - loadavg_start above [[FlagLoadavg]].
     // Flagged queries get ONE extra settled pass at the end of the
     // suite (after waiting for loadavg to drain, bounded), and any row
     // whose official number STILL comes from a flagged run is named in
     // the artifact's `flags` field so no downstream regression read can
     // adjudicate from it silently.
     def pollution(t: Timing): Option[String] = {
-      val foreign = math.abs(t.boxCpuSteady - t.selfCpuSteady)
-      val flagLoad = sys.env.get("SPARK_GRAFT_FLAG_LOADAVG")
-        .map(_.toDouble).getOrElse(8.0)
-      if (foreign > math.max(3.0, 0.5 * t.steady))
-        Some(f"foreign_cpu=$foreign%.1fs over ${t.steady}%.2fs wall")
-      else if (t.loadavgStart > flagLoad)
+      val foreign = math.abs(t.steady.boxCpuSec - t.steady.selfCpuSec)
+      if (foreign > math.max(3.0, 0.5 * t.steady.wallSec))
+        Some(f"foreign_cpu=$foreign%.1fs over ${t.steady.wallSec}%.2fs wall")
+      else if (t.loadavgStart > FlagLoadavg)
         Some(f"loadavg_start=${t.loadavgStart}%.2f")
       else None
     }
@@ -627,7 +390,9 @@ object Bench {
     // over passes with its channel telemetry riding along (so a slow
     // pass's GC spike never decorates the fast pass's time); the official
     // cold is the min over the passes that MEASURED cold (pass 1 only
-    // since r16 — single-run passes carry NaN/-1 cold fields).
+    // since r16). A query no cold-measuring pass saw (can't happen in the
+    // standard protocol; guards SPARK_GRAFT_ONLY edge uses) reports its
+    // steady run as cold.
     def bestOf(ps: Seq[Pass]): Seq[Timing] =
       ps.head.results.map(_.name).map { n =>
         val all = ps.flatMap(_.results.find(_.name == n))
@@ -635,23 +400,9 @@ object Bench {
         // stand when NO run of the query succeeded
         val ts = { val ok = all.filterNot(_.failed)
           if (ok.nonEmpty) ok else all }
-        val w = ts.minBy(_.steady)
-        ts.filterNot(_.cold.isNaN).sortBy(_.cold).headOption match {
-          case Some(c) => w.copy(cold = c.cold, gcCold = c.gcCold,
-            ioCold = c.ioCold, ioWrCold = c.ioWrCold, ioCwCold = c.ioCwCold,
-            allocCold = c.allocCold, boxCpuCold = c.boxCpuCold,
-            boxIowaitCold = c.boxIowaitCold, selfCpuCold = c.selfCpuCold,
-            shufRdCold = c.shufRdCold, shufWrCold = c.shufWrCold,
-            compilesCold = c.compilesCold)
-          // no cold-measuring pass saw this query (can't happen in the
-          // standard protocol; guards SPARK_GRAFT_ONLY edge uses)
-          case None => w.copy(cold = w.steady, gcCold = w.gcSteady,
-            ioCold = w.ioSteady, ioWrCold = w.ioWrSteady,
-            ioCwCold = w.ioCwSteady, allocCold = w.allocSteady,
-            boxCpuCold = w.boxCpuSteady, boxIowaitCold = w.boxIowaitSteady,
-            selfCpuCold = w.selfCpuSteady, shufRdCold = w.shufRdSteady,
-            shufWrCold = w.shufWrSteady, compilesCold = w.compilesSteady)
-        }
+        val w = ts.minBy(_.steady.wallSec)
+        w.copy(cold = ts.flatMap(_.cold).minByOption(_.wallSec)
+          .orElse(Some(w.steady)))
       }
 
     // persist the artifact TWICE per emission: a timestamped file no
@@ -682,23 +433,26 @@ object Bench {
       // up by OUR OWN preceding streaming query stays flagged forever
       def flagOf(t: Timing): Option[String] = pollution(t).filterNot { _ =>
         passes.flatMap(_.results.find(_.name == t.name)).exists(o =>
-          pollution(o).isEmpty && o.steady <= t.steady * 1.25)
+          pollution(o).isEmpty && o.steady.wallSec <= t.steady.wallSec * 1.25)
       }
       val flagsJson = results.flatMap(t => flagOf(t).map(r =>
           s"""\"${t.name}\":\"${r}\"""")).mkString("{", ",", "}")
       val builds = passes.flatMap(_.builds.toSeq).groupBy(_._1)
         .map { case (k, vs) => k -> vs.map(_._2).min }
 
-      def fmt(sel: Timing => String) = results
+      def fmt(sel: Timing => Any) = results
         .map(r => s"\"" + r.name + "\":" + sel(r)).mkString("{", ",", "}")
+      def steady(sel: Telemetry.Channels => Any) = fmt(r => sel(r.steady))
+      def cold(sel: Telemetry.Channels => Any) =
+        fmt(r => sel(r.cold.getOrElse(r.steady)))
       // `queries`/`value` carry the best-of steady numbers (what the gate
       // compares); `queries_cold`/`total_cold` carry best-of run-1 with
       // its one-time planning overhead included. The *_only rows are
       // excluded from the totals (each re-times a subset of its composite
       // entry, included).
       val totalRows = results.filterNot(r => synthetic.contains(r.name))
-      val totalSteady = totalRows.map(_.steady).sum
-      val totalCold = totalRows.map(_.cold).sum
+      val totalSteady = totalRows.map(_.steady.wallSec).sum
+      val totalCold = totalRows.map(r => r.cold.getOrElse(r.steady).wallSec).sum
       val failedJson = failed.distinct.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
       // wall_start_ms + sentinel: the r9 timeline telemetry. gc_ms /
       // heap_mb: the r10 memory channels. io_write_mb / dirty_kb_start /
@@ -713,21 +467,21 @@ object Bench {
       }.mkString("[", ",", "]")
       val gatesJson = passes.zipWithIndex.map { case (p, i) =>
         val (b, a, w, rc) = p.gate
-        s"""{"pass":${i + 1},"threshold_kb":$gateThresholdKb,"dirty_before_kb":$b,"dirty_after_kb":$a,"wait_sec":$w,"sync_rc":$rc}"""
+        s"""{"pass":${i + 1},"threshold_kb":$GateDirtyKb,"dirty_before_kb":$b,"dirty_after_kb":$a,"wait_sec":$w,"sync_rc":$rc}"""
       }.mkString("[", ",", "]")
       val buildsJson = builds.toSeq.sortBy(_._1)
         .map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
       def passQueries(p: Pass) = p.results
-        .map(r => s"\"${r.name}\":${r.steady}").mkString("{", ",", "}")
+        .map(r => s"\"${r.name}\":${r.steady.wallSec}").mkString("{", ",", "}")
       val runsJson = passes.map { p =>
         val rows = p.results.filterNot(r => synthetic.contains(r.name))
-        val colds = rows.map(_.cold).filterNot(_.isNaN)
-        s"""{"total":${rows.map(_.steady).sum},"total_cold":${colds.sum},"n_cold_runs":${colds.size},"queries":${passQueries(p)}}"""
+        val colds = rows.flatMap(_.cold).map(_.wallSec)
+        s"""{"total":${rows.map(_.steady.wallSec).sum},"total_cold":${colds.sum},"n_cold_runs":${colds.size},"queries":${passQueries(p)}}"""
       }.mkString("[", ",", "]")
       val skippedJson = budgetSkipped.sorted
         .map("\"" + _ + "\"").mkString("[", ",", "]")
       val json =
-        s"""{"metric":"total","value":$totalSteady,"unit":"sec","partial":$partial,"best_of":$numPasses,"passes_run":${passes.size},"elapsed_sec":$elapsedSec,"budget_sec":$budgetSec,"budget_skipped":$skippedJson,"queries":${fmt(_.steady.toString)},"queries_cold":${fmt(_.cold.toString)},"total_cold":$totalCold,"gc_ms":${fmt(_.gcSteady.toString)},"gc_ms_cold":${fmt(_.gcCold.toString)},"heap_mb":${fmt(_.heapMb.toString)},"io_read_mb":${fmt(_.ioSteady.toString)},"io_read_mb_cold":${fmt(_.ioCold.toString)},"io_write_mb":${fmt(_.ioWrSteady.toString)},"io_write_mb_cold":${fmt(_.ioWrCold.toString)},"io_cancelled_write_mb":${fmt(_.ioCwSteady.toString)},"alloc_mb":${fmt(_.allocSteady.toString)},"alloc_mb_cold":${fmt(_.allocCold.toString)},"box_cpu_sec":${fmt(_.boxCpuSteady.toString)},"box_cpu_sec_cold":${fmt(_.boxCpuCold.toString)},"box_iowait_sec":${fmt(_.boxIowaitSteady.toString)},"self_cpu_sec":${fmt(_.selfCpuSteady.toString)},"self_cpu_sec_cold":${fmt(_.selfCpuCold.toString)},"shuffle_read_mb":${fmt(_.shufRdSteady.toString)},"shuffle_read_mb_cold":${fmt(_.shufRdCold.toString)},"shuffle_write_mb":${fmt(_.shufWrSteady.toString)},"shuffle_write_mb_cold":${fmt(_.shufWrCold.toString)},"codegen_compiles":${fmt(_.compilesSteady.toString)},"codegen_compiles_cold":${fmt(_.compilesCold.toString)},"loadavg_start":${fmt(_.loadavgStart.toString)},"dirty_kb_start":${fmt(_.dirtyStartKb.toString)},"plan_nodes":${fmt(r => "\"" + r.planSig + "\"")},"build_sec":$buildsJson,"idle_gate":$gatesJson,"runs":$runsJson,"wall_start_ms":${fmt(_.wallStart.toString)},"sentinel":$sentinelJson,"failed":$failedJson,"flags":$flagsJson,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":$totalSteady,"unit":"sec","partial":$partial,"best_of":$numPasses,"passes_run":${passes.size},"elapsed_sec":$elapsedSec,"budget_sec":$budgetSec,"budget_skipped":$skippedJson,"queries":${steady(_.wallSec)},"queries_cold":${cold(_.wallSec)},"total_cold":$totalCold,"gc_ms":${steady(_.gcMs)},"gc_ms_cold":${cold(_.gcMs)},"heap_mb":${fmt(_.heapMb)},"io_read_mb":${steady(_.ioReadMb)},"io_read_mb_cold":${cold(_.ioReadMb)},"io_write_mb":${steady(_.ioWriteMb)},"io_write_mb_cold":${cold(_.ioWriteMb)},"io_cancelled_write_mb":${steady(_.ioCancelledWriteMb)},"alloc_mb":${steady(_.allocMb)},"alloc_mb_cold":${cold(_.allocMb)},"box_cpu_sec":${steady(_.boxCpuSec)},"box_cpu_sec_cold":${cold(_.boxCpuSec)},"box_iowait_sec":${steady(_.boxIowaitSec)},"self_cpu_sec":${steady(_.selfCpuSec)},"self_cpu_sec_cold":${cold(_.selfCpuSec)},"shuffle_read_mb":${steady(_.shuffleReadMb)},"shuffle_read_mb_cold":${cold(_.shuffleReadMb)},"shuffle_write_mb":${steady(_.shuffleWriteMb)},"shuffle_write_mb_cold":${cold(_.shuffleWriteMb)},"codegen_compiles":${steady(_.compiles)},"codegen_compiles_cold":${cold(_.compiles)},"loadavg_start":${fmt(_.loadavgStart)},"dirty_kb_start":${fmt(_.dirtyStartKb)},"plan_nodes":${fmt(r => "\"" + r.planSig + "\"")},"build_sec":$buildsJson,"idle_gate":$gatesJson,"runs":$runsJson,"wall_start_ms":${fmt(_.wallStart)},"sentinel":$sentinelJson,"failed":$failedJson,"flags":$flagsJson,"sf":"$sfDir"}"""
       Seq(stamped, fixed).foreach { out =>
         // write-then-atomic-move: a kill mid-write must not leave a
         // truncated artifact under the name the driver reads
@@ -757,19 +511,17 @@ object Bench {
     }
 
     // throttled mid-pass emission: at most one partial snapshot per
-    // SPARK_GRAFT_BENCH_PARTIAL_SEC (default 120 s), so a kill anywhere
-    // inside a pass costs at most that window of signal
+    // [[PartialEverySec]], so a kill anywhere inside a pass costs at most
+    // that window of signal
     var donePasses = Vector.empty[Pass]
-    val partialEverySec = sys.env.get("SPARK_GRAFT_BENCH_PARTIAL_SEC")
-      .map(_.toDouble).getOrElse(120.0)
     // backdate the throttle so the FIRST partial lands ~30 s in: a kill
     // inside the first full window otherwise leaves no artifact at all
     // (the one gap the r16 kill test left open)
     var lastPartialNs = System.nanoTime() -
-      ((partialEverySec - 30.0).max(0.0) * 1e9).toLong
+      ((PartialEverySec - 30.0).max(0.0) * 1e9).toLong
     def onProgress(snapshot: Pass): Unit =
       if (snapshot.results.nonEmpty &&
-          (System.nanoTime() - lastPartialNs) / 1e9 >= partialEverySec) {
+          (System.nanoTime() - lastPartialNs) / 1e9 >= PartialEverySec) {
         lastPartialNs = System.nanoTime()
         emit(donePasses :+ snapshot, partial = true)
       }
@@ -804,7 +556,7 @@ object Bench {
       // load that does NOT decay is exactly what the retry must dodge,
       // so wait (bounded) rather than re-time into the same burst
       val deadline = System.nanoTime() + 180L * 1000000000L
-      while (loadAvg1() > 4.0 && System.nanoTime() < deadline)
+      while (Telemetry.loadAvg1() > 4.0 && System.nanoTime() < deadline)
         Thread.sleep(5000)
       basePasses.toSeq :+ runPass(basePasses.size + 1, Some(flaggedNames),
         coldRuns = false, onProgress)

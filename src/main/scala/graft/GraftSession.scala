@@ -31,17 +31,12 @@ object GraftSession {
     * at 1 and capped at the session's core count — a 100× bigger input
     * scales back up to full parallelism, so nothing here is tuned to
     * local[32]. Real deployments size state partitions to state volume
-    * the same way. SPARK_GRAFT_STREAM_SHUFFLE overrides for A/B runs.
+    * the same way.
     */
   def sizedStreamSession(s: org.apache.spark.sql.SparkSession,
       inputRows: Long): org.apache.spark.sql.SparkSession = {
-    val parts = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE")
-      .map(v => try v.trim.toInt catch {
-        case e: NumberFormatException => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STREAM_SHUFFLE must be an integer, got '$v'", e)
-      })
-      .getOrElse(math.max(1L, math.min(inputRows / 16384L + 1L,
-        s.sparkContext.defaultParallelism.toLong)).toInt)
+    val parts = math.max(1L, math.min(inputRows / 16384L + 1L,
+      s.sparkContext.defaultParallelism.toLong))
     val ns = s.newSession()
     ns.conf.set("spark.sql.shuffle.partitions", parts.toString)
     ns

@@ -57,6 +57,21 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     groups.iterator.flatMap(_._1).toMap
 
+  /** The `SPARK_GRAFT_ONLY` row filter that Bench and Verify share: a
+    * comma-separated list of row names for a local loop, or None (unset)
+    * for every row. A name in no `known` row is warned about on stderr
+    * under `[tag]` — a typo'd filter would otherwise run nothing and
+    * report a clean-looking empty result.
+    */
+  def onlyRows(tag: String, known: Set[String]): Option[Set[String]] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty)
+    only.foreach(_.diff(known).foreach(n => System.err.println(
+      s"[$tag] WARNING: SPARK_GRAFT_ONLY name '$n' matches no query")))
+    only
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

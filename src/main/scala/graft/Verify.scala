@@ -8,12 +8,9 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = GraftSession.build("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // dev loop only: SPARK_GRAFT_VERIFY_ONLY=x53_pq_ann,x34_ann_recall
-    // restricts the dump to named queries (the driver sets nothing and
-    // gets the full inventory)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    // dev loop only: SPARK_GRAFT_ONLY=x53_pq_ann,x34_ann_recall restricts
+    // the dump to named queries; unset, the full inventory is dumped
+    val only = SparkEntry.onlyRows("verify", SparkEntry.queries.keySet)
     def keep(name: String): Boolean = only.forall(_.contains(name))
     // oracle_sql.json lands BEFORE the query loop (the Bench r16
     // survivability lesson): a driver-timeout kill mid-inventory then

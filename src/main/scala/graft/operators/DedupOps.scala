@@ -263,17 +263,6 @@ object DedupOps {
         .as(s"mh$i")
     }
 
-  /** LSH band keys: md5 over `rowsPerBand` consecutive signature slots
-    * joined with '|'. Docs sharing any band key are candidate pairs.
-    */
-  def bandKeys(numHashes: Int, rowsPerBand: Int): Seq[Column] = {
-    require(numHashes % rowsPerBand == 0)
-    (0 until numHashes / rowsPerBand).map { b =>
-      val slots = (0 until rowsPerBand).map(r => col(s"mh${b * rowsPerBand + r}"))
-      md5(concat_ws("|", slots: _*)).as(s"band$b")
-    }
-  }
-
   /** Full MinHash-LSH near-dup pipeline:
     * docs → 3-shingles → 12-slot signature → 3 bands × 4 rows → bucket join
     * → verified n-gram Jaccard ≥ `threshold`.

@@ -459,10 +459,7 @@ object DeltaManifest {
     // crossContamination: no shingle leaves the index.
     val hot = shingleSketchDir
       .filter(_ => hotShingleDf < Long.MaxValue).map { dir =>
-      val snap = s"$stateDir/hotset/batch=$batchId"
-      val ok = new org.apache.hadoop.fs.Path(s"$snap/_SUCCESS")
-      val fs = ok.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(ok)) {
+      StageIO.persisted(spark, s"$stateDir/hotset/batch=$batchId") {
         // staged batches carry pre-computed shingles (stageGated); a
         // legacy stage without them falls back to the recompute
         val probes = (if (gated.columns.contains("sh"))
@@ -484,9 +481,7 @@ object DeltaManifest {
             probes, "shingle", depth = gDepth, width = gWidth)
           .filter(col("est") > hotShingleDf)
           .select("shingle")
-          .write.mode("overwrite").parquet(snap)
       }
-      spark.read.parquet(snap)
     }
     // eval-index snapshot: the eval split is STATIC (the exactness
     // contract), so its decontamination index — the one per-tick
@@ -494,14 +489,8 @@ object DeltaManifest {
     // the batch — is built on FIRST use and persisted beside the state
     // logs; every later tick reads the few-MB parquet (judge r11 #4).
     // A changed eval split is a re-plan: delete the snapshot dir.
-    val evalIdx = evalIndexDir.map { dir =>
-      val ok = new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")
-      val fs = ok.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(ok))
-        DedupOps.evalShingleIndex(evalDocs, "text", "doc_id")
-          .write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir)
-    }
+    val evalIdx = evalIndexDir.map(dir => StageIO.persisted(spark, dir)(
+      DedupOps.evalShingleIndex(evalDocs, "text", "doc_id")))
     val leaked = DedupOps.crossContamination(survivors, evalDocs, "text",
         "doc_id", contamThreshold, hotShingles = hot,
         trainShingleCol =

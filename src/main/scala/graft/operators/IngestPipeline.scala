@@ -415,21 +415,6 @@ object IngestPipeline {
   private def emptySig(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sigSchema)
 
-  /** A single batch partition. An all-gated-out batch leaves a
-    * partitioned dir with no parquet files (nothing to infer a schema
-    * from) — fall back to the empty frame instead of throwing.
-    */
-  private def readSigBatch(spark: SparkSession, stateDir: String,
-      batchId: Long): DataFrame = {
-    SwapStore.repair(spark, sigDir(stateDir))
-    val dir = s"${sigDir(stateDir)}/batch=$batchId"
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val hasFiles = Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/pfx=*/part-*"))).exists(_.nonEmpty)
-    if (hasFiles) spark.read.parquet(dir) else emptySig(spark)
-  }
-
   private def readSigLog(spark: SparkSession, stateDir: String,
       below: Long): DataFrame = {
     val dir = sigDir(stateDir)

@@ -64,6 +64,21 @@ private[graft] object StageIO {
       path
     }
 
+  /** Cross-JVM stage-once cache: write `frame` as parquet to `path` only
+    * when `path/_SUCCESS` is absent, then return the frame that reads
+    * `path`. A crashed write leaves no `_SUCCESS`, so the next call
+    * writes again. For artifacts that outlive the JVM (an eval index
+    * beside a maintained store, a per-dataset probe index); the [[once]]
+    * contract holds across JVMs here — a changed source needs a new
+    * `path`.
+    */
+  def persisted(spark: SparkSession, path: String)(frame: => DataFrame): DataFrame = {
+    val ok = new org.apache.hadoop.fs.Path(s"$path/_SUCCESS")
+    if (!ok.getFileSystem(spark.sessionState.newHadoopConf()).exists(ok))
+      frame.write.mode("overwrite").parquet(path)
+    spark.read.parquet(path)
+  }
+
   /** path → the writer whose content the path holds ([[once]]). */
   private val writers = new ConcurrentHashMap[String, String]()
   private val locks = new ConcurrentHashMap[String, AnyRef]()

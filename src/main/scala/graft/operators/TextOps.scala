@@ -110,13 +110,6 @@ object TextOps {
       .otherwise(lit(0.0))
   }
 
-  /** Mean token length in characters. */
-  def avgTokenLen(toks: Column): Column =
-    when(size(toks) > 0,
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t))
-        .cast(DoubleType) / size(toks).cast(DoubleType))
-      .otherwise(lit(0.0))
-
   /** Composite quality score in [0,1]: longer docs with less stopword mass
     * and informative tokens score higher. Pure double arithmetic — the same
     * formula is evaluated by the DuckDB oracle.

@@ -1064,16 +1064,13 @@ object Ext2Queries {
       val bmap = Seq("src18" -> "bench_a", "src19" -> "bench_b",
         "src17" -> "bench_c")
       bmap.map { case (src, b) =>
-        val dir = StageIO.artifactDir(s, s"eval_index_$src", d)
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-        if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")))
+        val index = StageIO.persisted(s,
+            StageIO.artifactDir(s, s"eval_index_$src", d))(
           DedupOps.evalShingleIndex(
-              docs.filter(col("source") === src), "text", "doc_id")
-            .write.mode("overwrite").parquet(dir)
+            docs.filter(col("source") === src), "text", "doc_id"))
         DedupOps.crossContamination(train, docs.limit(0), "text",
             "doc_id", 0.5, trainShingleCol = Some("sh"),
-            evalIndex = Some(s.read.parquet(dir)))
+            evalIndex = Some(index))
           .select(col("train_id"), lit(b).as("benchmark"),
             Det.round4Rat(col("inter"), col("n_eval")).as("contamination"))
       }.reduce(_.unionAll(_))

@@ -107,14 +107,11 @@ object Ext3Queries {
       val emb = Tables.embeddings(s, d)
       val eval = emb.filter(pmod(col("vec_id"), lit(25)) === 0)
       val train = emb.filter(pmod(col("vec_id"), lit(25)) =!= 0)
-      val dir = StageIO.artifactDir(s, "eval_probe_index", d)
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_SUCCESS")))
-        SimilarityOps.probeIndex(eval, "vec_id", "embedding", bits = 4)
-          .write.mode("overwrite").parquet(dir)
+      val index = StageIO.persisted(s,
+          StageIO.artifactDir(s, "eval_probe_index", d))(
+        SimilarityOps.probeIndex(eval, "vec_id", "embedding", bits = 4))
       val agg = SimilarityOps.cosineCrossWith(train, "vec_id", "embedding",
-          0.4, s.read.parquet(dir), bits = 4)
+          0.4, index, bits = 4)
         .groupBy(col("id").as("vec_id"))
         .agg(count(lit(1)).as("n_eval_hits"), max(col("cos")).as("max_cos"))
       train.select(col("vec_id"))

@@ -253,7 +253,7 @@ object Ext4Queries {
   private val convergedL1Micro = 10000L
 
   /** The MRR-gate composite behind x132/x132b, public so the scale probe
-    * ([[graft.ProbeMrr]]) measures the identical pipeline: dedup-derived
+    * (`graft.Probe mrr`) measures the identical pipeline: dedup-derived
     * ground truth (every doc with a Jaccard-0.8 partner plays the
     * query), a BM25 pass over the truth queries, and the
     * strictly-better rank join. `cap` = the truth arm's shingle-DF cap
@@ -463,7 +463,7 @@ object Ext4Queries {
     * arm hit alive in the fused list — so overlap sits well above raw
     * semantic recall; 0.6 is the floor under which fusion-under-probe
     * is genuinely broken (wrong centroids, wrong codebook, wrong fuse).
-    * Measured (ProbeFusion): 0.6333 at sf0.1 — the smallest factor
+    * Measured (`graft.Probe fusion`): 0.6333 at sf0.1 — the smallest factor
     * where the 8-cell quantizer has meaningful training data — and
     * 0.4667 at sf0.01/sf0.001, where k-means sees ≤500 unclustered
     * vectors (the AnnRecallSpec quantizer worst case). A FALSE at toy
@@ -540,7 +540,7 @@ object Ext4Queries {
   }
 
   /** The fusion-overlap-gate composite behind x126c/x126d, public so the
-    * scale probe ([[graft.ProbeFusion]]) measures the identical pipeline
+    * scale probe (`graft.Probe fusion`) measures the identical pipeline
     * (the mrrGate discipline): both fused top-3 sets — exact brute-force
     * arm and IVF-PQ probe arm over the SAME lexical shortlist — reduced
     * to the overlap census under the named 60% floor. `sampleMod` is the
@@ -591,7 +591,7 @@ object Ext4Queries {
     * demands ~8.3k census entries, beyond even the full population at
     * bench scale, which is precisely the r18 finding this row encodes
     * (a sampled verdict is only as good as margin × budget; report the
-    * sizing, don't tune the threshold). Public so [[graft.ProbeFusion]]
+    * sizing, don't tune the threshold). Public so `graft.Probe fusion`
     * measures the identical pipeline.
     */
   def fusionGateBudgeted(s: org.apache.spark.sql.SparkSession, d: String,
@@ -964,7 +964,7 @@ object Ext4Queries {
     // arms, so the benched composite holds a fixed query budget while
     // the corpus grows — the full form runs the O(corpus)-per-query
     // exact brute-force arm over a query population that itself grows
-    // with the corpus (~quadratic benched work; ProbeFusion measures
+    // with the corpus (~quadratic benched work; `Probe fusion` measures
     // the separation at 10×, SCALE.md r18). Overlap is an estimate over
     // queries — past sampling error, more queries don't sharpen it.
     "x126d_fusion_overlap_sampled" -> ((s, d) =>
@@ -975,7 +975,7 @@ object Ext4Queries {
     // (3/margin)² census size the r18 rule demands and whether this
     // census met it. At toy scale the census is honestly too small for
     // ANY near-band gate — `confident` says so in-band instead of the
-    // verdict pretending precision it lacks; ProbeFusion measures the
+    // verdict pretending precision it lacks; `Probe fusion` measures the
     // same row at bench scale and 10×, where the census clears the rule
     // (SCALE.md r19).
     "x126e_fusion_gate_budgeted" -> ((s, d) =>

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{PcaOps, SwapStore}
 
@@ -104,15 +103,4 @@ object GramStream {
       k: Int, scale: Int = 10000): DataFrame =
     PcaOps.principalComponents(readGram(spark, storeDir),
       readSums(spark, storeDir), dim, k, scale)
-
-  /** Run the accumulator continuously over a streaming vector frame. */
-  def startMaintenance(vecs: DataFrame, vecCol: String, storeDir: String,
-      checkpointDir: String): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        applyBatch(batch.toDF(), vecCol, storeDir, batchId)
-      }
-      .start()
 }

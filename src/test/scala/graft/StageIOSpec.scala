@@ -13,9 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AnnIndex, StageIO}
 
-/** The stage-handoff module: [[StageIO.stage]] (write, then re-read) and
-  * the per-JVM [[StageIO.once]] memo, including the basename-keyed ANN
-  * artifact that [[graft.queries.ExtQueries.x54BuildShared]] serves.
+/** The stage-handoff module: [[StageIO.stage]] (write, then re-read), the
+  * per-JVM [[StageIO.once]] memo, including the basename-keyed ANN
+  * artifact that [[graft.queries.ExtQueries.x54BuildShared]] serves, and
+  * the cross-JVM [[StageIO.persisted]] cache.
   */
 class StageIOSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -131,5 +132,21 @@ class StageIOSpec extends AnyFunSuite {
     assert(indexed(ExtQueries.x54BuildShared(spark, b)) == nB)
     assert(indexed(ExtQueries.x54BuildShared(spark, a)) == nA,
       "a shared build of b must invalidate a's shared index")
+  }
+
+  test("persisted: writes once across calls, and rewrites a crashed write") {
+    val p = StageIO.resolve(spark, None, "persisted")
+    val writes = new AtomicInteger(0)
+    def call() = StageIO.persisted(spark, p) {
+      writes.incrementAndGet(); spark.range(4).toDF("x") }
+    assert(call().count() == 4L)
+    assert(writes.get == 1, "the first call writes")
+    assert(call().count() == 4L)
+    assert(writes.get == 1, "a second call reads the committed dir")
+    // a write that died before its commit leaves parquet but no _SUCCESS
+    assert(fs.delete(new Path(s"$p/_SUCCESS"), false))
+    assert(call().count() == 4L)
+    assert(writes.get == 2, "a dir without _SUCCESS is rewritten")
+    assert(fs.exists(new Path(s"$p/_SUCCESS")))
   }
 }
