@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.CounterLog
+
 /** A persisted, incrementally-maintained IVF-PQ index over an embedding
   * column — the similarity-surface twin of [[IngestPipeline]]: a resident
   * process trains the quantizers ONCE on a seed batch, then each arrival
@@ -41,17 +43,11 @@ object AnnIndex {
   def postingsDir(base: String): String  = s"$base/postings"
   def delDir(base: String): String       = s"$base/del"
 
-  private def deleteDir(spark: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.delete(p, true)
-  }
-
   // the index geometry, pinned at init in a `_geometry` sidecar (the
   // CounterLog discipline) so ticks and probes read one tiny file instead
   // of running a distinct-count JOB over the codebook to rediscover m
   private def geometry(spark: SparkSession, base: String): Map[String, Int] =
-    graft.streaming.CounterLog.readGeometry(spark, base).getOrElse(Map.empty)
+    CounterLog.readGeometry(spark, base).getOrElse(Map.empty)
 
   /** m from the `_geometry` sidecar; falls back to counting the
     * broadcast-sized codebook's distinct sub_ids for stores built before
@@ -134,7 +130,7 @@ object AnnIndex {
       PqOps.pqTrain(trainInput, idCol, vecCol, m, kCodewords, pqIters)
         .coalesce(1).write.mode("overwrite").parquet(codebookDir(base))
     }
-    graft.streaming.CounterLog.writeGeometry(spark, base,
+    CounterLog.writeGeometry(spark, base,
       Seq("m" -> m, "kCells" -> kCells, "kCodewords" -> kCodewords,
         "residual" -> (if (residual) 1 else 0)))
     // postings accrue batch dirs from here on — a stale dir from a prior
@@ -147,7 +143,7 @@ object AnnIndex {
     // and compactPostings — must not silently anti-join freshly
     // re-ingested ids out of every probe.
     SwapStore.reset(spark, postingsDir(base))
-    deleteDir(spark, delDir(base))
+    CounterLog.retire(spark, delDir(base))
     appendBatch(spark, seedEmb, idCol, vecCol, base, batchId = 0L,
       attrs = attrs)
   }
@@ -220,17 +216,8 @@ object AnnIndex {
   /** The committed tombstone set, or None on a delete-free index (the
     * probe skips the anti-join entirely).
     */
-  private def readDelSet(spark: SparkSession, base: String)
-      : Option[DataFrame] = {
-    val dir = delDir(base)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasFiles = fs.exists(p) && Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/batch=*/part-*")))
-      .exists(_.nonEmpty)
-    if (!hasFiles) None
-    else Some(spark.read.parquet(dir).drop("batch").distinct())
-  }
+  private def delSet(spark: SparkSession, base: String): Option[DataFrame] =
+    CounterLog.tombstones(spark, delDir(base), "batch")
 
   /** Fold every accumulated `batch=K` postings dir into ONE
     * `batch=<maxId>` partition with the identical cell layout — the
@@ -247,36 +234,22 @@ object AnnIndex {
     * store.
     */
   def compactPostings(spark: SparkSession, base: String): Unit = {
-    val dir = postingsDir(base)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    SwapStore.repair(fs, dir)
-    val hasFiles = fs.exists(p) && Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/batch=*/cell=*/part-*")))
-      .exists(_.nonEmpty)
-    if (hasFiles) {
-      // tombstones apply PHYSICALLY here ([[deleteBatch]]): the fold
-      // anti-joins the committed delete set, then retires the del
-      // sub-log LAST — a crash before the retire leaves the probe's
-      // anti-join in force, so no window resurfaces deleted vectors
-      val del = readDelSet(spark, base)
-      val all0 = spark.read.parquet(dir)
-      val all = del.fold(all0)(d =>
+    // tombstones apply PHYSICALLY here ([[deleteBatch]]): the fold
+    // anti-joins the committed delete set, then retires the del
+    // sub-log LAST — a crash before the retire leaves the probe's
+    // anti-join in force, so no window resurfaces deleted vectors
+    val del = delSet(spark, base)
+    val folded = CounterLog.fold(spark, postingsDir(base), "batch",
+        Long.MaxValue)(all => del.fold(all)(d =>
         // join on the del parquet's OWN column name — deleteBatch wrote
         // `ids.select(idCol)`, so the stored name IS the id column; the
         // previous positional `all0.columns.head` inference was silently
         // coupled to appendBatch's write order (advisor r18)
-        all0.join(broadcast(d), Seq(d.columns.head), "left_anti"))
-      val maxId = all0.agg(max(col("batch").cast("long"))).head().getLong(0)
-      SwapStore.replace(spark, dir) { next =>
-        all.drop("batch").write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$next/batch=$maxId")
-      }
-      del.foreach { _ =>
-        val dp = new org.apache.hadoop.fs.Path(delDir(base))
-        fs.delete(dp, true)
-      }
+        all.join(broadcast(d), Seq(d.columns.head), "left_anti"))) {
+      (rows, _, target) =>
+        rows.write.mode("overwrite").partitionBy("cell").parquet(target)
     }
+    if (folded) del.foreach(_ => CounterLog.retire(spark, delDir(base)))
   }
 
   /** Batch probe: each query picks its `nprobe` nearest cells (exact L2
@@ -323,7 +296,7 @@ object AnnIndex {
     // committed tombstones ([[deleteBatch]]) drop out AFTER the cell
     // prune, BEFORE candidacy: a takedown-sized delete set broadcasts,
     // so exclusion costs one map-side anti-join on the pruned scan
-    val postings = readDelSet(spark, base).fold(postings1)(d =>
+    val postings = delSet(spark, base).fold(postings1)(d =>
       // the del parquet's own column name keys the join (advisor r18):
       // a caller-idCol mismatch fails loudly instead of renaming the
       // tombstone ids onto an arbitrary postings column

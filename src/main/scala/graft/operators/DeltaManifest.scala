@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.CounterLog
+
 /** INCREMENTAL manifest refresh — the missing piece between the batch
   * build ([[PipelineOps.trainingManifest]], full-rebuild only) and the
   * per-stage streaming gates: process an ARRIVALS batch into a delta
@@ -188,16 +190,9 @@ object DeltaManifest {
   }
 
   /** The committed tombstones of a del sub-log, or None when empty. */
-  private def readDelLog(spark: SparkSession, dir: String,
-      colName: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasFiles = fs.exists(p) && Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/batch=*/part-*")))
-      .exists(_.nonEmpty)
-    if (!hasFiles) None
-    else Some(spark.read.parquet(dir).select(colName).distinct())
-  }
+  private def delLog(spark: SparkSession, dir: String,
+      colName: String): Option[DataFrame] =
+    CounterLog.tombstones(spark, dir, "batch", Seq(colName))
 
   /** Every content hash ever admitted (merged over the log; MAY contain
     * duplicates across batches — its consumer is an anti-join, where
@@ -220,7 +215,7 @@ object DeltaManifest {
     // committed hash tombstones ([[deleteBatch]]) drop out BEFORE the
     // anti-join probe consumes the log, so re-ingested retracted content
     // is admitted again
-    val log = readDelLog(spark, s"$stateDir/hashes_del", "text_hash")
+    val log = delLog(spark, s"$stateDir/hashes_del", "text_hash")
       .fold(log0)(d => log0.join(d, Seq("text_hash"), "left_anti"))
     // widened: adaptive batches store 1-char buckets (see pfxWidth)
     prefixes.fold(log)(ps => log.filter(col("pfx").isin(widenPfxs(ps): _*)))
@@ -243,7 +238,7 @@ object DeltaManifest {
         "shard INT, chunk_id INT, doc_id BIGINT, tok_in_chunk INT",
         Long.MaxValue)
       .select("shard", "chunk_id", "doc_id", "tok_in_chunk")
-    readDelLog(spark, s"$stateDir/manifest_del", "doc_id")
+    delLog(spark, s"$stateDir/manifest_del", "doc_id")
       .fold(log)(d => log.join(d, Seq("doc_id"), "left_anti"))
   }
 
@@ -268,77 +263,33 @@ object DeltaManifest {
     // tombstones ([[deleteBatch]]) apply PHYSICALLY in the folds; the
     // del logs retire LAST and only on a full (offline) fold — a crash
     // before the retire leaves every reader's anti-join in force
-    val hashDel = readDelLog(spark, s"$stateDir/hashes_del", "text_hash")
-    val manDel = readDelLog(spark, s"$stateDir/manifest_del", "doc_id")
-    foldLog(spark, s"$stateDir/hashes", pfxKey = Some(col("text_hash")),
-      below = below, excl = hashDel.map((_, "text_hash")))
-    foldLog(spark, s"$stateDir/totals", pfxKey = None, below = below,
-      merge = df => df.groupBy("shard")
-        .agg(sum("n_tok").cast("long").as("n_tok")))
-    foldLog(spark, s"$stateDir/manifest", pfxKey = None, below = below,
-      excl = manDel.map((_, "doc_id")))
-    if (below == Long.MaxValue) {
-      val conf = spark.sessionState.newHadoopConf()
-      Seq(s"$stateDir/hashes_del", s"$stateDir/manifest_del").foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(conf).delete(p, true)
-      }
+    def minus(del: Option[DataFrame], k: String)(all: DataFrame) =
+      del.fold(all)(d => all.join(d, Seq(k), "left_anti"))
+    def fold(log: String)(rows: DataFrame => DataFrame)(
+        write: (DataFrame, String, String) => Unit): Unit =
+      CounterLog.fold(spark, s"$stateDir/$log", "batch", below)(rows)(write)
+    // the hash log re-buckets on text_hash at the width the FOLDED row
+    // count earns ([[pfxWidth]]) — batch dirs may mix widths (adaptive
+    // deltas beside a wide seed), so the stale per-batch `pfx` values
+    // are recomputed, never reused
+    fold("hashes")(minus(delLog(spark, s"$stateDir/hashes_del", "text_hash"),
+      "text_hash")) { (rows, _, target) =>
+      writePartitionedAdaptive(rows.drop("pfx"), target, col("text_hash"))
     }
-  }
-
-  /** `pfxKey`: when set, the fold re-buckets on this hex key at the
-    * width the FOLDED row count earns ([[pfxWidth]]) — batch dirs may
-    * mix widths (adaptive deltas beside a wide seed), so the stale
-    * per-batch `pfx` values are recomputed, never reused.
-    */
-  private def foldLog(spark: SparkSession, dir: String,
-      pfxKey: Option[org.apache.spark.sql.Column],
-      merge: DataFrame => DataFrame = identity,
-      below: Long = Long.MaxValue,
-      excl: Option[(DataFrame, String)] = None): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    SwapStore.repair(fs, dir)
-    val glob = if (pfxKey.isDefined) s"$dir/batch=*/pfx=*/part-*"
-      else s"$dir/batch=*/part-*"
-    val hasFiles = fs.exists(p) && Option(
-      fs.globStatus(new org.apache.hadoop.fs.Path(glob))).exists(_.nonEmpty)
-    if (hasFiles) {
-      // bounded fold (see IngestPipeline.compactAll): ids >= below are
-      // an in-flight batch's partials — the swap discards them and the
-      // caller's replay rewrites them
-      val all0 = spark.read.parquet(dir)
-        .filter(col("batch").cast("long") < below)
-      if (all0.isEmpty) return
-      val all = excl.fold(all0) { case (d, k) =>
-        all0.join(d, Seq(k), "left_anti") }
-      val maxId = all0.agg(max(col("batch").cast("long"))).head().getLong(0)
-      val folded = merge(all.drop("batch"))
-      // rename-aside swap (SwapStore, judge r18 #1): the live log is
-      // never deleted before its replacement is in place, and every
-      // reader/writer repairs an interrupted swap first
-      SwapStore.replace(spark, dir) { next =>
-        pfxKey match {
-          case Some(k) =>
-            writePartitionedAdaptive(folded.drop("pfx"),
-              s"$next/batch=$maxId", k)
-          case None =>
-            folded.write.mode("overwrite").parquet(s"$next/batch=$maxId")
-        }
-      }
-    }
+    fold("totals")(_.groupBy("shard")
+      .agg(sum("n_tok").cast("long").as("n_tok")))(CounterLog.overwrite)
+    fold("manifest")(minus(delLog(spark, s"$stateDir/manifest_del", "doc_id"),
+      "doc_id"))(CounterLog.overwrite)
+    if (below == Long.MaxValue)
+      Seq("hashes_del", "manifest_del")
+        .foreach(d => CounterLog.retire(spark, s"$stateDir/$d"))
   }
 
   private def readLog(spark: SparkSession, dir: String, schemaDDL: String,
-      below: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    SwapStore.repair(fs, dir)
-    if (fs.exists(p))
-      spark.read.parquet(dir).filter(col("batch").cast("long") < below)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDDL))
-  }
+      below: Long): DataFrame =
+    CounterLog.read(spark, dir, "batch", below).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        org.apache.spark.sql.types.StructType.fromDDL(schemaDDL)))
 
   /** Process one arrivals batch into delta manifest rows; returns the
     * delta and appends it (plus the state it implies) to the log under

@@ -4,6 +4,8 @@ import graft.Telemetry.phase
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.CounterLog
+
 /** The ONE-CALL ingest tick (judge r9 stretch): the
   * pairs → cluster store → delta manifest composition DeltaManifestSpec
   * proved as a recipe, packaged so the ordering contract — the batch's
@@ -127,17 +129,9 @@ object IngestPipeline {
   }
 
   /** The committed signature tombstones, or None on a delete-free log. */
-  private def readSigDelSet(spark: SparkSession, stateDir: String)
-      : Option[DataFrame] = {
-    val dir = delDir(stateDir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasFiles = fs.exists(p) && Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/batch=*/part-*")))
-      .exists(_.nonEmpty)
-    if (!hasFiles) None
-    else Some(spark.read.parquet(dir).select("doc_id").distinct())
-  }
+  private def sigDelSet(spark: SparkSession, stateDir: String)
+      : Option[DataFrame] =
+    CounterLog.tombstones(spark, delDir(stateDir), "batch", Seq("doc_id"))
 
   /** (doc_id, sh) — REUSING a staged `sh` column when the frame carries
     * one (the [[DeltaManifest.stageGated]] batch does since r12), else
@@ -358,54 +352,29 @@ object IngestPipeline {
   def compactIfNeeded(spark: SparkSession, stateDir: String,
       maxBatches: Int = 64, below: Long = Long.MaxValue): Boolean = {
     require(maxBatches >= 1, s"maxBatches: $maxBatches")
-    val p = new org.apache.hadoop.fs.Path(sigDir(stateDir))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    SwapStore.repair(fs, sigDir(stateDir))
+    SwapStore.repair(spark, sigDir(stateDir))
     // count only foldable (< below) partitions: a partial current-batch
     // dir must not trip the trigger into a fold of nothing
     val nBatches =
-      if (fs.exists(p))
-        fs.listStatus(p).map(_.getPath.getName)
-          .count(n => n.startsWith("batch=") &&
-            scala.util.Try(n.stripPrefix("batch=").toLong < below)
-              .getOrElse(false))
-      else 0
+      CounterLog.batchIds(spark, sigDir(stateDir), "batch").count(_ < below)
     if (nBatches > maxBatches) { compactAll(spark, stateDir, below); true }
     else false
   }
 
   def compactSignatures(spark: SparkSession, stateDir: String,
       below: Long = Long.MaxValue): Unit = {
-    val dir = sigDir(stateDir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    SwapStore.repair(fs, dir)
-    val hasFiles = fs.exists(p) && Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/batch=*/pfx=*/part-*")))
-      .exists(_.nonEmpty)
-    if (hasFiles) {
-      // tombstones ([[deleteSignatures]]) apply PHYSICALLY in the fold
-      // and the del log retires LAST — a crash before the retire leaves
-      // readSigLog's anti-join in force, so no window resurfaces a
-      // deleted doc's signatures
-      val del = readSigDelSet(spark, stateDir)
-      val all0 = spark.read.parquet(dir)
-        .filter(col("batch").cast("long") < below)
-      // nothing committed below the bound — leave the dir alone (any
-      // at-or-above partial is the caller's in-flight batch)
-      if (!all0.isEmpty) {
-        val all = del.fold(all0)(d => all0.join(d, Seq("doc_id"), "left_anti"))
-        val maxId = all0.agg(max(col("batch").cast("long"))).head().getLong(0)
-        SwapStore.replace(spark, dir) { next =>
-          DeltaManifest.writePartitionedAdaptive(all.drop("batch"),
-            s"$next/batch=$maxId", col("band_key"))
-        }
-        if (below == Long.MaxValue) del.foreach { _ =>
-          val dp = new org.apache.hadoop.fs.Path(delDir(stateDir))
-          fs.delete(dp, true)
-        }
-      }
+    // tombstones ([[deleteSignatures]]) apply PHYSICALLY in the fold
+    // and the del log retires LAST — a crash before the retire leaves
+    // readSigLog's anti-join in force, so no window resurfaces a
+    // deleted doc's signatures
+    val del = sigDelSet(spark, stateDir)
+    val folded = CounterLog.fold(spark, sigDir(stateDir), "batch", below)(
+      all => del.fold(all)(d => all.join(d, Seq("doc_id"), "left_anti"))) {
+      (rows, _, target) =>
+        DeltaManifest.writePartitionedAdaptive(rows, target, col("band_key"))
     }
+    if (folded && below == Long.MaxValue)
+      del.foreach(_ => CounterLog.retire(spark, delDir(stateDir)))
   }
 
   private val sigSchema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -416,23 +385,13 @@ object IngestPipeline {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sigSchema)
 
   private def readSigLog(spark: SparkSession, stateDir: String,
-      below: Long): DataFrame = {
-    val dir = sigDir(stateDir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    SwapStore.repair(fs, dir)
-    val hasFiles = fs.exists(p) && Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/batch=*/pfx=*/part-*")))
-      .exists(_.nonEmpty)
-    if (!hasFiles) emptySig(spark)
-    else {
-      val log = spark.read.parquet(dir)
-        .filter(col("batch").cast("long") < below)
-        .drop("batch")
-      // committed tombstones drop out BEFORE the band join, so a deleted
-      // doc's signatures never become pair candidates
-      readSigDelSet(spark, stateDir).fold(log)(d =>
-        log.join(d, Seq("doc_id"), "left_anti"))
-    }
-  }
+      below: Long): DataFrame =
+    CounterLog.read(spark, sigDir(stateDir), "batch", below)
+      .fold(emptySig(spark)) { all =>
+        val log = all.drop("batch")
+        // committed tombstones drop out BEFORE the band join, so a deleted
+        // doc's signatures never become pair candidates
+        sigDelSet(spark, stateDir).fold(log)(d =>
+          log.join(d, Seq("doc_id"), "left_anti"))
+      }
 }

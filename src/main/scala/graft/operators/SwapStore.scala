@@ -5,14 +5,15 @@ import org.apache.spark.sql.SparkSession
 
 /** ONE definition of the crash-safe directory-swap discipline every
   * maintained store follows — the only code that renames a store dir or
-  * its `.next`/`.old` siblings. Users: [[AnnIndex]] postings,
-  * [[IngestPipeline]] signatures, [[DeltaManifest]] logs, and the
-  * streaming stores [[graft.streaming.ClusterStream]],
-  * [[graft.streaming.PostingsStream]], [[graft.streaming.ParagraphStream]]
-  * and the counter logs ([[graft.streaming.SketchStream]],
-  * [[graft.streaming.QuantileStream]], [[graft.streaming.DriftStream]],
-  * [[graft.streaming.NgramStream]], [[graft.streaming.UnigramStream]],
-  * [[graft.streaming.GramStream]]).
+  * its `.next`/`.old` siblings. Users: [[graft.streaming.ClusterStream]]'s
+  * label store, and [[graft.streaming.CounterLog]]'s fold — the
+  * compaction of every batch-keyed log ([[AnnIndex]] postings,
+  * [[IngestPipeline]] signatures, [[DeltaManifest]] logs,
+  * [[graft.streaming.PostingsStream]], [[graft.streaming.ParagraphStream]],
+  * [[graft.streaming.SketchStream]], [[graft.streaming.QuantileStream]],
+  * [[graft.streaming.DriftStream]], [[graft.streaming.NgramStream]] and
+  * [[graft.streaming.UnigramStream]]); [[graft.streaming.GramStream]]
+  * repairs through it.
   *
   * The rename-aside order:
   *

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.queries.DuckSql._
 import graft.operators.{DedupOps, StageIO}
 import org.apache.spark.sql.functions._
 
@@ -62,17 +63,6 @@ object Ext2Queries {
           lit("\nfunction() { return 0; }")).otherwise(lit("")))
         .as("text"))
   }
-
-  // oracle-side vector folds — kept textually identical to ExtQueries'
-  // private ddbSum/ddbDot/ddbCos (the SimilarityOps.dot twins); edited
-  // in lockstep with those
-  private def ddbSum(l: String) = s"list_reduce($l, (x,y) -> x+y)"
-  private def ddbDot(a: String, b: String) =
-    ddbSum(s"list_transform(list_zip($a,$b), z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))")
-  private def ddbNorm2(a: String) =
-    ddbSum(s"list_transform($a, v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))")
-  private def ddbCos(a: String, b: String) =
-    s"${ddbDot(a, b)} / (sqrt(${ddbNorm2(a)}) * sqrt(${ddbNorm2(b)}))"
 
   /** Train top-`k` PCA components on the corpus and persist them under
     * the given artifact tag — each consumer query trains its OWN

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.queries.DuckSql._
 import org.apache.spark.sql.functions._
 
 /** Round-13 extension inventory — the release-audit / compliance /
@@ -12,28 +13,6 @@ import org.apache.spark.sql.functions._
   * oracle discipline as every other group.
   */
 object Ext3Queries {
-
-  // DuckDB twins of TextOps.tokens / HashExprs.distinctShingles — kept in
-  // lockstep with ExtQueries' private copies (single formula, two sites).
-  private val mdToks = "string_split(text, ' ')"
-  // TextOps.tokensNonEmpty twin (span-surgery family: empty docs vanish)
-  private val mdToksNE =
-    "list_filter(string_split(text, ' '), t -> len(t) > 0)"
-  private val ddbWords =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0)"
-  private val mdShingles =
-    "list_distinct(list_transform(range(1, len(t)-1), i -> t[i]||' '||t[i+1]||' '||t[i+2]))"
-  private def ddbSum(l: String) = s"list_reduce($l, (x,y) -> x+y)"
-  private def ddbDot(a: String, b: String) =
-    ddbSum(s"list_transform(list_zip($a,$b), z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))")
-  private def ddbNorm2(a: String) =
-    ddbSum(s"list_transform($a, v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))")
-  private def ddbCos(a: String, b: String) =
-    s"${ddbDot(a, b)} / (sqrt(${ddbNorm2(a)}) * sqrt(${ddbNorm2(b)}))"
-  private def ddbBucketN(v: String, bits: Int) = (0 until bits).map(i =>
-    s"(CASE WHEN $v[${i + 1}] > 0 THEN ${1 << i} ELSE 0 END)").mkString(" + ")
-  private def ddbList(xs: Seq[String]) =
-    xs.map(s => s"'$s'").mkString("[", ",", "]")
 
   // the x9 quality rational as a DuckDB CTE body (the x90/x106 twin),
   // carrying (doc_id, source, n_chars, nt, qnum, qden)

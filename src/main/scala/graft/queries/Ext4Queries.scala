@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.queries.DuckSql._
 import graft.Telemetry.phase
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,27 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object Ext4Queries {
 
-  // DuckDB twin of TextOps.tokensNonEmpty (kept in lockstep with
-  // Ext3Queries' private copy — single formula, two sites)
-  private val mdToksNE =
-    "list_filter(string_split(text, ' '), t -> len(t) > 0)"
-  private def ddbSum(l: String) = s"list_reduce($l, (x,y) -> x+y)"
-  private def ddbDot(a: String, b: String) =
-    ddbSum(s"list_transform(list_zip($a,$b), z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))")
-  private def ddbNorm2(a: String) =
-    ddbSum(s"list_transform($a, v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))")
-
   // word-bigram term list (RetrievalOps.terms(_, 2) twin): adjacent-token
   // pairs over the empty-dropping tokenization; <2-token docs have none
   private val mdBigrams =
     s"list_transform(range(1, len(tt)), i -> tt[i] || ' ' || tt[i+1])"
-
-  // x53/x54 PQ geometry, in lockstep with ExtQueries' private pair
-  // (m = 16 subspaces of size 4 over dim-64 vectors)
-  private val pqM = 16
-  private val pqSub = 4
-  private def ddbDist2(a: String, b: String) =
-    ddbSum(s"list_transform(list_zip($a,$b), z -> (CAST(z[1] AS DOUBLE)-CAST(z[2] AS DOUBLE))*(CAST(z[1] AS DOUBLE)-CAST(z[2] AS DOUBLE)))")
 
   /** The DuckDB replay of the x54 IVF-PQ probe — the x54 oracle's CTE
     * chain (encode every vector from the persisted `ann_index`
@@ -104,20 +88,6 @@ object Ext4Queries {
                ORDER BY adist ASC, vec_id) AS BIGINT) AS sem_rank
       FROM adc
       QUALIFY sem_rank <= $k)"""
-
-  /** The RRF fusion CTE body (x126's oracle formula): `lexCte ⊔ semCte`
-    * on (q_id, doc_id), each rank's 1/(60+rank) rounded half-up to bps.
-    */
-  private def ddbFuseCte(lexCte: String, semCte: String) = s"""
-    SELECT coalesce(l.q_id, s.q_id) AS q_id,
-           coalesce(l.doc_id, s.doc_id) AS doc_id,
-           l.lex_rank, s.sem_rank,
-           CAST(coalesce((20000 + (60 + l.lex_rank))
-                  // (2 * (60 + l.lex_rank)), 0)
-                + coalesce((20000 + (60 + s.sem_rank))
-                  // (2 * (60 + s.sem_rank)), 0) AS BIGINT) AS rrf_bp
-    FROM $lexCte l FULL OUTER JOIN $semCte s
-      ON l.q_id = s.q_id AND l.doc_id = s.doc_id"""
 
   /** The corpus-side BM25 base CTEs over a corpus CTE named `corpus`
     * (columns doc_id, text): bigram postings `tf`, scalars `stats`,

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.queries.DuckSql._
 import graft.operators.{DedupOps, MultimodalOps, SimilarityOps, StageIO,
   TextOps}
 import org.apache.spark.sql.expressions.Window
@@ -247,33 +248,6 @@ object ExtQueries {
     DeltaManifest.readManifest(s, state)
       .orderBy("shard", "chunk_id", "doc_id")
   }
-
-  private val mdToks = "string_split(text, ' ')"
-  // TextOps.tokensNonEmpty twin — the span-surgery family's tokenizer of
-  // record (empty/whitespace-only docs => zero tokens => disappear)
-  private val mdToksNE =
-    "list_filter(string_split(text, ' '), t -> len(t) > 0)"
-  private val mdShingles =
-    "list_distinct(list_transform(range(1, len(t)-1), i -> t[i]||' '||t[i+1]||' '||t[i+2]))"
-  private def ddbSum(l: String) = s"list_reduce($l, (x,y) -> x+y)"
-  private def ddbDot(a: String, b: String) =
-    ddbSum(s"list_transform(list_zip($a,$b), z -> CAST(z[1] AS DOUBLE)*CAST(z[2] AS DOUBLE))")
-  private def ddbNorm2(a: String) =
-    ddbSum(s"list_transform($a, v -> CAST(v AS DOUBLE)*CAST(v AS DOUBLE))")
-  private def ddbList(xs: Seq[String]) = xs.map(s => s"'$s'").mkString("[", ",", "]")
-  // single source of truth for the oracle-side twins of
-  // SimilarityOps.cosine/signBucket — edited in lockstep with those
-  private def ddbCos(a: String, b: String) =
-    s"${ddbDot(a, b)} / (sqrt(${ddbNorm2(a)}) * sqrt(${ddbNorm2(b)}))"
-  // x53/x54 PQ geometry: m subspaces over dim-64 vectors, size/m each
-  private val pqM = 16
-  private val pqSub = 4
-  // exact squared-L2 twin of PqOps.dist2 (left-to-right double sum)
-  private def ddbDist2(a: String, b: String) =
-    ddbSum(s"list_transform(list_zip($a,$b), z -> (CAST(z[1] AS DOUBLE)-CAST(z[2] AS DOUBLE))*(CAST(z[1] AS DOUBLE)-CAST(z[2] AS DOUBLE)))")
-  private def ddbBucketN(v: String, bits: Int) = (0 until bits).map(i =>
-    s"(CASE WHEN $v[${i + 1}] > 0 THEN ${1 << i} ELSE 0 END)").mkString(" + ")
-  private def ddbBucket(v: String) = ddbBucketN(v, 8)
 
   val defs: Map[String, Q] = Map(
     // ---- dedup ----
@@ -4381,8 +4355,6 @@ object ExtQueries {
     // iterated argmax) is not SQL-expressible; BpeSpec/BpeProps own it.
     // Each caller defines its own `dw` (distinct words) CTE and appends
     // this block; `wdone` is the fully-merged symbol string per word.
-    val ddbWords =
-      "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0)"
     def bpeReplay(tag: String) =
       s"""m AS (
            SELECT "rank" AS mrank, lhs, rhs

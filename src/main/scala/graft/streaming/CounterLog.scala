@@ -2,26 +2,133 @@ package graft.streaming
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, max}
 
-/** Shared plumbing for batch-keyed COUNTER LOGS ([[SketchStream]],
-  * [[QuantileStream]]): the "any data yet?" probe that ignores the
-  * hidden geometry file, and the `_geometry` key-value file that pins a
-  * store's shape on first write ([[graft.operators.AnnIndex]] pins its
-  * index geometry with it too). Compaction swaps go through
-  * [[graft.operators.SwapStore]].
+import graft.operators.SwapStore
+
+/** The one implementation of the BATCH-KEYED LOG every maintained store
+  * keeps: each micro-batch writes under `key=<id>/` (`batch_id=` for the
+  * streaming stores, `batch=` for [[graft.operators.AnnIndex]],
+  * [[graft.operators.IngestPipeline]], [[graft.operators.DeltaManifest]]
+  * and [[SpanStream]]'s history), readers merge the committed batches and
+  * skip ids in a tombstone sub-log, and an OFFLINE fold compacts the log
+  * into one partition keyed by the highest folded id. It also holds the
+  * `_geometry` key-value file that pins a store's shape on first write
+  * ([[SketchStream]], [[QuantileStream]] and AnnIndex's index geometry).
+  *
+  * COMMITTED: a `key=<id>` child counts as data when it holds a `part-`
+  * file at any depth (under `pfx=`/`cell=` sub-partitions too) outside a
+  * hidden `_`/`.` dir. A batch dir holding only `_temporary` — what a
+  * crash before the first task commit leaves — is not data: Spark's own
+  * file discovery skips it, so reading such a store fails to infer a
+  * schema. Every probe runs [[SwapStore.repair]] first.
+  *
+  * FOLD ORDER: probe, read the rows below the bound, take `max(key)` in
+  * the one aggregate (null ⇒ nothing to fold), then write the folded rows
+  * through [[SwapStore.replace]]. A tombstone sub-log is [[retire]]d by
+  * its caller only AFTER every fold that applies it has committed: a
+  * crash in between leaves the tombstones, and every reader's anti-join,
+  * in force, and replaying the compaction finishes the job. A failed
+  * retire throws.
   */
 private[graft] object CounterLog {
 
-  /** Whether any `batch_id=` partition has committed — a store holding
-    * only the hidden `_geometry` file (a crash between the geometry and
-    * first data write) is still EMPTY as a sketch.
+  private def fsOf(spark: SparkSession, dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Every `key=<id>` child of `dir` (committed or not), by id. */
+  def batchIds(spark: SparkSession, dir: String, key: String): Seq[Long] = {
+    val p = new Path(dir)
+    val fs = fsOf(spark, dir)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(s"$key="))
+      .flatMap(n => n.stripPrefix(s"$key=").toLongOption)
+  }
+
+  /** Whether any batch has COMMITTED (see the object doc): a `part-` file
+    * under some `key=<id>` child, found by a lazy depth-first listing that
+    * skips hidden dirs and stops at the first hit.
     */
-  def hasData(spark: SparkSession, storeDir: String): Boolean = {
-    val store = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = store.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.exists(store) && fs.listStatus(store)
-      .exists(_.getPath.getName.startsWith("batch_id="))
+  def hasData(spark: SparkSession, dir: String,
+      key: String = "batch_id"): Boolean = {
+    SwapStore.repair(spark, dir)
+    val p = new Path(dir)
+    val fs = fsOf(spark, dir)
+    def committed(d: Path): Boolean = {
+      val it = fs.listStatusIterator(d)
+      var hit = false
+      while (!hit && it.hasNext) {
+        val st = it.next()
+        val n = st.getPath.getName
+        hit = !n.startsWith("_") && !n.startsWith(".") &&
+          (if (st.isDirectory) committed(st.getPath) else n.startsWith("part-"))
+      }
+      hit
+    }
+    fs.exists(p) && fs.listStatus(p).exists(st => st.isDirectory &&
+      st.getPath.getName.startsWith(s"$key=") && committed(st.getPath))
+  }
+
+  /** The committed log, restricted to ids below `below`, or None before
+    * the first commit.
+    */
+  def read(spark: SparkSession, dir: String, key: String,
+      below: Long = Long.MaxValue): Option[DataFrame] =
+    if (!hasData(spark, dir, key)) None
+    else Some(spark.read.parquet(dir).filter(col(key).cast("long") < below))
+
+  /** The distinct committed tombstones of a delete sub-log, projected to
+    * `cols` (Nil keeps every column but the key — a log whose id column
+    * is named by its writer), or None on a store with no deletes.
+    */
+  def tombstones(spark: SparkSession, delDir: String, key: String,
+      cols: Seq[String] = Nil): Option[DataFrame] =
+    read(spark, delDir, key).map { d =>
+      (if (cols.isEmpty) d.drop(key) else d.select(cols.map(col): _*))
+        .distinct()
+    }
+
+  /** Fold every committed batch below `below` into one `key=<max id>`
+    * partition: `rows` maps the read log (key column dropped) to the
+    * folded rows, and `write` receives them with the swap's scratch dir
+    * and the target partition under it. Returns whether a fold ran — an
+    * empty log, or one whose rows all lie at or above `below`, is left
+    * untouched. Ids at or above `below` are an in-flight batch's partials:
+    * the swap discards them and the caller's replay rewrites them.
+    */
+  def fold(spark: SparkSession, dir: String, key: String, below: Long)(
+      rows: DataFrame => DataFrame)(
+      write: (DataFrame, String, String) => Unit): Boolean =
+    read(spark, dir, key, below) match {
+      case None => false
+      case Some(all) =>
+        val top = all.agg(max(col(key).cast("long"))).head()
+        if (top.isNullAt(0)) false
+        else {
+          SwapStore.replace(spark, dir) { next =>
+            write(rows(all.drop(key)), next, s"$next/$key=${top.getLong(0)}")
+          }
+          true
+        }
+    }
+
+  /** The plain `write` for [[fold]]: overwrite the target partition. */
+  def overwrite(rows: DataFrame, next: String, target: String): Unit =
+    rows.write.mode("overwrite").parquet(target)
+
+  /** Delete `dir` recursively and require it gone — a missing dir counts
+    * as done; a delete that returns false or throws with the dir still in
+    * place fails loudly.
+    */
+  def retire(spark: SparkSession, dir: String): Unit = {
+    val p = new Path(dir)
+    val fs = fsOf(spark, dir)
+    try fs.delete(p, true)
+    catch { case NonFatal(_) if !fs.exists(p) => false }
+    require(!fs.exists(p), s"retire failed: $p")
   }
 
   /** The pinned geometry key-values, if any batch has committed its

@@ -78,7 +78,6 @@ object DriftStream {
     * observations is a monitoring bug, not a 0.
     */
   def readCounts(spark: SparkSession, storeDir: String): DataFrame = {
-    SwapStore.repair(spark, storeDir)
     require(CounterLog.hasData(spark, storeDir),
       s"drift log $storeDir has no committed batches — nothing to read")
     spark.read.parquet(storeDir).groupBy("k")
@@ -118,19 +117,11 @@ object DriftStream {
     * contract; a replayed folded id would double-count after its
     * partition was merged away).
     */
-  def compact(spark: SparkSession, storeDir: String): Unit = {
-    SwapStore.repair(spark, storeDir)
-    if (CounterLog.hasData(spark, storeDir)) {
-      val all = spark.read.parquet(storeDir)
-      val maxId = all.agg(max(col("batch_id").cast("long"))).head().getLong(0)
-      SwapStore.replace(spark, storeDir) { next =>
-        all.groupBy("k").agg(sum("cnt").as("cnt"))
-          // fully-cancelled keys ([[deleteBatch]]) fold away physically
-          .filter(col("cnt") =!= 0L)
-          .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-      }
-    }
-  }
+  def compact(spark: SparkSession, storeDir: String): Unit =
+    CounterLog.fold(spark, storeDir, "batch_id", Long.MaxValue)(
+      _.groupBy("k").agg(sum("cnt").as("cnt"))
+        // fully-cancelled keys ([[deleteBatch]]) fold away physically
+        .filter(col("cnt") =!= 0L))(CounterLog.overwrite)
 
   /** Maintain `storeDir` continuously from a streaming frame. Readers
     * see plain parquet; [[driftAgainst]] works mid-stream.

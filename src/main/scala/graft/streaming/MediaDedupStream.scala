@@ -94,7 +94,8 @@ object MediaDedupStream {
           // committed tombstones ([[deleteBatch]]) drop out BEFORE the
           // gate probe: a retracted asset's hash stops diverting future
           // copies the moment the tombstone commits
-          val prior = readDelSet(spark, storeDir)
+          val prior = CounterLog.tombstones(spark, s"$storeDir/_del",
+              "batch_id", Seq("asset_id"))
             .fold(prior0)(d =>
               prior0.join(broadcast(d), Seq("asset_id"), "left_anti"))
             .select(words.map(col): _*).distinct()
@@ -137,14 +138,8 @@ object MediaDedupStream {
   /** The admitted-hash store as a frame (batch_id, pfx partitions
     * included), or None before the first commit.
     */
-  def readStore(spark: SparkSession, storeDir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p) && fs.listStatus(p)
-        .exists(_.getPath.getName.startsWith("batch_id=")))
-      Some(spark.read.parquet(storeDir))
-    else None
-  }
+  def readStore(spark: SparkSession, storeDir: String): Option[DataFrame] =
+    CounterLog.read(spark, storeDir, "batch_id")
 
   /** Retract assets' ADMITTED hashes from the gate store — the takedown
     * path on the perceptual-dedup surface (judge r18 gap #1, the
@@ -165,19 +160,6 @@ object MediaDedupStream {
     if (assetIds.isEmpty) return
     assetIds.select("asset_id").distinct()
       .write.mode("overwrite").parquet(s"$storeDir/_del/batch_id=$batchId")
-  }
-
-  /** The committed asset tombstones, or None on a delete-free store. */
-  private def readDelSet(spark: SparkSession, storeDir: String)
-      : Option[DataFrame] = {
-    val dir = s"$storeDir/_del"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasFiles = fs.exists(p) && Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/batch_id=*/part-*")))
-      .exists(_.nonEmpty)
-    if (!hasFiles) None
-    else Some(spark.read.parquet(dir).select("asset_id").distinct())
   }
 
   /** Run the gate continuously over a streaming asset frame. */

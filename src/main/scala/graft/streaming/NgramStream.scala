@@ -70,18 +70,11 @@ object NgramStream {
     * ([[deleteBatch]]) drop here, so the merged table is row-for-row a
     * survivor-only build.
     */
-  def readCounts(spark: SparkSession, storeDir: String): Option[DataFrame] = {
-    SwapStore.repair(spark, storeDir)
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p) && fs.listStatus(p)
-        .exists(_.getPath.getName.startsWith("batch_id=")))
-      Some(spark.read.parquet(storeDir)
-        .groupBy("ord", "gram")
+  def readCounts(spark: SparkSession, storeDir: String): Option[DataFrame] =
+    CounterLog.read(spark, storeDir, "batch_id").map(
+      _.groupBy("ord", "gram")
         .agg(sum("cnt").cast("long").as("cnt"))
         .filter(col("cnt") =!= 0L))
-    else None
-  }
 
   /** Fold every batch partition into ONE pre-summed partition keyed by
     * the max folded id — the [[SketchStream.compact]] maintenance
@@ -89,22 +82,13 @@ object NgramStream {
     * replayable.
     */
   def compact(spark: SparkSession, storeDir: String,
-      below: Long = Long.MaxValue): Unit = {
-    SwapStore.repair(spark, storeDir)
-    if (!CounterLog.hasData(spark, storeDir)) return
-    val all = spark.read.parquet(storeDir)
-      .filter(col("batch_id").cast("long") < below)
-    if (all.isEmpty) return
-    val maxId = all.agg(max(col("batch_id").cast("long"))).head().getLong(0)
-    val folded = all.groupBy("ord", "gram")
-      .agg(sum("cnt").cast("long").as("cnt"))
-      // fully-cancelled grams ([[deleteBatch]]) fold away physically, so
-      // the compacted log is row-for-row a survivor-only build
-      .filter(col("cnt") =!= 0L)
-    SwapStore.replace(spark, storeDir) { next =>
-      folded.write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-    }
-  }
+      below: Long = Long.MaxValue): Unit =
+    CounterLog.fold(spark, storeDir, "batch_id", below)(
+      _.groupBy("ord", "gram")
+        .agg(sum("cnt").cast("long").as("cnt"))
+        // fully-cancelled grams ([[deleteBatch]]) fold away physically, so
+        // the compacted log is row-for-row a survivor-only build
+        .filter(col("cnt") =!= 0L))(CounterLog.overwrite)
 
   /** Run count maintenance continuously over a streaming document
     * frame (foreachBatch → [[applyBatch]], the [[AnnIndexStream]]

@@ -82,7 +82,7 @@ object ParagraphStream {
           // blocking future copies the moment the tombstone commits.
           // Pre-owner legacy stores have no `owner` column — they also
           // have no deletions, so the del set is None there.
-          val prior = readDelSet(spark, storeDir)
+          val prior = delSet(spark, storeDir)
             .fold(prior0)(d =>
               prior0.join(broadcast(d), Seq("owner"), "left_anti"))
             .select("ph").distinct()
@@ -123,15 +123,8 @@ object ParagraphStream {
   /** The admitted-hash store as a frame (batch_id, pfx partitions
     * included), or None before the first commit.
     */
-  def readStore(spark: SparkSession, storeDir: String): Option[DataFrame] = {
-    graft.operators.SwapStore.repair(spark, storeDir)
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p) && fs.listStatus(p)
-        .exists(_.getPath.getName.startsWith("batch_id=")))
-      Some(spark.read.parquet(storeDir))
-    else None
-  }
+  def readStore(spark: SparkSession, storeDir: String): Option[DataFrame] =
+    CounterLog.read(spark, storeDir, "batch_id")
 
   /** Retract documents' ADMITTED hashes from the gate store — the
     * takedown path on the boilerplate gate (judge r18 gap #1): one
@@ -166,17 +159,9 @@ object ParagraphStream {
   }
 
   /** The committed owner tombstones, or None on a delete-free store. */
-  private def readDelSet(spark: SparkSession, storeDir: String)
-      : Option[DataFrame] = {
-    val dir = s"$storeDir/_del"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasFiles = fs.exists(p) && Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$dir/batch_id=*/part-*")))
-      .exists(_.nonEmpty)
-    if (!hasFiles) None
-    else Some(spark.read.parquet(dir).select("owner").distinct())
-  }
+  private def delSet(spark: SparkSession, storeDir: String)
+      : Option[DataFrame] =
+    CounterLog.tombstones(spark, s"$storeDir/_del", "batch_id", Seq("owner"))
 
   /** Fold every batch partition of the hash store into ONE, keyed by
     * the max folded id and in the same `pfx=` sub-partition layout (the
@@ -191,25 +176,15 @@ object ParagraphStream {
     * resurfaces deleted hashes. OFFLINE rule as everywhere: no gate
     * writing, no folded batch id replayable.
     */
-  def compact(spark: SparkSession, storeDir: String): Unit = {
-    graft.operators.SwapStore.repair(spark, storeDir)
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasFiles = fs.exists(p) && Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$storeDir/batch_id=*/pfx=*/part-*")))
-      .exists(_.nonEmpty)
-    if (hasFiles) {
-      val del = readDelSet(spark, storeDir)
-      val all0 = spark.read.parquet(storeDir)
-      val all = del.fold(all0)(d => all0.join(d, Seq("owner"), "left_anti"))
-      val maxId = all0.agg(max(col("batch_id").cast("long")))
-        .head().getLong(0)
-      graft.operators.SwapStore.replace(spark, storeDir) { next =>
-        graft.operators.DeltaManifest.writePartitionedAdaptive(
-          all.drop("batch_id"), s"$next/batch_id=$maxId", col("ph"))
-      }
+  def compact(spark: SparkSession, storeDir: String): Unit =
+    // the tombstones are read inside the fold, after its probe has
+    // repaired the store they live in
+    CounterLog.fold(spark, storeDir, "batch_id", Long.MaxValue)(all =>
+      delSet(spark, storeDir).fold(all)(d =>
+        all.join(d, Seq("owner"), "left_anti"))) { (folded, _, target) =>
+      graft.operators.DeltaManifest.writePartitionedAdaptive(
+        folded, target, col("ph"))
     }
-  }
 
   /** Run the gate continuously over a streaming document frame. */
   def startGate(docs: DataFrame, storeDir: String, cleanDir: String,

@@ -101,27 +101,21 @@ object PostingsStream {
     * when no delete batch has committed (readers skip the anti-join
     * entirely on a delete-free store).
     */
-  private def readDelSet(spark: SparkSession, storeDir: String)
+  private def delSet(spark: SparkSession, storeDir: String)
       : Option[DataFrame] =
-    if (!hasBatches(spark, s"$storeDir/del")) None
-    else Some(spark.read.parquet(s"$storeDir/del")
-      .select("doc_id").distinct())
+    CounterLog.tombstones(spark, s"$storeDir/del", "batch_id", Seq("doc_id"))
 
-  /** Drop tombstoned docs from a sub-log read — BEFORE any aggregation,
-    * so deleted postings never shuffle.
+  private def minus(del: Option[DataFrame], df: DataFrame): DataFrame =
+    del.fold(df)(d => df.join(d, Seq("doc_id"), "left_anti"))
+
+  /** A sub-log's committed rows, tombstoned docs dropped BEFORE any
+    * aggregation so deleted postings never shuffle; None before its first
+    * commit.
     */
-  private def minusDeleted(spark: SparkSession, storeDir: String,
-      df: DataFrame): DataFrame =
-    readDelSet(spark, storeDir).fold(df)(del =>
-      df.join(del, Seq("doc_id"), "left_anti"))
-
-  private def hasBatches(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    SwapStore.repair(fs, dir)
-    fs.exists(p) && fs.listStatus(p)
-      .exists(_.getPath.getName.startsWith("batch_id="))
-  }
+  private def readSub(spark: SparkSession, storeDir: String,
+      sub: String): Option[DataFrame] =
+    CounterLog.read(spark, s"$storeDir/$sub", "batch_id")
+      .map(minus(delSet(spark, storeDir), _))
 
   /** The merged postings — `(doc_id, tok, tf)` summed over every
     * committed batch, or None before the first commit. Sum-merge equals
@@ -132,27 +126,20 @@ object PostingsStream {
     * its own length), so split delivery is only sum-exact at ngram = 1.
     */
   def readTf(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    if (!hasBatches(spark, s"$storeDir/tf")) None
-    else Some(minusDeleted(spark, storeDir,
-        spark.read.parquet(s"$storeDir/tf"))
-      .groupBy("doc_id", "tok").agg(sum("tf").cast("long").as("tf")))
+    readSub(spark, storeDir, "tf")
+      .map(_.groupBy("doc_id", "tok").agg(sum("tf").cast("long").as("tf")))
 
   /** The merged length table — `(doc_id, dl)`, zero-dl rows included. */
   def readDl(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    if (!hasBatches(spark, s"$storeDir/dl")) None
-    else Some(minusDeleted(spark, storeDir,
-        spark.read.parquet(s"$storeDir/dl"))
-      .groupBy("doc_id").agg(sum("dl").cast("long").as("dl")))
+    readSub(spark, storeDir, "dl")
+      .map(_.groupBy("doc_id").agg(sum("dl").cast("long").as("dl")))
 
   /** The merged positional postings — the plain UNION of committed
     * batches (see [[applyBatch]]'s positional contract), or None before
     * the first positional commit.
     */
   def readPos(spark: SparkSession, storeDir: String): Option[DataFrame] =
-    if (!hasBatches(spark, s"$storeDir/pos")) None
-    else Some(minusDeleted(spark, storeDir,
-        spark.read.parquet(s"$storeDir/pos"))
-      .select("doc_id", "tok", "pos"))
+    readSub(spark, storeDir, "pos").map(_.select("doc_id", "tok", "pos"))
 
   /** Fold every batch partition of both sub-logs into ONE pre-summed
     * partition keyed by the max folded id — the [[NgramStream.compact]]
@@ -163,20 +150,20 @@ object PostingsStream {
     // tombstones apply PHYSICALLY here: each fold anti-joins the
     // committed delete set, so compaction is also the purge that keeps
     // the log from carrying every tombstone forever at 100 TB
-    val del = readDelSet(spark, storeDir)
-    foldLog(spark, s"$storeDir/tf", Seq("doc_id", "tok"), "tf", del)
-    foldLog(spark, s"$storeDir/dl", Seq("doc_id"), "dl", del)
+    val del = delSet(spark, storeDir)
+    def fold(sub: String)(rows: DataFrame => DataFrame): Unit =
+      CounterLog.fold(spark, s"$storeDir/$sub", "batch_id", Long.MaxValue)(
+        all => rows(minus(del, all)))(CounterLog.overwrite)
+    fold("tf")(_.groupBy("doc_id", "tok").agg(sum("tf").cast("long").as("tf")))
+    fold("dl")(_.groupBy("doc_id").agg(sum("dl").cast("long").as("dl")))
     // positions fold by plain rewrite — row multiplicity is preserved
     // exactly (no aggregation), only the batch-dir fan-in collapses
-    foldLog(spark, s"$storeDir/pos", Nil, "", del)
+    fold("pos")(identity)
     // retire the tombstones LAST: if a crash lands between any fold and
     // this delete, the del set is still present and every reader's
     // anti-join keeps the exclusion in force — purging first would let
     // an unfolded sub-log resurface deleted docs.
-    del.foreach { _ =>
-      val p = new org.apache.hadoop.fs.Path(s"$storeDir/del")
-      p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    }
+    del.foreach(_ => CounterLog.retire(spark, s"$storeDir/del"))
   }
 
   /** The resident driver: a streaming document source (columns doc_id,
@@ -195,23 +182,4 @@ object PostingsStream {
         applyBatch(batch.toDF(), storeDir, batchId, ngram, withPositions)
       }
       .start()
-
-  private def foldLog(spark: SparkSession, dir: String,
-      keys: Seq[String], valueCol: String,
-      excl: Option[DataFrame] = None): Unit = {
-    if (!hasBatches(spark, dir)) return // hasBatches repairs a crashed swap
-    val all0 = spark.read.parquet(dir)
-    if (all0.isEmpty) return
-    val all = excl.fold(all0)(d => all0.join(d, Seq("doc_id"), "left_anti"))
-    val maxId = all0.agg(max(col("batch_id").cast("long"))).head().getLong(0)
-    // empty keys = a non-counter sub-log (positions): fold is a plain
-    // rewrite that preserves row multiplicity exactly
-    val folded =
-      if (keys.isEmpty) all.drop("batch_id")
-      else all.groupBy(keys.map(col): _*)
-        .agg(sum(valueCol).cast("long").as(valueCol))
-    SwapStore.replace(spark, dir) { next =>
-      folded.write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-    }
-  }
 }

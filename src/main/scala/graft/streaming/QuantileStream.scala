@@ -102,7 +102,6 @@ object QuantileStream {
     * not gate against silence.
     */
   def readSketch(spark: SparkSession, storeDir: String): DataFrame = {
-    SwapStore.repair(spark, storeDir)
     require(CounterLog.hasData(spark, storeDir),
       s"quantile log $storeDir holds no batches yet — " +
       "a gate cannot take its threshold from an empty distribution")
@@ -120,25 +119,18 @@ object QuantileStream {
     * id. OFFLINE maintenance — only safe when no stream is writing and
     * no folded batch id can replay (the [[SketchStream.compact]] rule).
     */
-  def compact(spark: SparkSession, storeDir: String): Unit = {
-    SwapStore.repair(spark, storeDir)
-    if (CounterLog.hasData(spark, storeDir)) {
-      val geom = bucketBitsOf(spark, storeDir)
-      val all = spark.read.parquet(storeDir)
-      val groupCols = all.columns.toSeq
-        .filterNot(Set("qb", "cnt", "batch_id").contains)
-      val maxId = all.agg(max(col("batch_id").cast("long"))).head().getLong(0)
-      SwapStore.replace(spark, storeDir) { next =>
-        SketchOps.quantileMerge(
-            all.select((groupCols :+ "qb" :+ "cnt").map(col): _*), groupCols)
-          // fully-cancelled buckets ([[deleteBatch]]) fold away physically
-          .filter(col("cnt") =!= 0L)
-          .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-        geom.foreach(b => CounterLog.writeGeometry(spark, next,
-          Seq("bucketBits" -> b)))
-      }
+  def compact(spark: SparkSession, storeDir: String): Unit =
+    CounterLog.fold(spark, storeDir, "batch_id", Long.MaxValue) { all =>
+      val groupCols = all.columns.toSeq.filterNot(Set("qb", "cnt").contains)
+      SketchOps.quantileMerge(
+          all.select((groupCols :+ "qb" :+ "cnt").map(col): _*), groupCols)
+        // fully-cancelled buckets ([[deleteBatch]]) fold away physically
+        .filter(col("cnt") =!= 0L)
+    } { (folded, next, target) =>
+      CounterLog.overwrite(folded, next, target)
+      bucketBitsOf(spark, storeDir).foreach(b =>
+        CounterLog.writeGeometry(spark, next, Seq("bucketBits" -> b)))
     }
-  }
 
   /** Maintain `storeDir` continuously from a streaming frame of scored
     * rows — readers see plain parquet, the same artifact the batch build

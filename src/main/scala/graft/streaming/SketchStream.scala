@@ -127,20 +127,17 @@ object SketchStream {
     * SketchStreamSpec asserts equality, not approximation. Returns an
     * empty counter table if nothing has been written yet.
     */
-  def readSketch(spark: SparkSession, storeDir: String): DataFrame = {
-    SwapStore.repair(spark, storeDir)
-    if (!CounterLog.hasData(spark, storeDir))
+  def readSketch(spark: SparkSession, storeDir: String): DataFrame =
+    CounterLog.read(spark, storeDir, "batch_id").fold(
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         org.apache.spark.sql.types.StructType.fromDDL(
-          "r INT NOT NULL, b BIGINT, cnt BIGINT"))
-    else
-      SketchOps.cmsMerge(spark.read.parquet(storeDir).select("r", "b", "cnt"))
+          "r INT NOT NULL, b BIGINT, cnt BIGINT")))(all =>
+      SketchOps.cmsMerge(all.select("r", "b", "cnt"))
         // a fully-cancelled bucket ([[deleteBatch]]) sums to 0; a fresh
         // build has NO row there — drop zeros so the merged table is
         // counter-for-counter the rebuild (estimates were already equal
         // either way: probes coalesce absent buckets to 0)
-        .filter(col("cnt") =!= 0L)
-  }
+        .filter(col("cnt") =!= 0L))
 
   /** Fold the whole log into a single batch partition keyed by the max
     * folded id (so a later batch id never collides with it). OFFLINE
@@ -148,36 +145,24 @@ object SketchStream {
     * batch id can replay (see the class scaladoc).
     */
   def compact(spark: SparkSession, storeDir: String,
-      below: Long = Long.MaxValue): Unit = {
-    SwapStore.repair(spark, storeDir)
-    if (CounterLog.hasData(spark, storeDir)) {
-      val geom = geometry(spark, storeDir)
-      // bounded fold (see IngestPipeline.compactAll): ids >= below are
-      // an in-flight batch's partials — discarded by the swap, rewritten
-      // by the caller's replay
-      val all = spark.read.parquet(storeDir)
-        .filter(col("batch_id").cast("long") < below)
-      if (all.isEmpty) return
-      val maxId = all.agg(max(col("batch_id").cast("long"))).head().getLong(0)
-      // SwapStore.replace drops a stale replacement first: the overwrite
-      // below scopes to this compaction's own batch_id subdir, so a stale
-      // full-merge partition would otherwise ride the swap and double its
-      // counters on top of the new merge (advisor r8)
-      SwapStore.replace(spark, storeDir) { next =>
-        SketchOps.cmsMerge(all.select("r", "b", "cnt"))
-          // fully-cancelled buckets ([[deleteBatch]]) fold away here, so
-          // the compacted log is counter-for-counter a survivor-only build
-          .filter(col("cnt") =!= 0L)
-          .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-        // the geometry rides the swap: it lives INSIDE the store dir, so
-        // a replacement without it would orphan the compacted counters
-        // from their shape and the next applyBatch would re-pin its own
-        geom.foreach { case (d, w) =>
-          CounterLog.writeGeometry(spark, next,
-            Seq("depth" -> d, "width" -> w)) }
-      }
+      below: Long = Long.MaxValue): Unit =
+    // SwapStore.replace drops a stale replacement first: the overwrite
+    // scopes to this compaction's own batch_id subdir, so a stale
+    // full-merge partition would otherwise ride the swap and double its
+    // counters on top of the new merge (advisor r8)
+    CounterLog.fold(spark, storeDir, "batch_id", below)(all =>
+      SketchOps.cmsMerge(all.select("r", "b", "cnt"))
+        // fully-cancelled buckets ([[deleteBatch]]) fold away here, so
+        // the compacted log is counter-for-counter a survivor-only build
+        .filter(col("cnt") =!= 0L)) { (folded, next, target) =>
+      CounterLog.overwrite(folded, next, target)
+      // the geometry rides the swap: it lives INSIDE the store dir, so
+      // a replacement without it would orphan the compacted counters
+      // from their shape and the next applyBatch would re-pin its own
+      geometry(spark, storeDir).foreach { case (d, w) =>
+        CounterLog.writeGeometry(spark, next,
+          Seq("depth" -> d, "width" -> w)) }
     }
-  }
 
   /** Maintain `storeDir` continuously from a streaming frame of values.
     * Readers see plain parquet — the same artifact the batch x39 build

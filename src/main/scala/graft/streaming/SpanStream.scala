@@ -134,15 +134,9 @@ object SpanStream {
         } finally { flagged.unpersist(); () }
         // evict log partitions past the horizon — the bounded-state dial
         maxHistoryBatches.foreach { h =>
-          val root = new org.apache.hadoop.fs.Path(indexDir)
-          val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-          if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-            val name = st.getPath.getName
-            if (name.startsWith("batch=") &&
-                scala.util.Try(name.stripPrefix("batch=").toLong)
-                  .toOption.exists(_ < batchId - h))
-              fs.delete(st.getPath, true)
-          }
+          CounterLog.batchIds(spark, indexDir, "batch")
+            .filter(_ < batchId - h)
+            .foreach(id => CounterLog.retire(spark, s"$indexDir/batch=$id"))
         }
       } finally { b.unpersist(); () }
     }

@@ -48,31 +48,19 @@ object UnigramStream {
   /** The merged count table — `(piece, cnt)` summed over every
     * committed batch, or None before the first commit.
     */
-  def readCounts(spark: SparkSession, storeDir: String): Option[DataFrame] = {
-    SwapStore.repair(spark, storeDir)
-    if (!CounterLog.hasData(spark, storeDir)) None
-    else Some(spark.read.parquet(storeDir)
-      .groupBy("piece")
-      .agg(sum("cnt").cast("long").as("cnt")))
-  }
+  def readCounts(spark: SparkSession, storeDir: String): Option[DataFrame] =
+    CounterLog.read(spark, storeDir, "batch_id").map(
+      _.groupBy("piece").agg(sum("cnt").cast("long").as("cnt")))
 
   /** Fold every batch partition into ONE pre-summed partition keyed by
     * the max folded id — the [[NgramStream.compact]] maintenance story
     * (offline rule: no batch writing, no folded id replayable).
     */
   def compact(spark: SparkSession, storeDir: String,
-      below: Long = Long.MaxValue): Unit = {
-    SwapStore.repair(spark, storeDir)
-    if (!CounterLog.hasData(spark, storeDir)) return
-    val all = spark.read.parquet(storeDir)
-      .filter(col("batch_id").cast("long") < below)
-    if (all.isEmpty) return
-    val maxId = all.agg(max(col("batch_id").cast("long"))).head().getLong(0)
-    SwapStore.replace(spark, storeDir) { next =>
-      all.groupBy("piece").agg(sum("cnt").cast("long").as("cnt"))
-        .write.mode("overwrite").parquet(s"$next/batch_id=$maxId")
-    }
-  }
+      below: Long = Long.MaxValue): Unit =
+    CounterLog.fold(spark, storeDir, "batch_id", below)(
+      _.groupBy("piece").agg(sum("cnt").cast("long").as("cnt")))(
+      CounterLog.overwrite)
 
   /** Run count maintenance continuously over a streaming document
     * frame (foreachBatch → [[applyBatch]], the [[NgramStream]] driver

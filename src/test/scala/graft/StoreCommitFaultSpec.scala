@@ -253,6 +253,34 @@ class StoreCommitFaultSpec extends AnyFunSuite with BeforeAndAfterAll {
     checkFaults(stores.head, under = true)
   }
 
+  // the tombstone retire runs after the folds commit; a delete that
+  // returns false with the dir left in place must fail the compaction, and
+  // replaying it must finish the job
+  test("PostingsStream/DeltaManifest.compact: a tombstone retire that " +
+      "returns false throws, and the replay retires") {
+    val retires = Seq(
+      "PostingsStream.compact" -> ((b: String) => Seq(s"$b/p/del")),
+      "DeltaManifest.compact" ->
+        ((b: String) => Seq(s"$b/hashes_del", s"$b/manifest_del")))
+    for ((name, dels) <- retires) {
+      val s = stores.find(_.name == name).get
+      val template = freshDir()
+      s.seed(uri(template))
+      val clean = uri(copyOf(template))
+      s.op(clean)
+      val expected = s.read(clean)
+      for (n <- dels(clean).indices) {
+        val b = uri(copyOf(template))
+        intercept[IllegalArgumentException] {
+          FaultyFileSystem.inject(dels(b), n + 1, ReturnsFalse)(s.op(b))
+        }
+        assert(exists(dels(b)(n)).endsWith("exists=true"), s"$name: ${dels(b)(n)}")
+        s.op(b)
+        assert(s.read(b) == expected, s"$name: the replay differs")
+      }
+    }
+  }
+
   test("ClusterStream: a promote lost to a concurrent reader's repair is " +
       "not a failure; without the race a failed promote still throws") {
     val template = freshDir()
