@@ -13,6 +13,12 @@ import org.apache.spark.sql.types.StructType
   *
   * `root` may be a local path or any Hadoop URI (`file:/…`, `hdfs://…`).
   *
+  * Saves: [[begin]] resolves the versions of every model one save
+  * writes, the caller writes their files (concurrently if it likes), and
+  * [[PendingSave.commit]] appends all their metadata rows in one write.
+  * A save that fails before its commit leaves no row; see [[begin]] for
+  * the orphaned version dir it may leave.
+  *
   * Model cache: a saved version is immutable (a save always writes a new
   * version), so the registry keeps the model it last saved or loaded for
   * each name, keyed by (name, version) — at most one model per name.
@@ -42,33 +48,85 @@ class ModelRegistry(spark: SparkSession, root: String) {
 
   private def metadata(): Option[DataFrame] = read(metaPath, metaSchema)
 
-  /** (next version of `name`, next row sequence) in one metadata query.
-    * Rows are ordered by this logical sequence, not by a clock: a clock's
-    * origin differs between processes, so "newest row wins" would compare
-    * values that mean nothing to each other.
+  /** (next version of each of `names`, next row sequence) in one
+    * metadata query. Rows are ordered by this logical sequence, not by a
+    * clock: a clock's origin differs between processes, so "newest row
+    * wins" would compare values that mean nothing to each other.
     */
-  private def nextVersionAndSeq(name: String): (Int, Long) =
+  private def nextVersionsAndSeq(names: Seq[String]): (Seq[Int], Long) =
     metadata().map { m =>
-      val r = m.agg(
-        coalesce(max(when(col("name") === name, col("version"))), lit(0)),
-        coalesce(max(col("saved_at")), lit(0L))).head()
-      (r.getInt(0) + 1, r.getLong(1) + 1)
-    }.getOrElse((1, 1L))
-
-  private def appendMeta(row: MetaRow): Unit =
-    spark.createDataset(Seq(row))(metaEncoder).write.mode("append").parquet(metaPath)
+      val r = m.agg(coalesce(max(col("saved_at")), lit(0L)), names.map(n =>
+        coalesce(max(when(col("name") === n, col("version"))), lit(0))): _*).head()
+      (names.indices.map(i => r.getInt(i + 1) + 1), r.getLong(0) + 1)
+    }.getOrElse((names.map(_ => 1), 1L))
 
   private def path(name: String, version: Int) = s"$root/$name/v$version"
 
-  /** Save a fitted model with its metrics; returns the version. */
+  /** Start a save of one or more models as ONE registry commit: each
+    * name's next version and the next row sequence are resolved in one
+    * metadata query, and nothing is written yet. The caller then writes
+    * each model's files with [[PendingSave.write]] (from concurrent
+    * lanes if it likes: every name owns its own version dir) and ends
+    * with [[PendingSave.commit]], which appends one metadata row per
+    * name, in `names` order with consecutive sequence numbers, in ONE
+    * write — the rows a serial [[save]] per name would write.
+    *
+    * Partial states: until `commit`, no metadata row exists, so every
+    * reader (`load`, `bestVersion`, the next `begin`) sees the registry
+    * as before. A version dir written by an abandoned save is an orphan
+    * no row names; the next save of that name resolves the same version
+    * and replaces the dir (`overwrite()`).
+    */
+  def begin(names: String*): PendingSave = {
+    require(names.nonEmpty && names.distinct.size == names.size,
+      s"one save needs distinct model names: ${names.mkString(", ")}")
+    val (versions, seq) = nextVersionsAndSeq(names)
+    new PendingSave(names.zip(versions), seq)
+  }
+
+  /** Versions reserved by [[begin]]; see there. */
+  final class PendingSave private[ModelRegistry] (
+      versions: Seq[(String, Int)], firstSeq: Long) {
+    private val written =
+      new java.util.concurrent.ConcurrentHashMap[String, PipelineModel]()
+
+    /** Write `model`'s files to `name`'s reserved version dir. */
+    def write(name: String, model: PipelineModel): Unit = {
+      val v = versions.collectFirst { case (`name`, v) => v }.getOrElse(
+        throw new IllegalArgumentException(s"'$name' is not part of this save"))
+      model.write.overwrite().save(path(name, v))
+      written.put(name, model)
+    }
+
+    /** Append every name's metadata row (its `rmse`/`f1` from `metrics`)
+      * in one write, then serve the saved models from the cache; returns
+      * the versions in `begin` order. Every name must have been written.
+      */
+    def commit(metrics: Map[String, Map[String, Double]],
+        stage: String = "Staging"): Seq[Int] = {
+      val rows = versions.zipWithIndex.map { case ((name, v), i) =>
+        require(written.containsKey(name), s"no model written for '$name'")
+        val m = metrics.getOrElse(name, Map.empty)
+        MetaRow(name, v, stage, m.getOrElse("rmse", Double.NaN),
+          m.getOrElse("f1", Double.NaN), firstSeq + i)
+      }
+      appendMeta(rows)
+      versions.foreach { case (name, v) => cache.put(name, (v, written.get(name))) }
+      versions.map(_._2)
+    }
+  }
+
+  private def appendMeta(rows: Seq[MetaRow]): Unit =
+    spark.createDataset(rows)(metaEncoder).write.mode("append").parquet(metaPath)
+
+  /** Save a fitted model with its metrics; returns the version. The
+    * one-model case of [[begin]].
+    */
   def save(name: String, model: PipelineModel, metrics: Map[String, Double],
       stage: String = "Staging"): Int = {
-    val (v, seq) = nextVersionAndSeq(name)
-    model.write.overwrite().save(path(name, v))
-    appendMeta(MetaRow(name, v, stage, metrics.getOrElse("rmse", Double.NaN),
-      metrics.getOrElse("f1", Double.NaN), seq))
-    cache.put(name, (v, model))
-    v
+    val pending = begin(name)
+    pending.write(name, model)
+    pending.commit(Map(name -> metrics), stage).head
   }
 
   /** Best version by a metric (registry.py:23-28: lower-is-better for rmse,
@@ -86,8 +144,8 @@ class ModelRegistry(spark: SparkSession, root: String) {
     * stage row (the row with the highest sequence per version wins on read).
     */
   def promote(name: String, version: Int, stage: String = "Production"): Unit =
-    appendMeta(MetaRow(name, version, stage, Double.NaN, Double.NaN,
-      nextVersionAndSeq(name)._2))
+    appendMeta(Seq(MetaRow(name, version, stage, Double.NaN, Double.NaN,
+      nextVersionsAndSeq(Nil)._2)))
 
   /** Per-fold artifact logging (training.py:99-142: MLflow logs each CV
     * fold's metrics under the run) — one row per (version, fold, metric) in

@@ -169,28 +169,33 @@ object WeatherModels {
     else Map("mae" -> r.getDouble(0), "rmse" -> r.getDouble(1))
   }
 
-  /** A11/M7: classification metrics (accuracy + weighted F1). */
+  /** A11/M7: classification metrics (accuracy + weighted F1), both read
+    * from one confusion-matrix pass over `scored`.
+    */
   def classificationMetrics(scored: DataFrame): Map[String, Double] = {
-    val acc = new MulticlassClassificationEvaluator()
-      .setLabelCol("label").setPredictionCol("pred_label")
-      .setMetricName("accuracy").evaluate(scored)
-    val f1 = new MulticlassClassificationEvaluator()
-      .setLabelCol("label").setPredictionCol("pred_label")
-      .setMetricName("weightedFMeasure").evaluate(scored)
-    Map("accuracy" -> acc, "f1" -> f1)
+    val m = new MulticlassClassificationEvaluator()
+      .setLabelCol("label").setPredictionCol("pred_label").getMetrics(scored)
+    Map("accuracy" -> m.accuracy, "f1" -> m.weightedFMeasure(1.0))
   }
 
-  /** M1+M2 composed: expanding-window CV for the regressor; returns
-    * per-fold metrics plus the final model fit on all rows
-    * (training.py:48-59). Folds are independent Spark jobs.
+  /** M1+M2: the expanding-window CV folds of the regressor — one fit and
+    * one metrics aggregate per fold (training.py:48-57). Folds are
+    * independent Spark jobs.
+    */
+  def crossValidateFolds(featured: DataFrame, numTrees: Int = 200,
+      nSplits: Int = 5): Seq[Map[String, Double]] = {
+    val feats = featureCols(featured)
+    timeSeriesSplits(featured, nSplits).map { case (train, valid) =>
+      regressionMetrics(regressorPipeline(feats, numTrees).fit(train).transform(valid))
+    }
+  }
+
+  /** M1+M2 composed: per-fold metrics plus the final model fit on all
+    * rows (training.py:48-59).
     */
   def crossValidateRegressor(featured: DataFrame, numTrees: Int = 200,
       nSplits: Int = 5): (PipelineModel, Seq[Map[String, Double]]) = {
-    val feats = featureCols(featured)
-    val folds = timeSeriesSplits(featured, nSplits).map { case (train, valid) =>
-      val m = regressorPipeline(feats, numTrees).fit(train)
-      regressionMetrics(m.transform(valid))
-    }
-    (regressorPipeline(feats, numTrees).fit(featured), folds)
+    val folds = crossValidateFolds(featured, numTrees, nSplits)
+    (regressorPipeline(featureCols(featured), numTrees).fit(featured), folds)
   }
 }

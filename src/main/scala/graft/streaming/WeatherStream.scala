@@ -25,7 +25,8 @@ object WeatherStream {
   /** T1-T5+T7: the micro-batch fan-out. Each micro-batch appends to the raw
     * log, replaces the current snapshot, appends the partitioned batch log,
     * and writes one stats document — the same four sinks as batch ETL
-    * (load.py:22-115), from one cached lineage.
+    * (load.py:22-115), from one cached lineage, through the same
+    * [[WeatherSinks.fanout]] (no CSV export).
     */
   def startFanout(records: DataFrame, sinks: WeatherSinks,
       trigger: Trigger = Trigger.ProcessingTime(0)): StreamingQuery =
@@ -40,13 +41,10 @@ object WeatherStream {
               .withColumn("batch_id", format_string("batch_%06d", lit(batchId)))
               .withColumn("inserted_at", current_timestamp())
               .persist()
-            try {
-              sinks.appendRaw(stamped)
-              sinks.overwriteCurrent(stamped)
-              sinks.appendBatch(stamped)
-              sinks.appendStats(WeatherStats.fullStatsDoc(stamped,
-                format_string("batch_%06d", lit(batchId)), current_timestamp()))
-            } finally stamped.unpersist()
+            try sinks.fanout(stamped, WeatherStats.fullStatsDoc(stamped,
+              format_string("batch_%06d", lit(batchId)), current_timestamp()))
+            finally stamped.unpersist()
+            ()
           }
         } catch { // T7: log-and-continue (scheduler.py:22-33)
           case e: Exception =>

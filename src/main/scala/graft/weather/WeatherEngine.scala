@@ -1,5 +1,6 @@
 package graft.weather
 
+import graft.operators.Par
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -10,8 +11,8 @@ import org.apache.spark.sql.types.StructType
   * query ≙ weather-data/collection; listTables ≙ collections.
   *
   * The ETL path (SURVEY §3.1) is: flatten → CSV export + 3-way parquet
-  * fan-out + stats doc, all from ONE cached lineage — the reference re-reads
-  * and re-materializes at every step.
+  * fan-out + stats doc, all from ONE cached lineage and run side by side —
+  * the reference re-reads and re-materializes at every step.
   */
 class WeatherEngine(spark: SparkSession, tablesRoot: String) {
   val sinks = new WeatherSinks(tablesRoot)
@@ -24,6 +25,13 @@ class WeatherEngine(spark: SparkSession, tablesRoot: String) {
     * one instant stamps every sink: the CSV directory name, the raw,
     * snapshot and batch-log rows, and the stats document — so a batch that
     * crosses a second boundary still carries one batch id.
+    *
+    * The stamped batch is cached, then [[WeatherSinks.fanout]] runs the CSV
+    * export, the raw append, the snapshot overwrite, the batch-log append
+    * and the stats-document collect concurrently from it, and appends the
+    * stats row only after all five have succeeded. If any of them fails,
+    * runEtl rethrows once all have ended: any subset of the four sinks may
+    * be left committed, but never a stats row without them.
     *
     * Returns the batch's stats document as a one-row local relation: it is
     * computed once, appended to the stats table, and reading the returned
@@ -38,16 +46,9 @@ class WeatherEngine(spark: SparkSession, tablesRoot: String) {
     // batch still gets a well-formed (zero-count) stats document
     val batchId = WeatherTransform.withBatchMetadata(one, at).head().getAs[String]("batch_id")
     val stamped = WeatherTransform.withBatchMetadata(records, at).cache()
-    try {
-      sinks.saveCsv(records, batchId)                       // S3
-      sinks.appendRaw(stamped)                              // S4
-      sinks.overwriteCurrent(stamped)                       // S5
-      sinks.appendBatch(stamped)                            // S6
-      val doc = WeatherStats.fullStatsDoc(stamped, lit(batchId), at)
-      val stats = spark.createDataFrame(java.util.Arrays.asList(doc.collect(): _*), doc.schema)
-      sinks.appendStats(stats)                              // S7
-      stats
-    } finally stamped.unpersist()
+    try sinks.fanout(stamped, WeatherStats.fullStatsDoc(stamped, lit(batchId), at),
+      csv = Some((stamped.select(records.columns.map(col): _*), batchId)))
+    finally stamped.unpersist()
   }
 
   /** Run one ETL batch from raw nested JSON documents. */
@@ -79,33 +80,46 @@ class WeatherEngine(spark: SparkSession, tablesRoot: String) {
   // ---- ML endpoints (SURVEY §3.2/§3.3: /train, /predict/temp,
   // /predict/weather, /monitor/eval, /registry/promote) ----
   import graft.ml.WeatherModels
-  import org.apache.spark.ml.PipelineModel
 
   /** /train (main.py:115-121 → training.py:147): scan the raw log,
     * featurize with the fallback ladder, CV + final-fit both models, save
     * to the registry at Staging. Returns per-fold regressor metrics.
+    *
+    * Both models' versions are resolved ([[graft.ml.ModelRegistry.begin]])
+    * while the feature frame's cache is built. Then three lanes run
+    * concurrently over that one cache: the CV fold fits and their metrics;
+    * the final regressor fit, then the write of its model files; the
+    * classifier fit, then its metrics beside the write of its model files.
+    * Once every lane has succeeded, one write appends both registry rows
+    * (regressor, then classifier), and then the fold metrics are logged.
+    * A failed lane makes train rethrow once every lane has ended, with no
+    * registry row written; a model dir it did write is replaced by the
+    * next train, which gets the same version.
     */
   def train(numTrees: Int = 200, nSplits: Int = 5): Seq[Map[String, Double]] = {
     val raw = sinks.scan(spark, WeatherConfig.rawTable)
     val featured = WeatherModels.featuresWithFallback(raw).cache()
     try {
-      // the two chains only read `featured`, so they fit side by side;
-      // the saves stay serial, as concurrent appends to the registry
-      // table would share its `_temporary` directory
-      var reg: (PipelineModel, Seq[Map[String, Double]]) = null
-      var clf: (PipelineModel, Map[String, Double]) = null
-      graft.operators.Par.run(
-        () => reg = WeatherModels.crossValidateRegressor(featured, numTrees, nSplits),
+      val feats = WeatherModels.featureCols(featured)
+      val (regName, clfName) = (WeatherConfig.tempModelName, WeatherConfig.conditionModelName)
+      var pending: registry.PendingSave = null
+      Par.run(
+        () => pending = registry.begin(regName, clfName),
+        () => org.apache.spark.sql.graftbridge.Bridge.buildCache(featured))
+      var folds: Seq[Map[String, Double]] = Nil
+      var clfMetrics: Map[String, Double] = Map.empty
+      Par.run(
+        () => folds = WeatherModels.crossValidateFolds(featured, numTrees, nSplits),
+        () => pending.write(regName, WeatherModels.regressorPipeline(feats, numTrees).fit(featured)),
         () => {
-          val m = WeatherModels.classifierPipeline(
-            WeatherModels.featureCols(featured), numTrees).fit(featured)
-          clf = (m, WeatherModels.classificationMetrics(m.transform(featured)))
+          val m = WeatherModels.classifierPipeline(feats, numTrees).fit(featured)
+          Par.run(
+            () => clfMetrics = WeatherModels.classificationMetrics(m.transform(featured)),
+            () => pending.write(clfName, m))
         })
-      val (regModel, folds) = reg
       val cvRmse = folds.map(_("rmse")).sum / folds.size
-      val v = registry.save(WeatherConfig.tempModelName, regModel, Map("rmse" -> cvRmse))
-      registry.logFolds(WeatherConfig.tempModelName, v, folds) // training.py:99-142
-      registry.save(WeatherConfig.conditionModelName, clf._1, clf._2)
+      val v = pending.commit(Map(regName -> Map("rmse" -> cvRmse), clfName -> clfMetrics)).head
+      registry.logFolds(regName, v, folds) // training.py:99-142
       folds
     } finally featured.unpersist()
   }

@@ -1,5 +1,6 @@
 package graft.weather
 
+import graft.operators.Par
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -62,6 +63,35 @@ class WeatherSinks(root: String) {
   /** S7: stats document append. */
   def appendStats(stats: DataFrame): Unit =
     conform(stats, WeatherConfig.statsTable).write.mode("append").parquet(statsPath)
+
+  /** S3-S7 for one batch, the fan-out shared by
+    * [[WeatherEngine.runEtl]] and the micro-batch stream. The cache of
+    * `stamped` is built first, in one job (else each branch would run its
+    * own cache stage). Then the CSV export of `csv` (rows, batch id) when
+    * given, the raw append, the snapshot overwrite, the batch-log append
+    * and the collect of `statsDoc` run concurrently from that cache; each
+    * branch writes its own directory. Once all of them have succeeded, the
+    * collected stats document is appended, so a stats row means every
+    * sink of its batch committed. Returns that document as a one-row
+    * local relation.
+    *
+    * A failure rethrows after every branch has ended, and no stats row is
+    * written; any subset of the other sinks may have committed.
+    */
+  def fanout(stamped: DataFrame, statsDoc: DataFrame,
+      csv: Option[(DataFrame, String)] = None): DataFrame = {
+    org.apache.spark.sql.graftbridge.Bridge.buildCache(stamped)
+    val export = csv.map { case (rows, batchId) => () => { saveCsv(rows, batchId); () } }
+    var stats: DataFrame = null
+    Par.run(export.toSeq ++ Seq(
+      () => appendRaw(stamped),
+      () => overwriteCurrent(stamped),
+      () => appendBatch(stamped),
+      () => stats = statsDoc.sparkSession.createDataFrame(
+        java.util.Arrays.asList(statsDoc.collect(): _*), statsDoc.schema)): _*)
+    appendStats(stats)
+    stats
+  }
 
   /** S2 companion: malformed documents kept for inspection (the reference
     * logs-and-skips; quarantining preserves the evidence).

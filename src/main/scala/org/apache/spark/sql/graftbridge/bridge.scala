@@ -9,8 +9,9 @@ import org.apache.spark.sql.classic.{Dataset => ClassicDataset, ExpressionUtils,
   * Catalyst Expression is package-private in Spark 4's classic module, and
   * custom native expressions (graft.functions.CosineSim) need both
   * directions; custom logical plans (graft.plans.AsOfJoin) additionally
-  * need plan ↔ DataFrame. This is the entire private-API surface the
-  * library touches.
+  * need plan ↔ DataFrame; building a cache entry ahead of concurrent
+  * readers needs the classic session's cache manager. This is the entire
+  * private-API surface the library touches.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -23,6 +24,19 @@ object Bridge {
   /** The analyzed logical plan behind a DataFrame. */
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[ClassicDataset[Row]].queryExecution.analyzed
+
+  /** Build `df`'s cache entry in one job, if it has one that is not yet
+    * built. This is the job AQE runs for a cache stage; but AQE plans
+    * that stage in every query that reads a cache not built yet, so
+    * queries started side by side on a fresh cache would each run it.
+    */
+  def buildCache(df: DataFrame): Unit = {
+    val ds = df.asInstanceOf[ClassicDataset[Row]]
+    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      .map(_.cachedRepresentation.cacheBuilder)
+      .filterNot(_.isCachedColumnBuffersLoaded)
+      .foreach(b => ds.sparkSession.sparkContext.runJob(b.cachedColumnBuffers, (_: Iterator[_]) => ()))
+  }
 
   /** Node names of a physical plan, traversed STRUCTURALLY — including
     * through AQE wrappers (AdaptiveSparkPlanExec holds its finalized

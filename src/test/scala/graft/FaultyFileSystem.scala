@@ -2,7 +2,8 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.{FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 
 /** The local filesystem under the `faulty://` scheme, with one injectable
@@ -32,10 +33,35 @@ class FaultyFileSystem extends FilterFileSystem(new FaultyFileSystem.Local) {
 object FaultyFileSystem {
   val scheme = "faulty"
 
-  /** The raw local filesystem, answering to the `faulty` scheme. */
+  /** The raw local filesystem, answering to the `faulty` scheme.
+    *
+    * `RawLocalFileSystem`'s statuses load their owner and permission
+    * through a `java.io.File` of their own path, which a `faulty://` URI
+    * cannot make. So every status it hands out reads those from the same
+    * path's `file:` status, on first use, as the raw statuses do.
+    */
   class Local extends RawLocalFileSystem {
     override def getUri: URI = URI.create(s"$scheme:///")
     override def getScheme: String = scheme
+
+    private lazy val files = FileSystem.getLocal(getConf).getRawFileSystem
+
+    private def withFileOwner(s: FileStatus): FileStatus =
+      new LazyOwnerStatus(s, () =>
+        files.getFileStatus(new Path("file", null, s.getPath.toUri.getPath)))
+
+    override def getFileStatus(p: Path): FileStatus = withFileOwner(super.getFileStatus(p))
+    override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(withFileOwner)
+  }
+
+  /** `s` with its permission, owner and group taken from `file()`. */
+  private final class LazyOwnerStatus(s: FileStatus, file: () => FileStatus)
+      extends FileStatus(s.getLen, s.isDirectory, s.getReplication, s.getBlockSize,
+        s.getModificationTime, s.getAccessTime, null, null, null, s.getPath) {
+    private lazy val owned = file()
+    override def getPermission: FsPermission = owned.getPermission
+    override def getOwner: String = owned.getOwner
+    override def getGroup: String = owned.getGroup
   }
 
   sealed trait Fault

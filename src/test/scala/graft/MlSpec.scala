@@ -1,15 +1,20 @@
 package graft
 
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.{ModelRegistry, WeatherModels}
 import graft.sources.SyntheticWeather
 
-class MlSpec extends AnyFunSuite {
+class MlSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = SparkTestSession.spark
 
   // 10 cities × 30 steps = 300 rows — enough for the full feature tier
   lazy val featured = WeatherModels.featuresWithFallback(
     SyntheticWeather.batches(spark, 30)).cache()
+
+  // a suite run later in the same JVM (EntrySpec) asserts that no
+  // persisted RDD is left behind
+  override def afterAll(): Unit = featured.unpersist()
 
   test("M1: expanding time-series splits are ordered and disjoint") {
     val splits = WeatherModels.timeSeriesSplits(featured, nSplits = 5)
@@ -112,6 +117,23 @@ class MlSpec extends AnyFunSuite {
     assert(new ModelRegistry(spark, root).load("temp_rf").isDefined) // from disk
     reg.logFolds("temp_rf", 2, Seq(Map("rmse" -> 2.0)))
     assert(reg.foldHistory("temp_rf", 2).count() == 1)
+  }
+
+  test("a save abandoned before its commit leaves no row; the next save reuses its version") {
+    val root = java.nio.file.Files.createTempDirectory("graft-orphan").toString
+    val reg = new ModelRegistry(spark, root)
+    val feats = WeatherModels.featureCols(featured)
+    val m1 = WeatherModels.regressorPipeline(feats, numTrees = 2).fit(featured)
+    val m2 = WeatherModels.regressorPipeline(feats, numTrees = 3).fit(featured)
+    val abandoned = reg.begin("temp_rf", "cond_rf")
+    abandoned.write("temp_rf", m1)
+    // a commit needs every model of the save written
+    intercept[IllegalArgumentException](abandoned.commit(Map.empty))
+    assert(!new java.io.File(s"$root/_registry").exists())
+    assert(reg.load("temp_rf").isEmpty)
+    // the orphaned v1 dir is replaced by the next save of the name
+    assert(reg.save("temp_rf", m2, Map("rmse" -> 2.0)) == 1)
+    assert(new ModelRegistry(spark, root).load("temp_rf").map(_.uid).contains(m2.uid))
   }
 
   test("a promotion outranks a save row another process wrote with a larger clock") {

@@ -54,7 +54,8 @@ object TickingClock {
 /** The scheduled ETL → train → predict cycle does no work that does not
   * serve its result: one clock evaluation and one stats document per
   * batch, the model just trained served from the registry's cache, and
-  * the two model fits overlapped without changing the models.
+  * the sinks and the model fits overlapped without changing what they
+  * write or the order in which a batch or a train commits.
   */
 class WeatherCycleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -72,6 +73,24 @@ class WeatherCycleSpec extends AnyFunSuite {
     engine.train(numTrees = 5, nSplits = 2)
     (root, engine)
   }
+
+  /** An engine on a fresh root holding `n` ETL batches. */
+  private def etlEngine(root: String, n: Int = 3): WeatherEngine = {
+    val eng = new WeatherEngine(spark, root)
+    val all = SyntheticWeather.batches(spark, n * 10)
+    for (b <- 0 until n)
+      eng.runEtl(batch(all, b), lit(s"2025-09-0${b + 1} 00:00:00").cast("timestamp"))
+    eng
+  }
+
+  private def registryRows(root: String): Seq[(String, Int, String, Long)] =
+    spark.read.schema(ModelRegistry.metaSchema).parquet(s"$root/models/_registry")
+      .orderBy("saved_at").collect().toSeq
+      .map(r => (r.getAs[String]("name"), r.getAs[Int]("version"),
+        r.getAs[String]("stage"), r.getAs[Long]("saved_at")))
+
+  private def causes(e: Throwable): Seq[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.toString).toSeq
 
   private def isModelRead(site: String) =
     site.linesIterator.exists(l => l.contains("org.apache.spark.ml.") && l.contains("Reader"))
@@ -143,5 +162,69 @@ class WeatherCycleSpec extends AnyFunSuite {
       assert(preds(reg, "pred_temperature") == preds(serialReg, "pred_temperature"))
       assert(preds(clf, "pred_label") == preds(serialClf, "pred_label"))
     } finally featured.unpersist()
+  }
+
+  test("train commits the registry rows a serial save, logFolds, save sequence writes") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-train-rows").toString
+    val serial = java.nio.file.Files.createTempDirectory("graft-serial-rows").toString
+    val eng = etlEngine(tmp)
+    val reg = new ModelRegistry(spark, s"$serial/models")
+    def serialTrain(): Unit = {
+      val (name, cond) = (WeatherConfig.tempModelName, WeatherConfig.conditionModelName)
+      val v = reg.save(name, eng.registry.load(name, "Staging").get, Map("rmse" -> 1.0))
+      reg.logFolds(name, v, Seq(Map("rmse" -> 1.0)))
+      reg.save(cond, eng.registry.load(cond, "Staging").get, Map("f1" -> 0.5))
+    }
+    eng.train(numTrees = 5, nSplits = 2)
+    serialTrain()
+    assert(eng.promoteBest().contains(1))
+    reg.promote(WeatherConfig.tempModelName, 1)
+    eng.train(numTrees = 5, nSplits = 2)
+    serialTrain()
+    val expected = Seq(
+      (WeatherConfig.tempModelName, 1, "Staging", 1L),
+      (WeatherConfig.conditionModelName, 1, "Staging", 2L),
+      (WeatherConfig.tempModelName, 1, "Production", 3L),
+      (WeatherConfig.tempModelName, 2, "Staging", 4L),
+      (WeatherConfig.conditionModelName, 2, "Staging", 5L))
+    assert(registryRows(tmp) == expected)
+    assert(registryRows(serial) == expected)
+    assert(eng.registry.foldHistory(WeatherConfig.tempModelName, 2).count() == 2 * 2)
+  }
+
+  test("a train whose fits throw adds no registry row; the next gets its version") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-train-fail").toString
+    val eng = etlEngine(tmp)
+    eng.train(numTrees = 5, nSplits = 2)
+    val before = registryRows(tmp)
+    intercept[IllegalArgumentException](eng.train(numTrees = 0, nSplits = 2))
+    assert(registryRows(tmp) == before)
+    eng.train(numTrees = 5, nSplits = 2)
+    assert(registryRows(tmp).drop(before.size) == Seq(
+      (WeatherConfig.tempModelName, 2, "Staging", 3L),
+      (WeatherConfig.conditionModelName, 2, "Staging", 4L)))
+  }
+
+  test("runEtl whose raw-table commit throws rethrows and appends no stats row") {
+    FaultyFileSystem.register(spark)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-etl-fault").toString
+    val eng = new WeatherEngine(spark, s"${FaultyFileSystem.scheme}://$tmp")
+    val all = SyntheticWeather.batches(spark, 20)
+    val e = intercept[Exception](FaultyFileSystem.injectUnder(eng.sinks.rawPath, 1,
+      FaultyFileSystem.Throws)(eng.runEtl(batch(all, 0), lit("2025-09-01 00:00:00").cast("timestamp"))))
+    assert(causes(e).exists(_.contains("injected fault")), causes(e).mkString("\n"))
+    assert(!new java.io.File(s"$tmp/${WeatherConfig.statsTable}").exists())
+    // the next batch commits normally: one stats row, its own
+    eng.runEtl(batch(all, 1), lit("2025-09-02 00:00:00").cast("timestamp"))
+    assert(eng.query(WeatherConfig.statsTable).select("batch_id").collect()
+      .map(_.getString(0)).toSeq == Seq("20250902_000000"))
+  }
+
+  test("a steady runEtl runs fewer jobs than the 14 a serial fan-out with a distinct count ran") {
+    val eng = etlEngine(java.nio.file.Files.createTempDirectory("graft-etl-jobs").toString, 1)
+    val all = SyntheticWeather.batches(spark, 20)
+    val (_, jobs) = JobCounter(spark)(
+      eng.runEtl(batch(all, 1), lit("2025-09-02 00:00:00").cast("timestamp")))
+    assert(jobs.size < 14, s"${jobs.size} jobs:\n${jobs.mkString("\n---\n")}")
   }
 }

@@ -45,6 +45,18 @@ object WeatherProps extends Properties("weather") {
         mn <= av + 1e-9 && av <= mx + 1e-9
     }
 
+  property("stats doc: cities_count is the number of distinct non-null cities") =
+    forAll(Gen.listOf(for {
+      c <- Gen.option(cityGen)
+      r <- recGen
+    } yield (c.orNull, r._2, r._3))) { recs =>
+      val rows = recs.take(60).zipWithIndex.map { case ((c, t, w), i) => (c, t, w, 1000L + i * 7L) }
+      val stats = WeatherStats.statsDoc(toDf(rows), lit("b"), lit(null).cast("timestamp")).head()
+      val distinct = rows.map(_._1).filter(_ != null).distinct
+      stats.getAs[Long]("cities_count") == distinct.size &&
+        stats.getSeq[String](stats.fieldIndex("cities")) == distinct.sorted
+    }
+
   property("latest-per-key snapshot: exactly one row per city, at its max ts") =
     forAll(batchGen) { rows =>
       val w = Window.partitionBy("city").orderBy(col("timestamp").desc)

@@ -49,6 +49,28 @@ class WeatherSpec extends AnyFunSuite {
     assert(c1.contains("Bengaluru") && c1.contains("Kyiv")) // API-canonical names
   }
 
+  test("the stats table's declared schema is the one every stored batch has") {
+    // written before cities_count was derived from the cities array
+    val pinned = """{"type":"struct","fields":[""" +
+      """{"name":"total_records","type":"long","nullable":false,"metadata":{}},""" +
+      """{"name":"cities_count","type":"long","nullable":false,"metadata":{}},""" +
+      """{"name":"avg_temperature","type":"double","nullable":true,"metadata":{}},""" +
+      """{"name":"max_temperature","type":"double","nullable":true,"metadata":{}},""" +
+      """{"name":"min_temperature","type":"double","nullable":true,"metadata":{}},""" +
+      """{"name":"avg_humidity","type":"double","nullable":true,"metadata":{}},""" +
+      """{"name":"cities","type":{"type":"array","elementType":"string","containsNull":false},""" +
+      """"nullable":false,"metadata":{}},""" +
+      """{"name":"temperature_distribution","type":{"type":"struct","fields":[""" +
+      Seq("very_cold", "cold", "cool", "moderate", "warm", "hot").map(b =>
+        s"""{"name":"$b","type":"long","nullable":false,"metadata":{}}""").mkString(",") +
+      """]},"nullable":false,"metadata":{}},""" +
+      """{"name":"batch_id","type":"string","nullable":false,"metadata":{}},""" +
+      """{"name":"timestamp","type":"timestamp","nullable":false,"metadata":{}},""" +
+      """{"name":"weather_conditions","type":{"type":"map","keyType":"string",""" +
+      """"valueType":"long","valueContainsNull":false},"nullable":false,"metadata":{}}]}"""
+    assert(WeatherSinks.schemaOf(spark, WeatherConfig.statsTable).json == pinned)
+  }
+
   test("flatten maps the nested JSON shape exactly (transform.py:8-19)") {
     val raw = Seq(
       """{"name":"Mumbai","dt":1756909914,"sys":{"country":"IN"},
